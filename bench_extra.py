@@ -95,14 +95,14 @@ def ab_cluster(spark, sf):
     n = pairs.count()
     print(f"  sig+pairs (cold, checkpointed): {time.time() - t0:.3f}s pairs={n}")
     _t("dedup_clusters (auto tier)", lambda: D.dedup_clusters(pairs, max_iters=25).count())
-    # force the distributed tiers on the same graph: the driver-local
-    # collect tier vs the loop it replaces below _COLLECT_EDGE_CAP
-    saved = D._COLLECT_EDGE_CAP
+    # force the distributed loop on the same graph: the driver-local
+    # collect tier vs the loop it replaces below _COLLECT_EDGE_BYTES
+    saved = D._COLLECT_EDGE_BYTES
     try:
-        D._COLLECT_EDGE_CAP = 0
+        D._COLLECT_EDGE_BYTES = 0
         _t("dedup_clusters loop (forced)", lambda: D.dedup_clusters(pairs, max_iters=25).count())
     finally:
-        D._COLLECT_EDGE_CAP = saved
+        D._COLLECT_EDGE_BYTES = saved
 
 
 def ab_union(spark, sf):

@@ -150,7 +150,7 @@ def run_resumable(
                 .write.mode("overwrite")
                 .parquet(f"{out_dir.rstrip('/')}/sinks/{sink}/unit={uid}")
             )
-        alerts.unpersist()
+        pl.unpersist_alerts(alerts)
         manifest["units"][uid] = {
             "status": "done",
             "files": files,

@@ -9,16 +9,15 @@ Physical shape (chosen over groupBy().applyInPandas after profiling —
 per-conversation pandas groups average ~10 rows, and per-group Arrow/
 pandas overhead made replay 10× slower than the match stage):
 
-    stateful alerts → repartition(conv_id) → sortWithinPartitions
+    alerts → repartition(conv_id) → sortWithinPartitions
       (conv_id, turn_idx, sid) → mapInPandas over whole partitions
 
 Each task streams its partition once through a single numpy replay loop;
 conversation boundaries are detected by conv_id change, so state never
 crosses them. Hash-partitioning guarantees a conversation lands in exactly
 one partition. Partition memory is bounded by
-(stateful-alert rows / shuffle partitions) — tune shuffle partitions at
-scale; only rows matching *stateful* sids (typically ≪1% at 100 TB) take
-this shuffle, stateless alerts bypass it entirely.
+(alert rows / shuffle partitions) — tune shuffle partitions at scale;
+stateless alerts ride the same shuffle and pass through the replay.
 
 Semantics (defined in rules/model.py, re-implemented independently in the
 pandas oracle):
@@ -242,20 +241,21 @@ def _replay_tracked_carry(
 _UNSET = object()
 
 
-def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> DataFrame:
+def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") -> DataFrame:
     """Apply stateful correlation.
 
-    scope="all" (default): ONE shuffle of all alerts by conv_id; stateless
-    rows pass through the replay untouched. Single-pass — the upstream
-    match stage is computed exactly once with no persist needed, and the
+    ONE shuffle of all alerts by conv_id; stateless rows pass through the
+    replay untouched. Strictly one consumer of the match subtree: every
+    cost here (shuffle write/read, sort, Arrow, replay) is per-task
+    parallel, so nothing recomputes and nothing needs a persist, and the
     resulting partitioning (hash(conv_id), sorted by turn) is exactly what
-    the sink writers want. Preferred when alerts ≲ input (always, for a
-    sane rule set).
-
-    scope="split": shuffle only stateful-sid rows; stateless alerts bypass
-    via filter + union. Halves shuffle volume when stateful sids are rare,
-    BUT both branches recompute the parent unless the caller persists it —
-    use with a persisted upstream for very high alert-volume workloads.
+    the sink writers want. A branching plan cannot beat it: exchange reuse
+    can NEVER deduplicate a dual-consumer plan whose subtree contains a
+    Python stage (MapInPandas does not canonicalize equal across branches
+    — verified empirically: a pushdown-barriered identical exchange still
+    executed twice), and a persist materialization contends on the block
+    manager/disk instead of scaling with cores. ``scope`` names that plan
+    and accepts only "linear".
 
     Non-conv tracked rules (Sagan `by_username` → role, `by_dst` → tool)
     take a SEPARATE branch per track column: their rows repartition by the
@@ -269,6 +269,8 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
     make the plan dual-consumer, so callers should persist the upstream
     (pipeline.build_alerts does this automatically).
     """
+    if scope != "linear":
+        raise ValueError(f"unknown correlate scope {scope!r}; only 'linear' exists")
     tracked: dict[str, dict[int, Rule]] = {}
     conv_rules: dict[int, Rule] = {}
     for r in ruleset.rules:
@@ -281,57 +283,6 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
     if not tracked and not conv_rules:
         return alerts
     schema = alerts.schema
-
-    if tracked:
-        # same bounded-chunk streaming as the conv replay below — and
-        # simpler: track replay is row-at-a-time, so every Arrow batch is
-        # a valid chunk boundary and no rebuffering is needed at all
-        track_chunk = int(os.environ.get("SAGAN_REPLAY_CHUNK_ROWS", str(1 << 21)))
-
-        def _make_replay(rules: dict[int, Rule], col: str):
-            def replay_tracked(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-                carry = _TrackCarry()
-                buf: list[pd.DataFrame] = []
-                nbuf = 0
-                for b in batches:
-                    if not len(b):
-                        continue
-                    buf.append(b)
-                    nbuf += len(b)
-                    if nbuf < track_chunk:
-                        continue
-                    pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-                    out = _replay_tracked_carry(rules, pdf, col, carry)
-                    if len(out):
-                        yield out
-                    buf, nbuf = [], 0
-                if nbuf:
-                    pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-                    out = _replay_tracked_carry(rules, pdf, col, carry)
-                    if len(out):
-                        yield out
-
-            return replay_tracked
-
-        branches = []
-        handled: list[int] = []
-        for col, rules in sorted(tracked.items()):
-            sids = list(rules)
-            handled += sids
-            branches.append(
-                alerts.filter(alerts.sid.isin(sids))
-                .repartition(col)
-                .sortWithinPartitions(col, "ts", "conv_id", "turn_idx", "sid")
-                .mapInPandas(_make_replay(rules, col), schema=schema)
-            )
-        rest = alerts.filter(~alerts.sid.isin(handled))
-        out = run_correlate(rest, RuleSet(tuple(conv_rules.values())), scope)
-        for b in branches:
-            out = out.unionByName(b)
-        return out
-
-    rules_by_sid = conv_rules
-    stateful_sids = list(conv_rules)
     # Spill guard (SURVEY §4.2): a partition is normally replayed as one
     # frame (bounded by rows-per-shuffle-partition), but a pathological
     # hot conversation can make one partition's alert slice arbitrarily
@@ -342,6 +293,34 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
     # across chunk boundaries — memory bounded by ~chunk_rows + one
     # (conv, turn) run, identical output (tests force a tiny chunk size).
     chunk_rows = int(os.environ.get("SAGAN_REPLAY_CHUNK_ROWS", str(1 << 21)))
+
+    def _make_replay(rules: dict[int, Rule], col: str):
+        # same bounded-chunk streaming as the conv replay below — and
+        # simpler: track replay is row-at-a-time, so every Arrow batch is
+        # a valid chunk boundary and no rebuffering is needed at all
+        def replay_tracked(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            carry = _TrackCarry()
+            buf: list[pd.DataFrame] = []
+            nbuf = 0
+            for b in batches:
+                if not len(b):
+                    continue
+                buf.append(b)
+                nbuf += len(b)
+                if nbuf < chunk_rows:
+                    continue
+                pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
+                out = _replay_tracked_carry(rules, pdf, col, carry)
+                if len(out):
+                    yield out
+                buf, nbuf = [], 0
+            if nbuf:
+                pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
+                out = _replay_tracked_carry(rules, pdf, col, carry)
+                if len(out):
+                    yield out
+
+        return replay_tracked
 
     def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         carry = _ReplayCarry()
@@ -364,57 +343,38 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "all") -> Da
                 buf = [pdf]  # one giant run (sids × one turn) — keep
                 continue  # buffering the already-merged frame, no re-concat
             split = int(bnd[-1])
-            out = _replay_sorted_carry(rules_by_sid, pdf.iloc[:split], carry)
+            out = _replay_sorted_carry(conv_rules, pdf.iloc[:split], carry)
             if len(out):
                 yield out
             buf = [pdf.iloc[split:]]
             nbuf = len(pdf) - split
         if nbuf:
             pdf = buf[0] if len(buf) == 1 else pd.concat(buf, ignore_index=True)
-            out = _replay_sorted_carry(rules_by_sid, pdf, carry)
+            out = _replay_sorted_carry(conv_rules, pdf, carry)
             if len(out):
                 yield out
 
-    if scope == "linear":
-        # Strictly ONE consumer of the match subtree: every alert row takes
-        # the conv_id shuffle and flows through the replay (stateless sids
-        # pass through inside _replay_sorted). Costs an Arrow round-trip
-        # for pass-through alerts, but every cost here (shuffle write/read,
-        # sort, Arrow, replay) is per-task parallel — no persist, no
-        # double-compute. This is the default: exchange reuse can NEVER
-        # deduplicate a dual-consumer plan whose subtree contains a Python
-        # stage (MapInPandas does not canonicalize equal across branches —
-        # verified empirically: a pushdown-barriered identical exchange
-        # still executed twice), and a persist materialization contends on
-        # the block manager/disk instead of scaling with cores.
-        return (
-            alerts.repartition("conv_id")
+    branches = []
+    handled: list[int] = []
+    for col, rules in sorted(tracked.items()):
+        sids = list(rules)
+        handled += sids
+        branches.append(
+            alerts.filter(alerts.sid.isin(sids))
+            .repartition(col)
+            .sortWithinPartitions(col, "ts", "conv_id", "turn_idx", "sid")
+            .mapInPandas(_make_replay(rules, col), schema=schema)
+        )
+    out = alerts.filter(~alerts.sid.isin(handled)) if handled else alerts
+    if conv_rules:
+        out = (
+            out.repartition("conv_id")
             .sortWithinPartitions("conv_id", "turn_idx", "sid")
             .mapInPandas(replay, schema=schema)
         )
-
-    if scope == "all":
-        # dual-consumer shuffle: stateful branch replays in Python, the
-        # stateless branch stays JVM-side. The match subtree computes once
-        # per branch (see "linear" note) — combine with a persisted
-        # upstream (pipeline.build_alerts(persist_intermediate=True)).
-        shuffled = alerts.repartition("conv_id")
-        replayed = (
-            shuffled.filter(shuffled.sid.isin(stateful_sids))
-            .sortWithinPartitions("conv_id", "turn_idx", "sid")
-            .mapInPandas(replay, schema=schema)
-        )
-        passthru = shuffled.filter(~shuffled.sid.isin(stateful_sids))
-        return passthru.unionByName(replayed)
-
-    stateful = alerts.filter(alerts.sid.isin(stateful_sids))
-    stateless = alerts.filter(~alerts.sid.isin(stateful_sids))
-    replayed = (
-        stateful.repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "sid")
-        .mapInPandas(replay, schema=schema)
-    )
-    return stateless.unionByName(replayed)
+    for b in branches:
+        out = out.unionByName(b)
+    return out
 
 
 def sliding_after_counts(df: DataFrame, track_cols: Iterable[str], ts_col: str, seconds: int):

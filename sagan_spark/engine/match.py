@@ -669,6 +669,11 @@ def make_fused_matcher(
     return matcher
 
 
+# the concrete plans run_match builds; "auto" is resolved before it
+# (pipeline.resolve_match_mode)
+MATCH_MODES = ("fused", "hybrid")
+
+
 def run_match(
     df: DataFrame, ruleset: RuleSet, fold_dims: bool = True, mode: str = "fused"
 ) -> DataFrame:
@@ -688,10 +693,10 @@ def run_match(
     when alert rate is high (dense rule sets) AND the scan is cheap
     (cached/local) — measured at sf0.1 in BENCH/BASELINE.md.
 
-    mode="udf": single scan, every rule evaluated in the vectorized UDF —
-    the fallback when rules are mostly non-native.
+    A rule set with few or no native rules needs no mode of its own: fused
+    with an empty ``_nsids`` array is the single-scan all-Python plan.
     """
-    if mode not in ("fused", "hybrid", "udf"):
+    if mode not in MATCH_MODES:
         # "auto" must be resolved by the caller (pipeline.resolve_match_mode)
         # BEFORE reaching here — hybrid is the fallthrough branch below, and
         # an unknown mode silently becoming a two-scan plan is the kind of
@@ -699,9 +704,6 @@ def run_match(
         raise ValueError(f"unknown match mode {mode!r}")
     dims = _get_dims(fold_dims)
     prepared = _prepare(df)
-    if mode == "udf":
-        return prepared.mapInPandas(make_matcher(ruleset, dims), schema=MATCH_SCHEMA)
-
     folded = {r.sid: _fold_enrich(r, dims) for r in ruleset.rules}
     native_rules = [r for r in ruleset.rules if native_compilable(r)]
     udf_rules = [r for r in ruleset.rules if not native_compilable(r)]

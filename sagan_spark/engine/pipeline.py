@@ -89,8 +89,8 @@ def resolve_match_mode(
     scan-dominated default measured in BENCH/BASELINE.md.
 
     An EXPLICIT mode is honored as given; if it leaves the elision on the
-    table (fused/udf on a bucketed all-native workload) a log line says
-    so rather than second-guessing the caller.
+    table (fused on a bucketed all-native workload) a log line says so
+    rather than second-guessing the caller.
     """
     all_native = all(match.native_compilable(r) for r in ruleset.rules)
     if match_mode != "auto":
@@ -120,13 +120,16 @@ class PipelineResult:
     metrics: dict = field(default_factory=dict)  # A3 stats ([PUB src/stats-json.c])
 
     def unpersist(self) -> None:
-        self.alerts.unpersist()
-        # release the enriched intermediate build_alerts persisted for
-        # role-tracked / split-scope rule sets (long-lived sessions would
-        # otherwise accumulate one cached DataFrame per run)
-        inner = getattr(self.alerts, "_sagan_persisted", None)
-        if inner is not None:
-            inner.unpersist()
+        unpersist_alerts(self.alerts)
+
+
+def unpersist_alerts(alerts: DataFrame) -> None:
+    """Unpersist ``alerts`` and every intermediate build_alerts cached for
+    it (the enriched frame of role-/tool-tracked rule sets) — long-lived
+    sessions would otherwise accumulate one cached DataFrame per run."""
+    alerts.unpersist()
+    for inner in getattr(alerts, "_sagan_persisted", ()):
+        inner.unpersist()
 
 
 def build_alerts(
@@ -134,23 +137,20 @@ def build_alerts(
     input_df: DataFrame,
     ruleset: RuleSet = CANONICAL,
     fold_dims: bool = True,
-    correlate_scope: str = "linear",
-    persist_intermediate: bool = False,
     match_mode: str = "auto",
 ) -> DataFrame:
     """The alert DataFrame (lazy).
 
-    Plan: scan → hybrid match (native Column rules + fast-pattern-pruned
-    UDF rules) → broadcast enrich joins → ONE conv_id Exchange → sorted
-    partition replay (stateless alerts pass through inside it) →
-    literal-map rule meta. Strictly linear: the scan + match subtree has
-    exactly one consumer, so nothing recomputes and nothing needs a
-    persist; every stage cost is per-task parallel (scales with cores/
-    executors). See correlate.run_correlate for why the branching
-    alternatives don't scale. For workloads where stateful sids are very
-    rare and alert rows very wide, ``correlate_scope="split"`` +
-    ``persist_intermediate=True`` trades a cache materialization for a
-    smaller shuffle.
+    Plan: scan → match (resolve_match_mode: fused or hybrid) → broadcast
+    enrich joins → ONE conv_id Exchange → sorted partition replay
+    (stateless alerts pass through inside it) → literal-map rule meta.
+    Strictly linear: the scan + match subtree has exactly one consumer, so
+    nothing recomputes and nothing needs a persist; every stage cost is
+    per-task parallel (scales with cores/executors). See
+    correlate.run_correlate for why branching alternatives don't scale.
+    The one exception: role-/tool-tracked stateful rules add a track-keyed
+    replay branch, so the enriched frame is persisted and handed to the
+    caller for release (unpersist_alerts).
     """
     from ..packaging import ensure_shipped
 
@@ -177,14 +177,13 @@ def build_alerts(
     has_track_branch = any(
         r.stateful and r.track in ("role", "tool") for r in ruleset.rules
     )
-    persisted = None
-    if (persist_intermediate or has_track_branch) and any(r.stateful for r in ruleset.rules):
-        enriched = persisted = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    correlated = correlate.run_correlate(enriched, ruleset, scope=correlate_scope)
+    if has_track_branch:
+        enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
+    correlated = correlate.run_correlate(enriched, ruleset)
     out = route.attach_rule_meta(correlated, ruleset)
-    if persisted is not None:
-        # hand the cache handle to callers (PipelineResult.unpersist)
-        out._sagan_persisted = persisted
+    if has_track_branch:
+        # hand the cache handle to callers (unpersist_alerts)
+        out._sagan_persisted = (enriched,)
     return out
 
 
@@ -292,7 +291,14 @@ def run_dynamic(
             for k, v in res2.sink_counts.items():
                 res.sink_counts[k] = res.sink_counts.get(k, 0) + v
             res.sid_counts.update(res2.sid_counts)
-            res.alerts = res.alerts.unionByName(res2.alerts)
+            union = res.alerts.unionByName(res2.alerts)
+            # keep both passes' cache handles reachable from the result
+            union._sagan_persisted = tuple(
+                inner
+                for a in (res.alerts, res2.alerts)
+                for inner in getattr(a, "_sagan_persisted", ())
+            )
+            res.alerts = union
     if out_dir is not None:
         alerts = res.alerts.persist(StorageLevel.MEMORY_AND_DISK)
         res.alerts = alerts

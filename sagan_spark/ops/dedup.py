@@ -274,23 +274,19 @@ def _est_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-# Edge-count ceiling under which dedup_clusters broadcasts the label table
-# per round instead of shuffle-hash-joining it (|labels| ≤ |edges|; ~1M
-# label rows build to tens of MB, safe for the 2g local driver). Module
-# level so tests can force the at-scale shuffle path on small fixtures.
-_BROADCAST_EDGE_CAP = 1_000_000
-
-# Symmetrized-edge ceiling under which the component labels are computed
-# on the DRIVER from the collected edge list (1M two-column rows ≈ 16 MB
-# — the same order a broadcast dim table collects, and the same ceiling
-# the broadcast-label tier uses) instead of running the iterative loop at
-# all: each distributed round costs several scheduler round-trips + a
-# localCheckpoint, a fixed ~0.3s/round on an otherwise-idle local[32]
-# box, which dominates end-to-end time on the small pair graphs a sane
-# dedup corpus produces. The broadcast-label tier below stays live as the
-# fallback when the collect refuses (NULL endpoints / probe failure).
-# Module level so tests can force the loop paths on small fixtures.
-_COLLECT_EDGE_CAP = 1_000_000
+# Cached-size ceiling (bytes, the optimizer's estimate of the materialized
+# symmetrized edge cache) under which the component labels are computed
+# on the DRIVER from the collected edge list instead of running the
+# iterative loop at all: each distributed round costs several scheduler
+# round-trips + a localCheckpoint, a fixed ~0.3s/round on an otherwise-
+# idle local[32] box, which dominates end-to-end time on the small pair
+# graphs a sane dedup corpus produces. Bytes, not rows: string ids make
+# the collect many times larger per edge than int64 ids, and a driver OOM
+# is not recoverable by any fallback. 16 MiB is ~1M int64 edges (200k
+# edges measure 3.2 MB) but only ~400k edges of 16-character string ids
+# (8.0 MB per 200k) — broadcast-dim-table territory for the 2g driver.
+# Module level so tests can force the loop on small fixtures.
+_COLLECT_EDGE_BYTES = 16 << 20
 
 
 def _clusters_local(edges: DataFrame):
@@ -300,14 +296,11 @@ def _clusters_local(edges: DataFrame):
     jumping over monotone node-id labels → identical fixed point: min
     member id per component), vectorized in numpy over np.unique codes —
     sorted uniques make min-over-codes ≡ min-over-ids for int AND string
-    ids. Returns (nodes, labels) arrays in the edge column's value space,
-    or None when any endpoint is NULL (out of the dedup contract — the
-    caller falls back to the always-correct loop)."""
+    ids. Returns (nodes, labels) arrays in the edge column's value space;
+    the caller has already dropped pairs with a NULL endpoint."""
     import numpy as np
 
     tbl = edges.toArrow()
-    if tbl.column("src").null_count or tbl.column("dst").null_count:
-        return None
     src = np.asarray(tbl.column("src").to_pandas())
     dst = np.asarray(tbl.column("dst").to_pandas())
     uniq, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
@@ -352,18 +345,18 @@ def dedup_clusters(
     join key, so the per-round neighbor join never re-exchanges the
     (large) edge side; neighbor-min is a union + groupBy whose map-side
     partial aggregation ships ~|nodes| rows per round, not |edges|; the
-    pointer-jump probe is the round's only other exchange. On a SMALL
-    graph (edge count from the cache materialization under ~10⁶) the
-    label table broadcasts instead (guide §3.1) — both per-round joins
-    then run exchange-free, which at bench scale removes ~2 AQE stage
-    round-trips per round; the shuffle plan above is the at-scale shape.
-    TINY graphs (≤ ``_COLLECT_EDGE_CAP`` symmetrized edges, a few MB —
-    broadcast-dim-table territory) skip the distributed loop entirely:
+    pointer-jump probe is the round's only other exchange. SMALL graphs
+    (materialized edge cache estimated ≤ ``_COLLECT_EDGE_BYTES``, 16 MiB
+    — broadcast-dim-table territory) skip the distributed loop entirely:
     the cached edge list collects to the driver and the same
     neighbor-min + pointer-jump recurrence runs vectorized in numpy
     (_clusters_local) — rounds-many scheduler round-trips at a fixed
-    ~0.3s each become one collect job. NULL endpoints (out of contract)
-    or any probe failure fall back to the loop.
+    ~0.3s each become one collect job. An unavailable size estimate or
+    any failure of the local solve falls back to the loop.
+
+    Pairs with a NULL endpoint are dropped before anything else: a NULL
+    is not a document, so it neither joins a cluster nor labels one (a
+    pair (NULL, x) leaves x unclustered unless another pair links it).
     Lineage is truncated EVERY round (localCheckpoint of the neighbor-min
     aggregate — the round's heavy work executes exactly once; the cheap
     jump join re-runs from the materialized RDD) — labels appear twice
@@ -407,7 +400,9 @@ def dedup_clusters(
         return int(out["v"] or 0)
 
     spark = pairs.sparkSession
-    fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+    fwd = pairs.select(F.col(a).alias("src"), F.col(b).alias("dst")).where(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
     # ONE persisted copy of the edge list, pre-partitioned on its join key:
     # every round's neighbor join reuses this partitioning, so the (large)
     # edge side never crosses an exchange again — only the (small) label
@@ -423,22 +418,23 @@ def dedup_clusters(
         return edges.select(
             F.col("dst").alias("doc_id"), F.col("dst").alias("cluster")
         )
-    if n_edges <= _COLLECT_EDGE_CAP:
+    # read only AFTER the count: an estimate taken before the cache is
+    # materialized sticks to the cached plan as a ~2^64 placeholder
+    est = _est_size_bytes(edges)
+    if est is not None and est <= _COLLECT_EDGE_BYTES:
         # Small graph: solve on the driver from the (already materialized)
         # edge cache — a capped collect the size of a broadcast dim table
         # replaces rounds-many distributed jobs whose per-round fixed cost
         # dominates at this scale. Same fixed point as the loop (see
-        # _clusters_local); the distributed paths below stay the at-scale
-        # shape and the fallback when the collect sees NULL endpoints (or
-        # the guarded probe fails in any way — loop is always correct).
+        # _clusters_local); the loop below stays the at-scale shape and
+        # the fallback if the local solve fails in any way.
         try:
-            local = _clusters_local(edges)
+            nodes, labels = _clusters_local(edges)
         except Exception:
-            local = None
-        if local is not None:
+            pass
+        else:
             import pandas as pd
 
-            nodes, labels = local
             node_t = edges.schema["dst"].dataType
             out = spark.createDataFrame(
                 pd.DataFrame({"doc_id": nodes, "cluster": labels}),
@@ -451,17 +447,9 @@ def dedup_clusters(
             )
             edges.unpersist()
             return out
-    # Scale-adaptive join strategy (guide §3.1): |labels| ≤ |edges|, and the
-    # edge count is already known from the cache materialization. On a
-    # small graph the label table broadcasts — every per-round join then
-    # runs with ZERO exchanges (the groupBy's is the round's only one),
-    # which at local/bench scale removes ~2 AQE stage round-trips per
-    # round. Past the threshold (≈tens of MB built) the co-partitioned
-    # shuffle-hash plan is the 100-TB shape: the cached edge side never
-    # re-exchanges, only the label table moves.
-    small_graph = n_edges <= _BROADCAST_EDGE_CAP
-    def _lbl(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if small_graph else df.hint("shuffle_hash")
+    # The 100-TB shape: |labels| ≤ |edges|, joined co-partitioned with a
+    # shuffle-hash hint — the cached edge side never re-exchanges, only
+    # the label table moves.
     labels = edges.select(F.col("dst").alias("node")).distinct().select(
         "node", F.col("node").alias("cluster")
     )  # hash(node, sess) — co-partitioned with edges, zero extra exchange
@@ -469,11 +457,10 @@ def dedup_clusters(
     use_obs = True  # convergence metric rides the checkpoint job
     try:
         for i in range(max_iters):
-            # neighbors' labels: broadcast (small graph) or co-partitioned
-            # hash join (edges cached as hash(dst, parts); labels is
-            # hash(node, parts) every round)
+            # neighbors' labels: co-partitioned hash join (edges cached as
+            # hash(dst, parts); labels is hash(node, parts) every round)
             nb = (
-                edges.join(_lbl(labels), edges.dst == labels.node)
+                edges.join(labels.hint("shuffle_hash"), edges.dst == labels.node)
                 .select(F.col("src").alias("node"), F.col("cluster"))
                 .withColumn("_own", F.lit(False))
             )
@@ -505,8 +492,7 @@ def dedup_clusters(
             # ~20% slower on a 1.3M-edge graph (the jump join's two agg
             # inputs are NOT exchange-reuse-deduplicated, so the groupBy
             # ran twice per round), while the jump join itself is cheap
-            # to re-run from the materialized RDD (broadcast probe on
-            # small graphs, two ~|nodes| exchanges at scale).
+            # to re-run from the materialized RDD (two ~|nodes| exchanges).
             # Convergence metric rides the SAME materialization via the
             # Observation API — no separate count job per round. Counting
             # pre-jump (old != c1) is equivalent to the old post-jump
@@ -530,7 +516,7 @@ def dedup_clusters(
             # c1 is always a node id, so the left join always matches.
             jump = agg.select(F.col("node").alias("_jn"), F.col("c1").alias("_jc"))
             merged = (
-                agg.join(_lbl(jump), agg.c1 == F.col("_jn"), "left")
+                agg.join(jump.hint("shuffle_hash"), agg.c1 == F.col("_jn"), "left")
                 .select(
                     "node",
                     "old",
@@ -542,9 +528,7 @@ def dedup_clusters(
             if prev is not None:
                 prev.unpersist()
             prev = agg
-            labels = merged.select("node", "cluster")
-            if not small_graph:
-                labels = labels.repartition(F.col("node"))
+            labels = merged.select("node", "cluster").repartition(F.col("node"))
             if changed == 0:
                 # at the fixed point the jump is the identity (see above),
                 # so the checkpointed aggregate IS the answer — the final

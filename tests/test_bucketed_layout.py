@@ -159,13 +159,52 @@ def test_auto_mode_resolution(spark, bucketed):
         )
     )
     assert resolve_match_mode(bdf, grokked, "auto") == "fused"
-    for explicit in ("fused", "hybrid", "udf"):
-        assert resolve_match_mode(bdf, NATIVE_RS, explicit) == explicit
-    # unresolved "auto" must never leak into run_match's hybrid fallthrough
     from sagan_spark.engine import match as matchmod
 
+    for explicit in matchmod.MATCH_MODES:
+        assert resolve_match_mode(bdf, NATIVE_RS, explicit) == explicit
+    # unresolved "auto" must never leak into run_match's hybrid fallthrough
     with pytest.raises(ValueError, match="unknown match mode"):
         matchmod.run_match(bdf, NATIVE_RS, mode="auto")
+
+
+class _QueryExecutionFails:
+    """A Java Dataset handle whose queryExecution() raises and that
+    delegates everything else — the shape of a py4j internals break."""
+
+    def __init__(self, jdf):
+        self._real = jdf
+        self.probed = 0
+
+    def queryExecution(self):
+        self.probed += 1
+        raise RuntimeError("queryExecution unavailable")
+
+    def __getattr__(self, name):
+        return getattr(self._real, name)
+
+
+def test_bucket_probe_failure_falls_back_to_fused(spark, bucketed, monkeypatch):
+    """If the bucket probe breaks, auto takes the fused plan (which keeps
+    its conv_id exchange, so it is correct on any layout) and the alerts
+    equal the hybrid run's."""
+    from sagan_spark.engine.pipeline import _scan_bucketed_by, resolve_match_mode
+
+    _, table = bucketed
+    bdf = spark.table(table)
+    broken = _QueryExecutionFails(bdf._jdf)
+    monkeypatch.setattr(bdf, "_jdf", broken)
+    assert _scan_bucketed_by(bdf, "conv_id") is False
+    assert resolve_match_mode(bdf, NATIVE_RS, "auto") == "fused"
+    assert broken.probed == 2
+    got = _alerts(spark, bdf, "auto")
+    assert _n_conv_exchanges(got) >= 1
+    rows = lambda df: sorted(  # noqa: E731
+        (r.conv_id, int(r.turn_idx), int(r.sid))
+        for r in df.select("conv_id", "turn_idx", "sid").collect()
+    )
+    want = rows(_alerts(spark, spark.table(table), "hybrid"))
+    assert rows(got) == want and want
 
 
 def test_pipeline_run_on_catalog_identifier_elides_exchange(spark, bucketed):

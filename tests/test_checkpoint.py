@@ -68,3 +68,29 @@ def test_resume_rejects_different_ruleset(spark, tmp_path):
     cp.run_resumable(spark, path, out, max_units=1)
     with pytest.raises(ValueError, match="different rule set"):
         cp.run_resumable(spark, path, out, ruleset=bulk_ruleset())
+
+
+def test_role_tracked_runs_release_their_cache(spark, tmp_path):
+    """Role-tracked rules make build_alerts persist the enriched frame for
+    their second replay branch. Every batch entry point must hand that
+    cache back: run_resumable per unit, run_dynamic across both passes."""
+    from sagan_spark.rules.model import AfterSpec, ContentSpec, Rule, RuleSet
+
+    path = str(tmp_path / "tx_role")
+    write_transcripts(path, n_convs=60, seed=5, chunk_convs=20)
+    role = Rule(
+        sid=20, msg="per-role retries", sink="fast", contents=(ContentSpec("retry"),),
+        after=AfterSpec(track="role", count=1, seconds=10**8),
+    )
+    child = Rule(sid=21, msg="child", sink="eve", contents=(ContentSpec("error"),), depends_on=20)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    spark.catalog.clearCache()
+    r = cp.run_resumable(spark, path, str(tmp_path / "out"), ruleset=RuleSet((role,)))
+    assert r.processed_units == 3
+    assert cache.isEmpty(), "run_resumable left a cached frame behind"
+
+    res = pipeline.run_dynamic(spark, path, RuleSet((role, child)))
+    assert res.sid_counts.get(20) and res.sid_counts.get(21)
+    res.unpersist()
+    assert cache.isEmpty(), "run_dynamic dropped a cache handle"

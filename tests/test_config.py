@@ -17,6 +17,7 @@ from sagan_spark.config import (
     load_ruleset,
     parse_config,
 )
+from sagan_spark.engine.match import MATCH_MODES
 
 _EXAMPLE = """\
 # sagan_spark.yaml — example from the module docstring
@@ -85,6 +86,7 @@ def test_comment_and_quote_edge_cases():
         "rules:\n  not-a-list-item",  # malformed list
         "  orphan: 1",  # indented line outside a section
         "mode: nonsense",  # validated enum
+        "engine:\n  match_mode: udf",  # removed match mode
     ],
 )
 def test_bad_config_fails_loudly(bad):
@@ -112,7 +114,7 @@ def test_round_trip_property():
             output=st.one_of(st.none(), path),
             mode=st.sampled_from(["batch", "resumable", "stream", "dynamic"]),
             rules=st.lists(path, max_size=3).map(tuple),
-            match_mode=st.sampled_from(["fused", "hybrid", "udf"]),
+            match_mode=st.sampled_from(["auto", *MATCH_MODES]),
             fold_dims=st.booleans(),
             shuffle_partitions=st.one_of(st.none(), st.integers(1, 10000)),
             master=st.one_of(st.none(), st.just("local[8]")),
@@ -178,7 +180,14 @@ def test_pipeline_runs_from_config(spark, tiny_path, tiny_pdf, tmp_path, capsys)
         "  match_mode: fused\n"
         "  master: local[4]\n"
     )
-    _run_pipeline_main(["--config", str(cfg_path)])
+    # main's get_spark applies its default shuffle partitions to the shared
+    # test session; put the session's own value back for later tests
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    try:
+        _run_pipeline_main(["--config", str(cfg_path)])
+    finally:
+        spark.conf.set(key, saved)
     got = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     want = run_oracle(tiny_pdf, load_ruleset(load_config(str(cfg_path)))).sid_counts
     assert {int(k): v for k, v in got["sid_counts"].items()} == want

@@ -52,7 +52,7 @@ def test_nulls_engine_equals_oracle(spark, null_pdf):
     want = run_oracle(null_pdf, RS)
     df = spark.createDataFrame(null_pdf)
     df = df.withColumn("ts", df.ts.cast("timestamp_ntz"))
-    alerts = pipeline.build_alerts(spark, df, RS, persist_intermediate=False)
+    alerts = pipeline.build_alerts(spark, df, RS)
     got = sorted(
         (r.conv_id, r.turn_idx, r.sid)
         for r in alerts.select("conv_id", "turn_idx", "sid").collect()

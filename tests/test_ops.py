@@ -550,12 +550,13 @@ def test_dedup_clusters_matches_union_find(spark):
     assert got == _union_find(pairs)
 
 
-def test_dedup_clusters_shuffle_path_equals_broadcast_path(spark, monkeypatch):
-    """r7: tiny graphs solve on the driver (collected edges + numpy),
-    small graphs broadcast the per-round label table, and at scale the
-    co-partitioned shuffle-hash plan runs. Force each strategy on the
-    same fixture (caps → 0) and pin all three to the union-find oracle
-    so a strategy switch can never change the labels."""
+def test_dedup_clusters_loop_equals_local_tier(spark, monkeypatch):
+    """Small graphs solve on the driver (collected edges + numpy); at
+    scale the co-partitioned shuffle loop runs. Force each tier on the
+    same fixture (byte cap → 0) and pin both to the union-find oracle so
+    a tier switch can never change the labels. A failed size probe
+    (_est_size_bytes → None) must not collect the edges: it takes the
+    loop."""
     pairs = [
         (1, 2), (2, 3), (3, 4), (4, 5),
         (10, 11), (11, 12), (10, 12),
@@ -564,12 +565,38 @@ def test_dedup_clusters_shuffle_path_equals_broadcast_path(spark, monkeypatch):
     ]
     df = spark.createDataFrame(pairs, "a: long, b: long")
     want = _union_find(pairs)
+    calls: list = []  # one entry per driver-local solve
+    real_local = D._clusters_local
+    monkeypatch.setattr(D, "_clusters_local", lambda e: calls.append(1) or real_local(e))
     local = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
-    monkeypatch.setattr(D, "_COLLECT_EDGE_CAP", 0)
-    small = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
-    monkeypatch.setattr(D, "_BROADCAST_EDGE_CAP", 0)
-    big = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
-    assert local == want and small == want and big == want
+    assert calls == [1]
+    with monkeypatch.context() as m:
+        m.setattr(D, "_COLLECT_EDGE_BYTES", 0)
+        loop = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
+    monkeypatch.setattr(D, "_est_size_bytes", lambda _df: None)
+    unknown = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
+    assert calls == [1]
+    assert local == want and loop == want and unknown == want
+
+
+def test_simhash_unknown_size_takes_spread_plan(spark, monkeypatch, tmp_path):
+    """A failed size probe counts as large: a one-file input is spread
+    before the kernel (a tiny one with a known size is not), and the
+    spread result equals the Column path."""
+    rows = [(i, f"doc {i} about {i % 3} things") for i in range(12)]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id: long, text: string").coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+
+    def spread(out) -> bool:
+        return "Repartition" in out._jdf.queryExecution().optimizedPlan().toString()
+
+    assert not spread(D.simhash_portable(df))
+    monkeypatch.setattr(D, "_est_size_bytes", lambda _df: None)
+    fast = D.simhash_portable(df)
+    assert spread(fast)
+    slow = D.simhash_portable(df, kernel=False)
+    assert {tuple(r) for r in fast.collect()} == {tuple(r) for r in slow.collect()}
 
 
 def test_dedup_chain_end_to_end(spark):
@@ -640,7 +667,7 @@ def test_dedup_survivors_custom_id_col(spark):
 def test_dedup_clusters_raises_on_nonconvergence(spark, monkeypatch):
     # the guard is a distributed-loop property: force past the
     # driver-local tier, which always reaches the fixed point
-    monkeypatch.setattr(D, "_COLLECT_EDGE_CAP", 0)
+    monkeypatch.setattr(D, "_COLLECT_EDGE_BYTES", 0)
     df = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a: long, b: long")
     import pytest
 
@@ -648,23 +675,26 @@ def test_dedup_clusters_raises_on_nonconvergence(spark, monkeypatch):
         D.dedup_clusters(df, max_iters=1)
 
 
-def test_dedup_clusters_local_path_string_ids_and_null_fallback(spark, monkeypatch):
-    """The driver-local tier must (a) label string-id graphs by the
+def test_dedup_clusters_string_ids_and_null_endpoints(spark, monkeypatch):
+    """The driver-local tier must label string-id graphs by the
     lexicographic min member — np.unique's sorted codes, not
-    first-appearance factorization — and (b) refuse NULL endpoints,
-    falling back to the distributed loop (same rows both ways)."""
+    first-appearance factorization. A pair with a NULL endpoint is
+    dropped in both tiers: NULL is no document, so (NULL, 7) leaves 7
+    labelled only by its real pair (7, 9) and (8, NULL) leaves 8 out."""
     pairs = [("d9", "d2"), ("d2", "d5"), ("zz", "aa")]
     df = spark.createDataFrame(pairs, "a: string, b: string")
     got = {r.doc_id: r.cluster for r in D.dedup_clusters(df).collect()}
     assert got == {"d9": "d2", "d2": "d2", "d5": "d2", "zz": "aa", "aa": "aa"}
 
     with_null = spark.createDataFrame(
-        [(1, 2), (2, 3), (None, 7)], "a: long, b: long"
+        [(1, 2), (2, 3), (None, 7), (8, None), (7, 9)], "a: long, b: long"
     )
+    want = {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}
+    assert want == set(_union_find([(1, 2), (2, 3), (7, 9)]).items())
     local_rows = {tuple(r) for r in D.dedup_clusters(with_null).collect()}
-    monkeypatch.setattr(D, "_COLLECT_EDGE_CAP", 0)
+    monkeypatch.setattr(D, "_COLLECT_EDGE_BYTES", 0)
     loop_rows = {tuple(r) for r in D.dedup_clusters(with_null).collect()}
-    assert local_rows == loop_rows  # fallback ≡ loop, whatever the loop does
+    assert local_rows == want and loop_rows == want
 
 
 def test_multimodal_image_header_parsed_for_real(spark):

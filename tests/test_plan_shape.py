@@ -23,9 +23,7 @@ def _plans(spark, tiny_path, match_mode: str) -> tuple[str, str]:
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         df = spark.read.parquet(tiny_path)
-        alerts = pipeline.build_alerts(
-            spark, df, CANONICAL, persist_intermediate=False, match_mode=match_mode
-        )
+        alerts = pipeline.build_alerts(spark, df, CANONICAL, match_mode=match_mode)
         return _explain(spark, alerts), _explain(spark, alerts, "simple")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -84,6 +82,15 @@ def test_single_stateful_exchange(plan):
     ex = re.findall(r"\(\d+\) Exchange\b", plan)
     assert len(ex) == 1, ex
     assert re.search(r"hashpartitioning\(conv_id", plan)
+
+
+def test_correlate_has_one_plan():
+    # the conv_id replay above is the only correlate plan; the name its
+    # callers pass ("linear") is accepted and nothing else is
+    from sagan_spark.engine import correlate
+
+    with pytest.raises(ValueError, match="only 'linear'"):
+        correlate.run_correlate(None, CANONICAL, scope="split")
 
 
 def test_whole_stage_codegen_present(plan):

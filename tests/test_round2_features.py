@@ -356,12 +356,13 @@ def test_ruleset_rejects_depends_on_noalert_parent():
 
 
 # ---------------------------------------------------------------------------
-# fused / hybrid / udf match modes must agree, including extraction edges
+# fused / hybrid match modes and the all-pandas reference must agree,
+# including extraction edges
 # ---------------------------------------------------------------------------
 
 
 def test_match_modes_equal_including_extraction(spark, tiny_path):
-    from sagan_spark.engine.match import run_match
+    from sagan_spark.engine import match
     from sagan_spark.rules.canonical import CANONICAL
     from sagan_spark.rules.model import HashSpec
 
@@ -387,19 +388,21 @@ def test_match_modes_equal_including_extraction(spark, tiny_path):
         )
     )
     df = spark.read.parquet(tiny_path)
+    plans = {mode: match.run_match(df, rs, mode=mode) for mode in match.MATCH_MODES}
+    # reference: every rule, native-compilable or not, through the
+    # vectorized-pandas _rule_mask — checks it against the native Columns
+    plans["pandas"] = match._prepare(df).mapInPandas(
+        match.make_matcher(rs, match._get_dims(True)), schema=match.MATCH_SCHEMA
+    )
     results = {}
-    for mode in ("fused", "hybrid", "udf"):
-        rows = (
-            run_match(df, rs, mode=mode)
-            .select("conv_id", "turn_idx", "sid", "extracted")
-            .collect()
-        )
-        results[mode] = sorted(
+    for name, plan in plans.items():
+        rows = plan.select("conv_id", "turn_idx", "sid", "extracted").collect()
+        results[name] = sorted(
             (r.conv_id, r.turn_idx, r.sid, tuple(sorted((r.extracted or {}).items())))
             for r in rows
         )
     assert results["fused"] == results["hybrid"], "fused != hybrid"
-    assert results["fused"] == results["udf"], "fused != udf"
+    assert results["fused"] == results["pandas"], "fused != pandas reference"
     assert any(r[2] == 2000050 for r in results["fused"])
     assert all(
         dict(r[3]).get("proto") == "tcp"
