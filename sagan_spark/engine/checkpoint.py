@@ -34,7 +34,6 @@ from .. import fsutil
 from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import pipeline as pl
-from . import route
 
 MANIFEST = "_manifest.json"
 
@@ -136,13 +135,12 @@ def run_resumable(
         if max_units is not None and processed >= max_units:
             break
         t0 = time.time()
-        df = spark.read.parquet(*files)
-        rows_in = df.count()
+        df, read_input = pl.observe_input(spark.read.parquet(*files))
         alerts = pl.build_alerts(
             spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode
-        ).persist()
-        per_sink = {r["sink"]: r["n"] for r in route.sink_counts(alerts).collect()}
-        per_sid = {str(r["sid"]): r["n"] for r in route.sid_counts(alerts).collect()}
+        )
+        alerts, read_counts = pl.observe_alerts(alerts, ruleset, read_input)
+        alerts = alerts.persist()
         for sink in ruleset.sinks():
             (
                 alerts.where(F.col("sink") == sink)
@@ -150,13 +148,16 @@ def run_resumable(
                 .write.mode("overwrite")
                 .parquet(f"{out_dir.rstrip('/')}/sinks/{sink}/unit={uid}")
             )
+        if not ruleset.sinks():  # no sink write to fire the observations
+            alerts.write.format("noop").mode("overwrite").save()
         pl.unpersist_alerts(alerts)
+        per_sink, per_sid, metrics = read_counts()
         manifest["units"][uid] = {
             "status": "done",
             "files": files,
-            "rows_in": rows_in,
+            "rows_in": metrics["rows_in"],
             "per_sink": per_sink,
-            "per_sid": per_sid,
+            "per_sid": {str(k): v for k, v in per_sid.items()},
             "wall_s": round(time.time() - t0, 3),
         }
         _atomic_write(spark, out_dir.rstrip("/") + "/" + MANIFEST, manifest)

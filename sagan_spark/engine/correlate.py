@@ -34,7 +34,7 @@ pandas oracle):
 from __future__ import annotations
 
 import os
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -376,17 +376,3 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") ->
         out = out.unionByName(b)
     return out
 
-
-def sliding_after_counts(df: DataFrame, track_cols: Iterable[str], ts_col: str, seconds: int):
-    """Sliding-window event count per track key over the trailing ``seconds``
-    — the window-function variant for track="role" style rules and for the
-    SQL-checkable queries() entries. NOTE: sliding, not Sagan reset-window."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    w = (
-        Window.partitionBy(*track_cols)
-        .orderBy(F.unix_timestamp(ts_col))
-        .rangeBetween(-seconds, 0)
-    )
-    return F.count(F.lit(1)).over(w)

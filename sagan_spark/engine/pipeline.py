@@ -25,10 +25,11 @@ branches).
 from __future__ import annotations
 
 import logging
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..datagen import dims as dimsmod
@@ -113,11 +114,10 @@ def resolve_match_mode(
 
 @dataclass
 class PipelineResult:
-    alerts: DataFrame  # routed alert rows (persisted)
-    sink_counts: dict[str, int] = field(default_factory=dict)
-    sid_counts: dict[int, int] = field(default_factory=dict)
-    input_rows: int | None = None
-    metrics: dict = field(default_factory=dict)  # A3 stats ([PUB src/stats-json.c])
+    alerts: DataFrame  # routed alert rows; persisted only when run had an out_dir
+    sink_counts: dict[str, int]
+    sid_counts: dict[int, int]
+    metrics: dict  # A3 stats ([PUB src/stats-json.c])
 
     def unpersist(self) -> None:
         unpersist_alerts(self.alerts)
@@ -187,80 +187,96 @@ def build_alerts(
     return out
 
 
+def _input_aggs() -> list:
+    return [
+        F.count(F.lit(1)).alias("rows_in"),
+        F.approx_count_distinct("conv_id").alias("convs_approx"),
+        F.min("ts").alias("ts_min"),
+        F.max("ts").alias("ts_max"),
+    ]
+
+
+def observe_input(df: DataFrame) -> tuple[DataFrame, Callable[[], dict]]:
+    """Observe the input metrics (rows in, approx distinct conversations,
+    time span — the stats-json analogue) on ``df``: they ride whatever
+    action runs the plan. Returns the observed frame and a reader for after
+    that action."""
+    obs = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
+
+    def read() -> dict:
+        try:
+            return dict(obs.get)
+        except Exception:
+            # With an ALL-empty input, AQE's empty-relation propagation can
+            # prune the input-side CollectMetrics node out of the executed
+            # plan entirely — the observation never fires and its JVM row
+            # cannot convert (found by the empty-input verify probe; the
+            # root-level alerts observation is never pruned). Fall back to
+            # aggregating the same metrics over the unobserved ``df`` (an
+            # Observation is single-use): one extra tiny job, and only on
+            # the degenerate inputs that trigger this.
+            return df.agg(*_input_aggs()).first().asDict()
+
+    return df.observe(obs, *_input_aggs()), read
+
+
+def observe_alerts(
+    alerts: DataFrame, ruleset: RuleSet, read_input: Callable[[], dict]
+) -> tuple[DataFrame, Callable[[], tuple[dict, dict, dict]]]:
+    """Observe the alert total and the A1 per-sid / A2 per-sink counters
+    ([PUB src/stats.c]) on ``alerts``: Sagan bumps them as each alert
+    passes its output queue, never in a second pass. Returns the observed
+    frame, carrying ``alerts``' cache handles (unpersist_alerts), and a
+    reader of ``(sink_counts, sid_counts, metrics)`` for after its first
+    action. Under a persist, both observations fire on the action that
+    fills the cache."""
+    sinks = ruleset.sinks()
+    sids = sorted(r.sid for r in ruleset.rules if not r.noalert)
+    obs = Observation()
+    observed = alerts.observe(
+        obs,
+        F.count(F.lit(1)).alias("alerts"),
+        *[F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"sink_{s}") for s in sinks],
+        *[F.sum(F.when(F.col("sid") == s, 1).otherwise(0)).alias(f"sid_{s}") for s in sids],
+    )
+    observed._sagan_persisted = getattr(alerts, "_sagan_persisted", ())
+
+    def read() -> tuple[dict, dict, dict]:
+        got = obs.get
+        sink_counts = {s: got[f"sink_{s}"] for s in sinks if got[f"sink_{s}"]}
+        sid_counts = {s: got[f"sid_{s}"] for s in sids if got[f"sid_{s}"]}
+        return sink_counts, sid_counts, {**read_input(), "alerts": got["alerts"] or 0}
+
+    return observed, read
+
+
 def run(
     spark: SparkSession,
     input_path: str,
     ruleset: RuleSet = CANONICAL,
     out_dir: str | None = None,
     fold_dims: bool = True,
-    count_input: bool = False,
     match_mode: str = "auto",
 ) -> PipelineResult:
     """Execute the pipeline.
 
-    Without ``out_dir`` the whole run is ONE Spark action: per-sink and
-    per-sid counts are collected via the Observation API piggybacked on a
-    noop write — no persist, no second pass. With ``out_dir`` the alerts
-    are persisted once and reused by the four sink writers.
+    Per-sink and per-sid counts and the input metrics ride the action that
+    runs anyway, via the Observation API: no count job, no second pass.
+    Without ``out_dir`` that action is ONE noop write and nothing is
+    persisted. With ``out_dir`` the alerts are persisted once and reused by
+    the four sink writers; the first of them fills the counts.
     """
-    from pyspark.sql import Observation
-
-    raw = iomod.read_table(spark, input_path, columns=iomod.TRANSCRIPT_COLUMNS)
-    df = raw
-    # input-side metrics ride the same action (zero extra jobs): rows in,
-    # approx distinct conversations, time span — the stats-json analogue
-    obs_in = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
-    df = df.observe(
-        obs_in,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.approx_count_distinct("conv_id").alias("convs_approx"),
-        F.min("ts").alias("ts_min"),
-        F.max("ts").alias("ts_max"),
+    df, read_input = observe_input(
+        iomod.read_table(spark, input_path, columns=iomod.TRANSCRIPT_COLUMNS)
     )
     alerts = build_alerts(spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode)
-    res = PipelineResult(alerts=alerts)
-    sinks = ruleset.sinks()
-    sids = sorted(r.sid for r in ruleset.rules if not r.noalert)
-
+    alerts, read_counts = observe_alerts(alerts, ruleset, read_input)
     if out_dir is None:
-        obs = Observation()
-        metrics = [
-            F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"sink_{s}") for s in sinks
-        ] + [
-            F.sum(F.when(F.col("sid") == s, 1).otherwise(0)).alias(f"sid_{s}") for s in sids
-        ]
-        observed = alerts.observe(obs, F.count(F.lit(1)).alias("alerts"), *metrics)
-        observed.write.format("noop").mode("overwrite").save()
-        got = obs.get
-        res.sink_counts = {s: got[f"sink_{s}"] for s in sinks if got[f"sink_{s}"]}
-        res.sid_counts = {s: got[f"sid_{s}"] for s in sids if got[f"sid_{s}"]}
-        try:
-            res.metrics = dict(obs_in.get)
-        except Exception:
-            # With an ALL-empty input, AQE's empty-relation propagation can
-            # prune the input-side CollectMetrics node out of the executed
-            # plan entirely — the observation never fires and its JVM row
-            # cannot convert (found by the empty-input verify probe; the
-            # root-level alerts observation above is never pruned). Fall
-            # back to aggregating the same metrics directly: one extra tiny
-            # job, and only on the degenerate inputs that trigger this.
-            r = raw.agg(  # raw, not df: an Observation is single-use
-                F.count(F.lit(1)).alias("rows_in"),
-                F.approx_count_distinct("conv_id").alias("convs_approx"),
-                F.min("ts").alias("ts_min"),
-                F.max("ts").alias("ts_max"),
-            ).first()
-            res.metrics = r.asDict()
-        res.metrics["alerts"] = got["alerts"] or 0
+        alerts.write.format("noop").mode("overwrite").save()
     else:
         alerts = alerts.persist(StorageLevel.MEMORY_AND_DISK)
-        res.alerts = alerts
-        res.sink_counts = {r["sink"]: r["n"] for r in route.sink_counts(alerts).collect()}
-        res.sid_counts = {r["sid"]: r["n"] for r in route.sid_counts(alerts).collect()}
         route.write_sinks(alerts, out_dir)
-    if count_input:
-        res.input_rows = df.count()
-    return res
+    return PipelineResult(alerts, *read_counts())
 
 
 def run_dynamic(

@@ -13,10 +13,11 @@ rule dim, then fans out per sink:
 - external program (S8): pipe_to_program streams formatted lines into a
   subprocess per partition.
 
-Write shape at scale: one `partitionBy("sink")` write = a single pass;
-within each sink files are sorted by (conv_id, turn_idx) via
-repartition+sortWithinPartitions so equality checks and downstream
-consumers get stable per-file order without a global sort.
+Write shape: one job per sink over the persisted alerts, each with its own
+repartition(conv_id) + sortWithinPartitions (stable per-file order, no
+global sort). That exchange also sizes the files, as persisted partitions
+are not AQE-coalesced: without it dense_sinks wrote 115 files, not 4, at
+32 shuffle partitions. Counts ride an Observation (pipeline.observe_alerts).
 """
 
 from __future__ import annotations
@@ -160,16 +161,6 @@ def sink_lines(alerts: DataFrame, sink: str) -> DataFrame:
     return alerts.filter(F.col("sink") == sink).select(
         "conv_id", "turn_idx", "sid", fmt().alias("line")
     )
-
-
-def sink_counts(alerts: DataFrame) -> DataFrame:
-    """A2: the per-sink aggregate count-equality target (BASELINE.json:2)."""
-    return alerts.groupBy("sink").count().withColumnRenamed("count", "n")
-
-
-def sid_counts(alerts: DataFrame) -> DataFrame:
-    """A1: per-rule hit counters ([PUB src/stats.c])."""
-    return alerts.groupBy("sid").count().withColumnRenamed("count", "n")
 
 
 def _u32(col: F.Column) -> F.Column:
@@ -322,7 +313,8 @@ def pipe_to_program(alerts: DataFrame, sink: str, argv: list[str]) -> int:
 def write_sinks(alerts: DataFrame, out_dir: str) -> None:
     """Fan-out write. Text sinks get sorted text files; unified2 gets
     Parquet. One job per sink keeps formats heterogeneous without a custom
-    datasource; each is a single narrow pass over the (persisted) alerts."""
+    datasource; each filters the (persisted) alerts, then exchanges and
+    sorts its rows by conv_id (module docstring: why not one exchange)."""
     for sink in ("fast", "eve", "syslog"):
         (
             sink_lines(alerts, sink)

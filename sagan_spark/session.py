@@ -76,16 +76,20 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
     so the bench harness can run the identical job at two parallelism
     levels (local[8] vs local[32]) for the scaling-efficiency evidence.
+    Defaults apply only when this call creates the session: ``getOrCreate``
+    pushes every SQL conf it gets into a live one (e.g. the caller's, in
+    scripts/run_pipeline.main), which takes only explicit settings.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = default_conf()
+    conf = {}
+    if SparkSession.getActiveSession() is None:
+        conf = default_conf()
+        conf["spark.sql.shuffle.partitions"] = "32"
     if shuffle_partitions is not None:
         conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    else:
-        conf.setdefault("spark.sql.shuffle.partitions", "32")
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

@@ -40,6 +40,7 @@ def test_interrupt_and_resume_equals_single_run(spark, tmp_path):
     # totals equal a single-shot pipeline run over the whole input
     ref = pipeline.run(spark, path)
     got = r2.totals
+    assert got["rows_in"] == ref.metrics["rows_in"] == spark.read.parquet(path).count()
     assert got["per_sink"] == ref.sink_counts
     assert {int(k): v for k, v in got["per_sid"].items()} == ref.sid_counts
     ref.unpersist()
@@ -73,7 +74,8 @@ def test_resume_rejects_different_ruleset(spark, tmp_path):
 def test_role_tracked_runs_release_their_cache(spark, tmp_path):
     """Role-tracked rules make build_alerts persist the enriched frame for
     their second replay branch. Every batch entry point must hand that
-    cache back: run_resumable per unit, run_dynamic across both passes."""
+    cache back: run_resumable per unit, run_dynamic across both passes, and
+    run with an out_dir, whose persisted frame is a new, observed one."""
     from sagan_spark.rules.model import AfterSpec, ContentSpec, Rule, RuleSet
 
     path = str(tmp_path / "tx_role")
@@ -94,3 +96,24 @@ def test_role_tracked_runs_release_their_cache(spark, tmp_path):
     assert res.sid_counts.get(20) and res.sid_counts.get(21)
     res.unpersist()
     assert cache.isEmpty(), "run_dynamic dropped a cache handle"
+
+    res = pipeline.run(spark, path, RuleSet((role,)), out_dir=str(tmp_path / "sinks"))
+    assert res.sid_counts.get(20) and res.metrics["rows_in"] > 0
+    res.unpersist()
+    assert cache.isEmpty(), "run(out_dir=...) dropped a cache handle"
+
+
+def test_noalert_only_ruleset_still_counts_its_input(spark, tmp_path):
+    """A rule set with no alerting rule writes no sink, so the unit runs a
+    noop write instead: without an action its observations never fire."""
+    from sagan_spark.rules.model import ContentSpec, Rule, RuleSet
+
+    path = _multi_file_input(tmp_path)
+    setter = Rule(
+        sid=30, msg="state only", sink="fast", contents=(ContentSpec("error"),), noalert=True
+    )
+    r = cp.run_resumable(
+        spark, path, str(tmp_path / "out"), ruleset=RuleSet((setter,)), files_per_unit=4
+    )
+    n = spark.read.parquet(path).count()
+    assert r.totals == {"rows_in": n, "per_sink": {}, "per_sid": {}}

@@ -180,8 +180,9 @@ def test_pipeline_runs_from_config(spark, tiny_path, tiny_pdf, tmp_path, capsys)
         "  match_mode: fused\n"
         "  master: local[4]\n"
     )
-    # main's get_spark applies its default shuffle partitions to the shared
-    # test session; put the session's own value back for later tests
+    # main's get_spark must leave the shared test session's settings alone
+    # (tests/test_session.py); restore them anyway so a regression there
+    # cannot leak into later tests
     key = "spark.sql.shuffle.partitions"
     saved = spark.conf.get(key)
     try:

@@ -102,3 +102,41 @@ def test_extracted_fields_match(result, oracle):
     for a in oracle.alerts:
         key = (a["conv_id"], a["turn_idx"], a["sid"])
         assert got[key] == a["extracted"], key
+
+
+@pytest.fixture(scope="module")
+def written(spark, tiny_path, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("sinks"))
+    res = pipeline.run(spark, tiny_path, out_dir=out)
+    yield res, out
+    res.unpersist()
+
+
+def test_both_run_paths_count_alike(result, written, tiny_pdf):
+    """Counts ride an Observation on whichever action runs: the noop write
+    without out_dir, the first sink write with it. Both paths report the
+    same counts and the same metrics."""
+    res, _ = written
+    assert res.sink_counts == result.sink_counts
+    assert res.sid_counts == result.sid_counts
+    for r in (result, res):
+        assert set(r.metrics) == {"rows_in", "convs_approx", "ts_min", "ts_max", "alerts"}
+        assert r.metrics["rows_in"] == len(tiny_pdf)
+        assert r.metrics["alerts"] == sum(r.sink_counts.values())
+        assert r.metrics["ts_min"] <= r.metrics["ts_max"]
+
+
+def test_written_rows_equal_sink_counts(written):
+    from pathlib import Path
+
+    import pyarrow.parquet as pq
+
+    res, out = written
+    for sink, n in res.sink_counts.items():
+        if sink == "unified2":
+            got = pq.read_table(f"{out}/{sink}").num_rows
+        else:
+            got = sum(
+                f.read_text(encoding="utf-8").count("\n") for f in Path(out, sink).glob("part-*")
+            )
+        assert got == n, sink

@@ -3,8 +3,8 @@ bounded" claim): one conversation with 10^4 MATCHED stateful turns —
 every turn enters the conv-keyed replay, the worst case the salting
 design note says must stay correct (state is order-dependent per conv, so
 the conversation must NOT be split). Correctness here; the 10^5-turn
-straggler-ratio measurement lives in scripts/skew_bench.py with results
-in BENCH/TUNING.md.
+straggler-ratio measurement was made with scripts/skew_bench.py (last
+held at commit 00ec0fe), with results in BENCH/TUNING.md.
 """
 
 from __future__ import annotations
