@@ -247,9 +247,10 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") ->
     ONE shuffle of all alerts by conv_id; stateless rows pass through the
     replay untouched. Strictly one consumer of the match subtree: every
     cost here (shuffle write/read, sort, Arrow, replay) is per-task
-    parallel, so nothing recomputes and nothing needs a persist, and the
-    resulting partitioning (hash(conv_id), sorted by turn) is exactly what
-    the sink writers want. A branching plan cannot beat it: exchange reuse
+    parallel, so nothing recomputes and nothing needs a persist. (The
+    sink writer still exchanges by conv_id once more: stateless-only and
+    role-tracked plans leave rows unpartitioned by conv_id, and that
+    exchange is where AQE sizes the sink files.) A branching plan cannot beat it: exchange reuse
     can NEVER deduplicate a dual-consumer plan whose subtree contains a
     Python stage (MapInPandas does not canonicalize equal across branches
     — verified empirically: a pushdown-barriered identical exchange still

@@ -11,15 +11,19 @@ conv_id and every rule is native (resolve_match_mode). Fused plan shape
     → Filter: native hit OR UDF fast-pattern     [JVM-side candidate prune]
     → MapInPandas fused matcher                  ← the JVM↔Py boundary
     → BroadcastHashJoin ×2 + BroadcastNestedLoopJoin (attach dims)
-    → Exchange hashpartitioning(conv_id)         [the ONLY data shuffle]
+    → Exchange hashpartitioning(conv_id)         [the ONLY shuffle before sinks]
     → Sort within partitions → MapInPandas replay (stateless pass through)
-    → literal-map rule meta → sinks / Observation counts
+    → literal-map rule meta → Observation counts
+    → noop write, or route.write_sinks: Exchange(conv_id) → Sort → line
+      CASE → MapInArrow writer of every sink
 
 Strictly linear: every stage has one consumer, so nothing recomputes and
 nothing needs a persist (counts ride the single action via the Observation
-API). Exceptions that DO persist: the out_dir path (four sink writers
-reuse alerts) and rule sets with role-tracked counters (two replay
-branches).
+API; with out_dir that action is route.write_sinks' one-pass writer).
+Exceptions that DO persist: rule sets with role-tracked counters (two
+replay branches), run_dynamic with out_dir (each pass's alerts feed its
+count and the union's write), and route's Spark-writer fallback for an
+out_dir executors cannot open.
 """
 
 from __future__ import annotations
@@ -114,7 +118,7 @@ def resolve_match_mode(
 
 @dataclass
 class PipelineResult:
-    alerts: DataFrame  # routed alert rows; persisted only when run had an out_dir
+    alerts: DataFrame  # routed alert rows; only run_dynamic(out_dir=...) caches them, per pass
     sink_counts: dict[str, int]
     sid_counts: dict[int, int]
     metrics: dict  # A3 stats ([PUB src/stats-json.c])
@@ -187,13 +191,27 @@ def build_alerts(
     return out
 
 
-def _input_aggs() -> list:
-    return [
-        F.count(F.lit(1)).alias("rows_in"),
-        F.approx_count_distinct("conv_id").alias("convs_approx"),
-        F.min("ts").alias("ts_min"),
-        F.max("ts").alias("ts_max"),
-    ]
+def _observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
+    """``df`` observing ``aggs``, and a reader of their values for after the
+    action that runs it.
+
+    AQE replaces a shuffle stage whose output is empty with an empty
+    relation, and the CollectMetrics node inside that stage leaves the
+    executed plan with it: the observation never fires and its JVM row
+    cannot convert. That happens to the input observation on an all-empty
+    input, and to the alerts observation, under write_sinks' exchange,
+    whenever there are no alerts. The reader then aggregates the same
+    metrics over the unobserved ``df`` (an Observation is single-use): one
+    extra job, only on those degenerate runs."""
+    obs = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
+
+    def read() -> dict:
+        try:
+            return dict(obs.get)
+        except Exception:
+            return df.agg(*aggs).first().asDict()
+
+    return df.observe(obs, *aggs), read
 
 
 def observe_input(df: DataFrame) -> tuple[DataFrame, Callable[[], dict]]:
@@ -201,23 +219,15 @@ def observe_input(df: DataFrame) -> tuple[DataFrame, Callable[[], dict]]:
     time span — the stats-json analogue) on ``df``: they ride whatever
     action runs the plan. Returns the observed frame and a reader for after
     that action."""
-    obs = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
-
-    def read() -> dict:
-        try:
-            return dict(obs.get)
-        except Exception:
-            # With an ALL-empty input, AQE's empty-relation propagation can
-            # prune the input-side CollectMetrics node out of the executed
-            # plan entirely — the observation never fires and its JVM row
-            # cannot convert (found by the empty-input verify probe; the
-            # root-level alerts observation is never pruned). Fall back to
-            # aggregating the same metrics over the unobserved ``df`` (an
-            # Observation is single-use): one extra tiny job, and only on
-            # the degenerate inputs that trigger this.
-            return df.agg(*_input_aggs()).first().asDict()
-
-    return df.observe(obs, *_input_aggs()), read
+    return _observe(
+        df,
+        [
+            F.count(F.lit(1)).alias("rows_in"),
+            F.approx_count_distinct("conv_id").alias("convs_approx"),
+            F.min("ts").alias("ts_min"),
+            F.max("ts").alias("ts_max"),
+        ],
+    )
 
 
 def observe_alerts(
@@ -232,17 +242,18 @@ def observe_alerts(
     fills the cache."""
     sinks = ruleset.sinks()
     sids = sorted(r.sid for r in ruleset.rules if not r.noalert)
-    obs = Observation()
-    observed = alerts.observe(
-        obs,
-        F.count(F.lit(1)).alias("alerts"),
-        *[F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"sink_{s}") for s in sinks],
-        *[F.sum(F.when(F.col("sid") == s, 1).otherwise(0)).alias(f"sid_{s}") for s in sids],
+    observed, read_alerts = _observe(
+        alerts,
+        [
+            F.count(F.lit(1)).alias("alerts"),
+            *[F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"sink_{s}") for s in sinks],
+            *[F.sum(F.when(F.col("sid") == s, 1).otherwise(0)).alias(f"sid_{s}") for s in sids],
+        ],
     )
     observed._sagan_persisted = getattr(alerts, "_sagan_persisted", ())
 
     def read() -> tuple[dict, dict, dict]:
-        got = obs.get
+        got = read_alerts()
         sink_counts = {s: got[f"sink_{s}"] for s in sinks if got[f"sink_{s}"]}
         sid_counts = {s: got[f"sid_{s}"] for s in sids if got[f"sid_{s}"]}
         return sink_counts, sid_counts, {**read_input(), "alerts": got["alerts"] or 0}
@@ -262,21 +273,32 @@ def run(
 
     Per-sink and per-sid counts and the input metrics ride the action that
     runs anyway, via the Observation API: no count job, no second pass.
-    Without ``out_dir`` that action is ONE noop write and nothing is
-    persisted. With ``out_dir`` the alerts are persisted once and reused by
-    the four sink writers; the first of them fills the counts.
+    Without ``out_dir`` that action is ONE noop write; with it, the one
+    pass of route.write_sinks that writes every sink. Nothing is persisted
+    (role-tracked rule sets aside: PipelineResult.unpersist).
     """
+    alerts, read_counts = _observed_alerts(spark, input_path, ruleset, fold_dims, match_mode)
+    if out_dir is None:
+        _noop(alerts)
+    else:
+        route.write_sinks(alerts, out_dir)
+    return PipelineResult(alerts, *read_counts())
+
+
+def _observed_alerts(
+    spark: SparkSession, input_path: str, ruleset: RuleSet, fold_dims: bool, match_mode: str
+) -> tuple[DataFrame, Callable[[], tuple[dict, dict, dict]]]:
+    """The alerts of ``input_path`` with the input and alert observations
+    attached, and the reader of their counts (observe_alerts)."""
     df, read_input = observe_input(
         iomod.read_table(spark, input_path, columns=iomod.TRANSCRIPT_COLUMNS)
     )
     alerts = build_alerts(spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode)
-    alerts, read_counts = observe_alerts(alerts, ruleset, read_input)
-    if out_dir is None:
-        alerts.write.format("noop").mode("overwrite").save()
-    else:
-        alerts = alerts.persist(StorageLevel.MEMORY_AND_DISK)
-        route.write_sinks(alerts, out_dir)
-    return PipelineResult(alerts, *read_counts())
+    return observe_alerts(alerts, ruleset, read_input)
+
+
+def _noop(df: DataFrame) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
 def run_dynamic(
@@ -292,31 +314,38 @@ def run_dynamic(
     rule is enabled for pass 2 iff its parent sid fired at least once in
     pass 1. Only the tiny fired-sid set crosses to the driver. Dependent
     rules re-scan the input — acceptable because dynamic rules are rare and
-    pass 2 can also be narrowed by its own fast patterns."""
+    pass 2 can also be narrowed by its own fast patterns.
+
+    With ``out_dir``, each pass's alerts are persisted under the noop write
+    that fires its counts, and the union of the passes is written from
+    those caches (released by PipelineResult.unpersist)."""
     base = RuleSet(tuple(r for r in ruleset.rules if r.depends_on is None))
     dependents = [r for r in ruleset.rules if r.depends_on is not None]
-    res = run(spark, input_path, base, out_dir=None, fold_dims=fold_dims, match_mode=match_mode)
+
+    def run_pass(rs: RuleSet) -> PipelineResult:
+        alerts, read_counts = _observed_alerts(spark, input_path, rs, fold_dims, match_mode)
+        if out_dir is not None:
+            alerts.persist(StorageLevel.MEMORY_AND_DISK)
+        _noop(alerts)
+        return PipelineResult(alerts, *read_counts())
+
+    res = run_pass(base)
     if dependents:
         fired = set(res.sid_counts)
         enabled = tuple(r for r in dependents if r.depends_on in fired)
         if enabled:
-            res2 = run(
-                spark, input_path, RuleSet(enabled), out_dir=None,
-                fold_dims=fold_dims, match_mode=match_mode,
-            )
+            res2 = run_pass(RuleSet(enabled))
             for k, v in res2.sink_counts.items():
                 res.sink_counts[k] = res.sink_counts.get(k, 0) + v
             res.sid_counts.update(res2.sid_counts)
             union = res.alerts.unionByName(res2.alerts)
-            # keep both passes' cache handles reachable from the result
+            # keep both passes and their cache handles reachable from the result
             union._sagan_persisted = tuple(
-                inner
+                frame
                 for a in (res.alerts, res2.alerts)
-                for inner in getattr(a, "_sagan_persisted", ())
+                for frame in (a, *getattr(a, "_sagan_persisted", ()))
             )
             res.alerts = union
     if out_dir is not None:
-        alerts = res.alerts.persist(StorageLevel.MEMORY_AND_DISK)
-        res.alerts = alerts
-        route.write_sinks(alerts, out_dir)
+        route.write_sinks(res.alerts, out_dir)
     return res

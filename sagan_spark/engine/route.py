@@ -13,11 +13,15 @@ rule dim, then fans out per sink:
 - external program (S8): pipe_to_program streams formatted lines into a
   subprocess per partition.
 
-Write shape: one job per sink over the persisted alerts, each with its own
-repartition(conv_id) + sortWithinPartitions (stable per-file order, no
-global sort). That exchange also sizes the files, as persisted partitions
-are not AQE-coalesced: without it dense_sinks wrote 115 files, not 4, at
-32 shuffle partitions. Counts ride an Observation (pipeline.observe_alerts).
+Write shape: one pass. The alerts take one repartition(conv_id) +
+sortWithinPartitions (each conversation in one file per sink, stable
+per-file order, no global sort; AQE coalesces the exchange, which also
+sizes the files), one projection adds the formatted text line, and one
+executor-side Arrow writer (mapInArrow over pyarrow.fs) streams every
+sink's part file from that pass. Counts ride an Observation on the same
+action (pipeline.observe_alerts). An out_dir that pyarrow cannot open on
+executors takes Spark's own writers instead, one job per sink over the
+persisted alerts.
 """
 
 from __future__ import annotations
@@ -210,6 +214,19 @@ def _executor_fs_ok(out_dir: str) -> bool:
         return False
 
 
+def _arrow_fs(out_dir: str):
+    """``(pyarrow FileSystem, base path)`` of ``out_dir``: URIs through
+    ``FileSystem.from_uri``, bare paths on the local filesystem. Called
+    where the files are written, executors included."""
+    import pyarrow.fs as pafs
+
+    if "://" in out_dir or out_dir.startswith("file:/"):
+        fs, base = pafs.FileSystem.from_uri(out_dir)
+    else:
+        fs, base = pafs.LocalFileSystem(), out_dir
+    return fs, base.rstrip("/")
+
+
 def write_unified2_binary(
     alerts: DataFrame, out_dir: str, staging_dir: str | None = None
 ) -> None:
@@ -250,18 +267,14 @@ def write_unified2_binary(
     target = out_dir if direct else staging_dir
 
     def dump(rows) -> None:
-        import pyarrow.fs as pafs
         from pyspark import TaskContext
 
         pid = TaskContext.get().partitionId()
         buf = b"".join(r.rec for r in rows)
         if buf:
-            if "://" in target or target.startswith("file:/"):
-                fs, base = pafs.FileSystem.from_uri(target)
-            else:
-                fs, base = pafs.LocalFileSystem(), target
+            fs, base = _arrow_fs(target)
             fs.create_dir(base, recursive=True)  # idempotent across tasks
-            with fs.open_output_stream(f"{base.rstrip('/')}/part-{pid:05d}.u2") as f:
+            with fs.open_output_stream(f"{base}/part-{pid:05d}.u2") as f:
                 f.write(buf)
 
     recs.foreachPartition(dump)
@@ -310,24 +323,142 @@ def pipe_to_program(alerts: DataFrame, sink: str, argv: list[str]) -> int:
     return int(lines.rdd.mapPartitions(feed).sum())
 
 
+TEXT_SINKS = ("fast", "eve", "syslog")
+SINKS = (*TEXT_SINKS, "unified2")
+
+
+def _sink_line() -> F.Column:
+    """The text sinks' output line, newline included, as one CASE on sink;
+    null on unified2 rows."""
+    sink = F.col("sink")
+    line = (
+        F.when(sink == "fast", fast_line())
+        .when(sink == "eve", eve_json())
+        .when(sink == "syslog", syslog_line())
+    )
+    return F.concat(line, F.lit("\n"))
+
+
+def _part_name(sink: str, pid: int) -> str:
+    return f"part-{pid:05d}.{'parquet' if sink == 'unified2' else 'txt'}"
+
+
+def _part_writer(out_dir: str):
+    """The mapInArrow body of write_sinks: streams one task's sorted
+    batches into one part file per sink it meets (``part-<pid>.txt``, or
+    ``.parquet`` for unified2), never holding the partition. Each file is
+    written under ``<sink>/_temporary/`` and moved to its name once the
+    task has written everything, so a retried task replaces its file and
+    readers never see a partial one. Yields the sinks it wrote."""
+
+    def write(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        fs, base = _arrow_fs(out_dir)
+        pid = ctx.partitionId()
+        tmp = f"_temporary/{pid}-{ctx.taskAttemptId()}"
+        streams, u2 = {}, None
+        try:
+            for batch in batches:
+                for sink in SINKS:
+                    rows = batch.filter(pc.equal(batch.column("sink"), sink))
+                    if rows.num_rows == 0:
+                        continue
+                    if sink not in streams:
+                        fs.create_dir(f"{base}/{sink}/_temporary")
+                        streams[sink] = fs.open_output_stream(f"{base}/{sink}/{tmp}")
+                    if sink != "unified2":
+                        text = "".join(rows.column("_line").to_pylist())
+                        streams[sink].write(text.encode("utf-8"))
+                        continue
+                    rows = rows.drop_columns(["_line"])
+                    if u2 is None:
+                        u2 = pq.ParquetWriter(streams[sink], rows.schema)
+                    u2.write_batch(rows)
+        finally:
+            if u2 is not None:
+                u2.close()
+            for stream in streams.values():
+                stream.close()
+        for sink in streams:
+            fs.move(f"{base}/{sink}/{tmp}", f"{base}/{sink}/{_part_name(sink, pid)}")
+        yield pa.RecordBatch.from_pydict({"sink": list(streams)}, pa.schema([("sink", pa.string())]))
+
+    return write
+
+
 def write_sinks(alerts: DataFrame, out_dir: str) -> None:
-    """Fan-out write. Text sinks get sorted text files; unified2 gets
-    Parquet. One job per sink keeps formats heterogeneous without a custom
-    datasource; each filters the (persisted) alerts, then exchanges and
-    sorts its rows by conv_id (module docstring: why not one exchange)."""
-    for sink in ("fast", "eve", "syslog"):
+    """Write every sink to ``out_dir/<sink>`` in one pass: text sinks as
+    UTF-8 lines (``part-<pid>.txt``, byte-identical to Spark's text
+    writer), unified2 as Parquet with the alerts' columns. Rows are
+    exchanged by conv_id and sorted by (conv_id, turn_idx, sid), so each
+    conversation sits in one file per sink, in order.
+
+    Like ``mode("overwrite")``, the four sink directories are cleared
+    first; a sink with no rows gets one empty part file and stays
+    readable; each directory ends with ``_SUCCESS`` and no
+    ``_temporary``. One job, no persist: an Observation on ``alerts``
+    fires on it. An ``out_dir`` that pyarrow cannot open on executors
+    (``_executor_fs_ok``) is written by Spark's writers instead, one job
+    per sink over the persisted alerts."""
+    if not _executor_fs_ok(out_dir):
+        _write_sinks_spark(alerts, out_dir)
+        return
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    fs, base = _arrow_fs(out_dir)
+    for sink in SINKS:
+        if fs.get_file_info(f"{base}/{sink}").type != pafs.FileType.NotFound:
+            fs.delete_dir(f"{base}/{sink}")
+    rows = (
+        alerts.repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx", "sid")
+        .withColumn("_line", _sink_line())
+    )
+    written = {r.sink for r in rows.mapInArrow(_part_writer(out_dir), "sink string").collect()}
+    for sink in SINKS:
+        d = f"{base}/{sink}"
+        fs.create_dir(d)
+        if fs.get_file_info(f"{d}/_temporary").type != pafs.FileType.NotFound:
+            fs.delete_dir(f"{d}/_temporary")
+        if sink not in written:
+            with fs.open_output_stream(f"{d}/{_part_name(sink, 0)}") as f:
+                if sink == "unified2":  # Parquet readers need the schema
+                    pq.write_table(to_arrow_schema(alerts.schema).empty_table(), f)
+        fs.open_output_stream(f"{d}/_SUCCESS").close()
+
+
+def _write_sinks_spark(alerts: DataFrame, out_dir: str) -> None:
+    """write_sinks through Spark's own writers, for an ``out_dir`` that
+    only the JVM can open: one job per sink over the persisted alerts,
+    each with its own exchange and sort."""
+    from pyspark import StorageLevel
+
+    owned = not alerts.is_cached
+    alerts.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        for sink in TEXT_SINKS:
+            (
+                sink_lines(alerts, sink)
+                .repartition("conv_id")
+                .sortWithinPartitions("conv_id", "turn_idx", "sid")
+                .select("line")
+                .write.mode("overwrite")
+                .text(os.path.join(out_dir, sink))
+            )
         (
-            sink_lines(alerts, sink)
+            alerts.filter(F.col("sink") == "unified2")
             .repartition("conv_id")
             .sortWithinPartitions("conv_id", "turn_idx", "sid")
-            .select("line")
             .write.mode("overwrite")
-            .text(os.path.join(out_dir, sink))
+            .parquet(os.path.join(out_dir, "unified2"))
         )
-    (
-        alerts.filter(F.col("sink") == "unified2")
-        .repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "sid")
-        .write.mode("overwrite")
-        .parquet(os.path.join(out_dir, "unified2"))
-    )
+    finally:
+        if owned:
+            alerts.unpersist()

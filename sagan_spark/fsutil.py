@@ -8,8 +8,10 @@ do that, so these helpers go through the JVM Hadoop FileSystem API that
 Spark itself uses (same credentials, same scheme registry).
 
 Driver-side only: Python executors have no JVM gateway, so executor-side
-binary writes (the unified2 sink) use ``pyarrow.fs`` instead — see
-``engine/route.write_unified2_binary``.
+writes (every batch sink, and the unified2 binary records) use
+``pyarrow.fs`` instead — see ``engine/route._arrow_fs``. The batch sink
+writer also clears its sink dirs and writes ``_SUCCESS`` through that same
+pyarrow filesystem, so one filesystem layer sees the whole sink tree.
 
 Scope: run STATE (manifests, sidecars, sink trees) goes through here.
 Static job CONFIG (.rules files, sagan_spark.yaml) deliberately stays
