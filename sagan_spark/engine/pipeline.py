@@ -13,9 +13,10 @@ conv_id and every rule is native (resolve_match_mode). Fused plan shape
     → BroadcastHashJoin ×2 + BroadcastNestedLoopJoin (attach dims)
     → Exchange hashpartitioning(conv_id)         [the ONLY shuffle before sinks]
     → Sort within partitions → MapInPandas replay (stateless pass through)
-    → literal-map rule meta → Observation counts
-    → noop write, or route.write_sinks: Exchange(conv_id) → Sort → line
-      CASE → MapInArrow writer of every sink
+    → literal-map rule meta
+    → Observation counts → noop write, or (out_dir) route.sink_rows:
+      Exchange(conv_id) → Sort → line CASE → Observation counts
+      → route.write_sink_rows: MapInArrow writer of every sink
 
 Strictly linear: every stage has one consumer, so nothing recomputes and
 nothing needs a persist (counts ride the single action via the Observation
@@ -199,10 +200,12 @@ def _observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
     relation, and the CollectMetrics node inside that stage leaves the
     executed plan with it: the observation never fires and its JVM row
     cannot convert. That happens to the input observation on an all-empty
-    input, and to the alerts observation, under write_sinks' exchange,
-    whenever there are no alerts. The reader then aggregates the same
-    metrics over the unobserved ``df`` (an Observation is single-use): one
-    extra job, only on those degenerate runs."""
+    input, and would happen to an alerts observation under write_sinks'
+    exchange on every run with no alerts — so run observes the alerts
+    above that exchange (route.sink_rows), where the observation fires
+    with zero counts. The reader then aggregates the same metrics over the
+    unobserved ``df`` (an Observation is single-use): extra jobs, only on
+    those degenerate runs."""
     obs = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
 
     def read() -> dict:
@@ -274,27 +277,31 @@ def run(
     Per-sink and per-sid counts and the input metrics ride the action that
     runs anyway, via the Observation API: no count job, no second pass.
     Without ``out_dir`` that action is ONE noop write; with it, the one
-    pass of route.write_sinks that writes every sink. Nothing is persisted
-    (role-tracked rule sets aside: PipelineResult.unpersist).
+    pass of route.write_sinks that writes every sink, and the alert counts
+    are observed on the rows its writer consumes (route.sink_rows): above
+    the sink exchange, where AQE keeps the observation on a run with no
+    alerts. Nothing is persisted (role-tracked rule sets aside:
+    PipelineResult.unpersist).
     """
-    alerts, read_counts = _observed_alerts(spark, input_path, ruleset, fold_dims, match_mode)
+    alerts, read_input = _alerts(spark, input_path, ruleset, fold_dims, match_mode)
     if out_dir is None:
-        _noop(alerts)
+        observed, read_counts = observe_alerts(alerts, ruleset, read_input)
+        _noop(observed)
     else:
-        route.write_sinks(alerts, out_dir)
+        observed, read_counts = observe_alerts(route.sink_rows(alerts), ruleset, read_input)
+        route.write_sink_rows(observed, out_dir)
     return PipelineResult(alerts, *read_counts())
 
 
-def _observed_alerts(
+def _alerts(
     spark: SparkSession, input_path: str, ruleset: RuleSet, fold_dims: bool, match_mode: str
-) -> tuple[DataFrame, Callable[[], tuple[dict, dict, dict]]]:
-    """The alerts of ``input_path`` with the input and alert observations
-    attached, and the reader of their counts (observe_alerts)."""
+) -> tuple[DataFrame, Callable[[], dict]]:
+    """The alerts of ``input_path``, built over an input observation, and
+    that observation's reader (observe_input)."""
     df, read_input = observe_input(
         iomod.read_table(spark, input_path, columns=iomod.TRANSCRIPT_COLUMNS)
     )
-    alerts = build_alerts(spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode)
-    return observe_alerts(alerts, ruleset, read_input)
+    return build_alerts(spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode), read_input
 
 
 def _noop(df: DataFrame) -> None:
@@ -323,7 +330,8 @@ def run_dynamic(
     dependents = [r for r in ruleset.rules if r.depends_on is not None]
 
     def run_pass(rs: RuleSet) -> PipelineResult:
-        alerts, read_counts = _observed_alerts(spark, input_path, rs, fold_dims, match_mode)
+        alerts, read_input = _alerts(spark, input_path, rs, fold_dims, match_mode)
+        alerts, read_counts = observe_alerts(alerts, rs, read_input)
         if out_dir is not None:
             alerts.persist(StorageLevel.MEMORY_AND_DISK)
         _noop(alerts)

@@ -16,12 +16,14 @@ rule dim, then fans out per sink:
 Write shape: one pass. The alerts take one repartition(conv_id) +
 sortWithinPartitions (each conversation in one file per sink, stable
 per-file order, no global sort; AQE coalesces the exchange, which also
-sizes the files), one projection adds the formatted text line, and one
-executor-side Arrow writer (mapInArrow over pyarrow.fs) streams every
-sink's part file from that pass. Counts ride an Observation on the same
-action (pipeline.observe_alerts). An out_dir that pyarrow cannot open on
-executors takes Spark's own writers instead, one job per sink over the
-persisted alerts.
+sizes the files), one projection adds the formatted text line
+(sink_rows), and one executor-side Arrow writer (mapInArrow over
+pyarrow.fs) streams every sink's part file from that pass
+(write_sink_rows). The driver qualifies a bare out_dir through Hadoop
+first, so it lands where Spark's writers would put it. Counts ride an
+Observation on the same action, placed on sink_rows' output
+(pipeline.run). An out_dir that pyarrow cannot open on executors takes
+Spark's own writers instead, one job per sink over the persisted rows.
 """
 
 from __future__ import annotations
@@ -197,33 +199,31 @@ def unified2_record() -> F.Column:
     return F.concat(_u32(F.lit(7)), _u32(F.length(body)), body)
 
 
-def _executor_fs_ok(out_dir: str) -> bool:
-    """Can ``pyarrow.fs`` open this location (the only FS layer available
-    on Python executors, which have no JVM gateway)? Local paths and
-    ``file://``/``s3://`` yes; ``hdfs://`` only when libhdfs is loadable —
-    probed HERE on the driver (same wheel, same environment class) so the
-    staged fallback is chosen up front instead of failing task-side."""
+def _executor_fs_ok(uri: str) -> bool:
+    """Can ``pyarrow.fs`` open this qualified URI (fsutil.fs_qualify) — the
+    only FS layer available on Python executors, which have no JVM
+    gateway? ``file:`` and ``s3://`` yes; ``hdfs://`` only when libhdfs is
+    loadable — probed HERE on the driver (same wheel, same environment
+    class) so the Spark-side path is chosen up front instead of failing
+    task-side."""
     import pyarrow.fs as pafs
 
-    if "://" not in out_dir or out_dir.startswith("file:/"):
+    if uri.startswith("file:"):
         return True
     try:
-        pafs.FileSystem.from_uri(out_dir)
+        pafs.FileSystem.from_uri(uri)
         return True
     except Exception:
         return False
 
 
-def _arrow_fs(out_dir: str):
-    """``(pyarrow FileSystem, base path)`` of ``out_dir``: URIs through
-    ``FileSystem.from_uri``, bare paths on the local filesystem. Called
-    where the files are written, executors included."""
+def _arrow_fs(uri: str):
+    """``(pyarrow FileSystem, base path)`` of a qualified URI
+    (fsutil.fs_qualify). Called where the files are written, executors
+    included."""
     import pyarrow.fs as pafs
 
-    if "://" in out_dir or out_dir.startswith("file:/"):
-        fs, base = pafs.FileSystem.from_uri(out_dir)
-    else:
-        fs, base = pafs.LocalFileSystem(), out_dir
+    fs, base = pafs.FileSystem.from_uri(uri)
     return fs, base.rstrip("/")
 
 
@@ -236,9 +236,10 @@ def write_unified2_binary(
 
     The per-partition write runs on EXECUTORS, where there is no JVM
     gateway for the Hadoop FileSystem API — portability comes from
-    ``pyarrow.fs`` instead: ``file://`` and bare paths via
-    LocalFileSystem, ``s3://`` via pyarrow's bundled S3 support (same
-    library the Arrow parquet path already ships).
+    ``pyarrow.fs`` instead: ``file:`` via LocalFileSystem, ``s3://`` via
+    pyarrow's bundled S3 support (same library the Arrow parquet path
+    already ships). Bare paths are first qualified on the driver as
+    Spark's writers would (fsutil.fs_qualify).
 
     Schemes pyarrow cannot open (``hdfs://`` without libhdfs on the
     executors) take the STAGED path: executors write the same part files
@@ -248,14 +249,17 @@ def write_unified2_binary(
     support, atomic temp+rename per file via fsutil) and deletes the
     staging tree. Alert-sink volume is ≪1% of input, so the driver-side
     promotion copy is bounded; the direct path remains zero-copy."""
+    from .. import fsutil
+
     spark = alerts.sparkSession
+    uri = fsutil.fs_qualify(spark, out_dir)
     recs = (
         alerts.filter(F.col("sink") == "unified2")
         .repartition("conv_id")
         .sortWithinPartitions("conv_id", "turn_idx", "sid")
         .select(unified2_record().alias("rec"))
     )
-    direct = _executor_fs_ok(out_dir)
+    direct = _executor_fs_ok(uri)
     if not direct and staging_dir is None:
         raise ValueError(
             f"unified2 out_dir {out_dir!r} is not reachable from Python "
@@ -264,7 +268,7 @@ def write_unified2_binary(
             "pyarrow-reachable location (file:// NFS mount, s3://) and the "
             "driver will promote the staged files."
         )
-    target = out_dir if direct else staging_dir
+    target = uri if direct else fsutil.fs_qualify(spark, staging_dir)
 
     def dump(rows) -> None:
         from pyspark import TaskContext
@@ -279,18 +283,16 @@ def write_unified2_binary(
 
     recs.foreachPartition(dump)
     if not direct:
-        from .. import fsutil
-
         try:
             staged = fsutil.fs_list_files(spark, staging_dir, suffix=".u2")
         except FileNotFoundError:
             staged = []  # zero unified2 alerts → nothing was staged
-        for uri in staged:
-            name = uri.rstrip("/").rsplit("/", 1)[-1]
+        for src in staged:
+            name = src.rstrip("/").rsplit("/", 1)[-1]
             fsutil.fs_write_bytes(
                 spark,
                 out_dir.rstrip("/") + "/" + name,
-                fsutil.fs_read_bytes(spark, uri),
+                fsutil.fs_read_bytes(spark, src),
             )
         fsutil.fs_delete(spark, staging_dir)
 
@@ -323,20 +325,15 @@ def pipe_to_program(alerts: DataFrame, sink: str, argv: list[str]) -> int:
     return int(lines.rdd.mapPartitions(feed).sum())
 
 
-TEXT_SINKS = ("fast", "eve", "syslog")
+TEXT_SINKS = tuple(SINK_FORMATTERS)
 SINKS = (*TEXT_SINKS, "unified2")
 
 
 def _sink_line() -> F.Column:
-    """The text sinks' output line, newline included, as one CASE on sink;
-    null on unified2 rows."""
+    """The text sinks' output line as one CASE on sink; null on unified2
+    rows."""
     sink = F.col("sink")
-    line = (
-        F.when(sink == "fast", fast_line())
-        .when(sink == "eve", eve_json())
-        .when(sink == "syslog", syslog_line())
-    )
-    return F.concat(line, F.lit("\n"))
+    return F.coalesce(*[F.when(sink == s, fmt()) for s, fmt in SINK_FORMATTERS.items()])
 
 
 def _part_name(sink: str, pid: int) -> str:
@@ -372,7 +369,7 @@ def _part_writer(out_dir: str):
                         fs.create_dir(f"{base}/{sink}/_temporary")
                         streams[sink] = fs.open_output_stream(f"{base}/{sink}/{tmp}")
                     if sink != "unified2":
-                        text = "".join(rows.column("_line").to_pylist())
+                        text = "\n".join(rows.column("_line").to_pylist()) + "\n"
                         streams[sink].write(text.encode("utf-8"))
                         continue
                     rows = rows.drop_columns(["_line"])
@@ -391,6 +388,19 @@ def _part_writer(out_dir: str):
     return write
 
 
+def sink_rows(alerts: DataFrame) -> DataFrame:
+    """The rows write_sink_rows writes: ``alerts`` exchanged by conv_id,
+    sorted by (conv_id, turn_idx, sid) within partitions, with the text
+    sinks' line as ``_line``. An Observation on this frame sits above the
+    exchange, where AQE keeps it even when there are no rows
+    (pipeline.run)."""
+    return (
+        alerts.repartition("conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx", "sid")
+        .withColumn("_line", _sink_line())
+    )
+
+
 def write_sinks(alerts: DataFrame, out_dir: str) -> None:
     """Write every sink to ``out_dir/<sink>`` in one pass: text sinks as
     UTF-8 lines (``part-<pid>.txt``, byte-identical to Spark's text
@@ -401,27 +411,30 @@ def write_sinks(alerts: DataFrame, out_dir: str) -> None:
     Like ``mode("overwrite")``, the four sink directories are cleared
     first; a sink with no rows gets one empty part file and stays
     readable; each directory ends with ``_SUCCESS`` and no
-    ``_temporary``. One job, no persist: an Observation on ``alerts``
-    fires on it. An ``out_dir`` that pyarrow cannot open on executors
-    (``_executor_fs_ok``) is written by Spark's writers instead, one job
-    per sink over the persisted alerts."""
-    if not _executor_fs_ok(out_dir):
-        _write_sinks_spark(alerts, out_dir)
-        return
+    ``_temporary``. A bare ``out_dir`` resolves as it does for Spark's
+    writers (fsutil.fs_qualify). One job, no persist. An ``out_dir`` that
+    pyarrow cannot open on executors (``_executor_fs_ok``) is written by
+    Spark's writers instead, one job per sink over the persisted rows."""
+    write_sink_rows(sink_rows(alerts), out_dir)
+
+
+def write_sink_rows(rows: DataFrame, out_dir: str) -> None:
+    """write_sinks for rows already shaped by ``sink_rows``."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    fs, base = _arrow_fs(out_dir)
+    from .. import fsutil
+
+    target = fsutil.fs_qualify(rows.sparkSession, out_dir)
+    if not _executor_fs_ok(target):
+        _write_sinks_spark(rows, out_dir)
+        return
+    fs, base = _arrow_fs(target)
     for sink in SINKS:
         if fs.get_file_info(f"{base}/{sink}").type != pafs.FileType.NotFound:
             fs.delete_dir(f"{base}/{sink}")
-    rows = (
-        alerts.repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "sid")
-        .withColumn("_line", _sink_line())
-    )
-    written = {r.sink for r in rows.mapInArrow(_part_writer(out_dir), "sink string").collect()}
+    written = {r.sink for r in rows.mapInArrow(_part_writer(target), "sink string").collect()}
     for sink in SINKS:
         d = f"{base}/{sink}"
         fs.create_dir(d)
@@ -430,35 +443,30 @@ def write_sinks(alerts: DataFrame, out_dir: str) -> None:
         if sink not in written:
             with fs.open_output_stream(f"{d}/{_part_name(sink, 0)}") as f:
                 if sink == "unified2":  # Parquet readers need the schema
-                    pq.write_table(to_arrow_schema(alerts.schema).empty_table(), f)
+                    pq.write_table(to_arrow_schema(rows.drop("_line").schema).empty_table(), f)
         fs.open_output_stream(f"{d}/_SUCCESS").close()
 
 
-def _write_sinks_spark(alerts: DataFrame, out_dir: str) -> None:
-    """write_sinks through Spark's own writers, for an ``out_dir`` that
-    only the JVM can open: one job per sink over the persisted alerts,
-    each with its own exchange and sort."""
+def _write_sinks_spark(rows: DataFrame, out_dir: str) -> None:
+    """write_sink_rows through Spark's own writers, for an ``out_dir`` that
+    only the JVM can open: one job per sink over the persisted rows, which
+    are already exchanged by conv_id and sorted."""
     from pyspark import StorageLevel
 
-    owned = not alerts.is_cached
-    alerts.persist(StorageLevel.MEMORY_AND_DISK)
+    rows.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         for sink in TEXT_SINKS:
             (
-                sink_lines(alerts, sink)
-                .repartition("conv_id")
-                .sortWithinPartitions("conv_id", "turn_idx", "sid")
-                .select("line")
+                rows.filter(F.col("sink") == sink)
+                .select("_line")
                 .write.mode("overwrite")
                 .text(os.path.join(out_dir, sink))
             )
         (
-            alerts.filter(F.col("sink") == "unified2")
-            .repartition("conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx", "sid")
+            rows.filter(F.col("sink") == "unified2")
+            .drop("_line")
             .write.mode("overwrite")
             .parquet(os.path.join(out_dir, "unified2"))
         )
     finally:
-        if owned:
-            alerts.unpersist()
+        rows.unpersist()

@@ -9,9 +9,11 @@ Spark itself uses (same credentials, same scheme registry).
 
 Driver-side only: Python executors have no JVM gateway, so executor-side
 writes (every batch sink, and the unified2 binary records) use
-``pyarrow.fs`` instead — see ``engine/route._arrow_fs``. The batch sink
-writer also clears its sink dirs and writes ``_SUCCESS`` through that same
-pyarrow filesystem, so one filesystem layer sees the whole sink tree.
+``pyarrow.fs`` instead — see ``engine/route._arrow_fs``. The driver first
+qualifies their ``out_dir`` here (``fs_qualify``), so a bare path lands
+where Spark's writers would put it. The batch sink writer also clears its
+sink dirs and writes ``_SUCCESS`` through that same pyarrow filesystem, so
+one filesystem layer sees the whole sink tree.
 
 Scope: run STATE (manifests, sidecars, sink trees) goes through here.
 Static job CONFIG (.rules files, sagan_spark.yaml) deliberately stays
@@ -34,6 +36,20 @@ def _fs(spark, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return jvm, hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath
+
+
+def fs_qualify(spark, path: str) -> str:
+    """``path`` as the URI Spark's own readers and writers resolve it to.
+    A path without a scheme is qualified against Hadoop's default
+    filesystem and working directory (``file:/…`` in local mode,
+    ``hdfs://…`` where fs.defaultFS is HDFS); a path with a scheme is
+    returned unchanged. Executors writing through ``pyarrow.fs`` need
+    this: they cannot see fs.defaultFS, and their working directory is
+    not the driver's."""
+    if spark._jvm.org.apache.hadoop.fs.Path(path).toUri().getScheme() is not None:
+        return path  # s3:// may have no Hadoop filesystem at all
+    _, fs, hpath = _fs(spark, path)
+    return str(fs.makeQualified(hpath).toUri().toString())
 
 
 def fs_write_text(spark, path: str, content: str) -> None:

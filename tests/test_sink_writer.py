@@ -1,6 +1,6 @@
 """route.write_sinks' one-pass writer: file layout, per-file order,
-unified2 schema, overwrite semantics, the Spark-writer fallback and the
-job count of run(out_dir=...)."""
+unified2 schema, overwrite semantics, where a bare out_dir lands, the
+Spark-writer fallback and the job count of run(out_dir=...)."""
 
 from __future__ import annotations
 
@@ -12,6 +12,7 @@ import uuid
 
 import pytest
 
+from sagan_spark import fsutil
 from sagan_spark.engine import pipeline, route
 from sagan_spark.rules.canonical import CANONICAL
 from sagan_spark.rules.model import AfterSpec, ContentSpec, Rule, RuleSet
@@ -53,9 +54,9 @@ def _write(spark, tiny_path, ruleset, out):
 
 
 def _line_keys(alerts) -> dict:
-    """Text line → its alert's (conv_id, turn_idx, sid)."""
+    """Text line, newline included → its alert's (conv_id, turn_idx, sid)."""
     lines = alerts.select("conv_id", "turn_idx", "sid", route._sink_line().alias("line"))
-    return {r.line: (r.conv_id, r.turn_idx, r.sid) for r in lines.collect() if r.line is not None}
+    return {r.line + "\n": (r.conv_id, r.turn_idx, r.sid) for r in lines.collect() if r.line is not None}
 
 
 @pytest.fixture(scope="module")
@@ -121,14 +122,16 @@ def test_unified2_parquet_has_alert_schema_and_rows(spark, canonical):
     assert len(rows) == res.sink_counts["unified2"]
 
 
-def test_spark_writer_fallback_writes_the_same(spark, canonical, tmp_path, monkeypatch):
+def test_spark_writer_fallback_writes_the_same(spark, tiny_path, canonical, tmp_path, monkeypatch):
     """An out_dir executors cannot open takes Spark's own writers: the same
-    lines byte for byte and the same unified2 rows."""
+    counts, the same lines byte for byte and the same unified2 rows."""
     import pyarrow.parquet as pq
 
     res, out, _, _ = canonical
     monkeypatch.setattr(route, "_executor_fs_ok", lambda _: False)
-    route.write_sinks(res.alerts, str(tmp_path))
+    res2, _ = _write(spark, tiny_path, CANONICAL, str(tmp_path))
+    res2.unpersist()
+    assert (res2.sink_counts, res2.sid_counts) == (res.sink_counts, res.sid_counts)
     for sink in route.TEXT_SINKS:
         a, b = (
             sorted(line for f in glob.glob(os.path.join(d, sink, "part-*")) for line in _lines(f))
@@ -141,6 +144,20 @@ def test_spark_writer_fallback_writes_the_same(spark, canonical, tmp_path, monke
         for d in (out, str(tmp_path))
     )
     assert a == b and len(a) == res.sink_counts["unified2"]
+
+
+def test_run_without_alerts_counts_zero_from_the_write(spark, tiny_path, tmp_path):
+    """With no alerts the sink exchange is empty and AQE drops its stage;
+    the alert counts are observed above it, so they still fire (zeros)
+    and the plan is not re-run to count them."""
+    never = RuleSet((Rule(sid=1, msg="never", sink="fast", contents=(ContentSpec("zqxj-no-such-text"),)),))
+    res, jobs = _write(spark, tiny_path, never, str(tmp_path))
+    assert (res.sink_counts, res.sid_counts, res.metrics["alerts"]) == ({}, {}, 0)
+    assert res.metrics["rows_in"] > 0
+    assert 0 < jobs <= 8
+    for sink in route.TEXT_SINKS:
+        assert spark.read.text(str(tmp_path / sink)).count() == 0
+    assert spark.read.parquet(str(tmp_path / "unified2")).count() == 0
 
 
 _SCHEMA = (
@@ -195,3 +212,29 @@ def test_empty_sink_stays_readable(spark, tmp_path):
     u2 = spark.read.parquet(os.path.join(out, "unified2"))
     assert u2.count() == 0
     assert [(f.name, f.dataType) for f in u2.schema] == [(f.name, f.dataType) for f in alerts.schema]
+
+
+def test_relative_out_dir_resolves_like_spark_writers(spark, tmp_path, monkeypatch):
+    """A relative out_dir lands where Spark's own writers and readers put
+    it, against Hadoop's working directory: driver-side files and the
+    executors' part files alike, whatever the Python driver's cwd."""
+    cwd = spark._jvm.java.lang.System.getProperty("user.dir")
+    rel = os.path.relpath(str(tmp_path / "out"), cwd)
+    assert fsutil.fs_qualify(spark, rel).startswith("file:/")
+    monkeypatch.chdir(tmp_path)
+    route.write_sinks(_alerts(spark, route.SINKS), rel)
+    for sink in route.SINKS:
+        assert "_SUCCESS" in os.listdir(tmp_path / "out" / sink), sink
+    assert not os.path.exists(tmp_path / rel)
+    assert spark.read.text(os.path.join(rel, "fast")).count() == 3
+
+
+def test_out_dir_qualified_to_hdfs_takes_spark_writers(spark, monkeypatch):
+    """A bare out_dir that Hadoop qualifies to hdfs:// (fs.defaultFS on a
+    cluster) goes to Spark's writers when pyarrow has no libhdfs, never to
+    the executors' local disks."""
+    monkeypatch.setattr(fsutil, "fs_qualify", lambda _, p: "hdfs://localhost:9" + p)
+    calls = []
+    monkeypatch.setattr(route, "_write_sinks_spark", lambda rows, out: calls.append(out))
+    route.write_sinks(_alerts(spark, route.SINKS), "/data/alerts")
+    assert calls == ["/data/alerts"]
