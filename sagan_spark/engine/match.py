@@ -129,7 +129,7 @@ def _fold_enrich(rule: Rule, dims: _FoldedDims):
 def _rule_mask(rule: Rule, pdf: pd.DataFrame, folded) -> np.ndarray:
     """Vectorized candidate mask for one rule over one Arrow batch.
 
-    Null semantics (identical to the native Column path and the oracle):
+    Null semantics (identical to the native SQL path and the oracle):
     null role/tool never satisfy a positive membership test; null text
     fails any rule that has a text predicate."""
     n = len(pdf)
@@ -322,17 +322,95 @@ def make_matcher(
 
 
 # ---------------------------------------------------------------------------
-# Native (pure-Column) rule compilation — the Spark-first fast path.
+# Native rule compilation — the Spark-first fast path.
 #
 # A rule is native-compilable when every predicate has an exactly-equivalent
-# Column expression: role/tool sets, folded enrich conditions, alert_time,
-# ABSOLUTE contents (offset/depth/nocase/negated — char-based substring and
-# ASCII lowercase are identical in Python and the JVM), '%sagan%'-template
-# meta_contents (alternation of literals → OR of contains), and hash
-# extraction ([a-f0-9]{N} with \b — identical in Java and Python regex).
-# pcre, grok (named-group dialects differ), relative content chains and
-# field conditions stay on the vectorized UDF path.
+# Spark SQL expression: role/tool sets, folded enrich conditions,
+# alert_time, ABSOLUTE contents (offset/depth/nocase/negated — char-based
+# substring and ASCII lowercase are identical in Python and the JVM),
+# '%sagan%'-template meta_contents (alternation of literals → OR of
+# contains), and hash extraction ([a-f0-9]{N} with \b — identical in Java
+# and Python regex). pcre, grok (named-group dialects differ), relative
+# content chains and field conditions stay on the vectorized UDF path.
+#
+# The rule set compiles to Spark SQL text in pure Python, and each
+# projection reaches the JVM as one F.expr / filter string: one py4j call,
+# where building the same tree Column by Column took one per node
+# (thousands per run). Chains nest left-deep (_chain), since the parser
+# balances a flat ``a AND b AND c AND d`` into another tree and plan, and
+# every literal goes through _sql_str.
 # ---------------------------------------------------------------------------
+
+# Spark's parser keeps backslashes in string literals under this setting,
+# so _sql_str's escapes would reach the JVM verbatim and match wrong text.
+_RAW_LITERALS_CONF = "spark.sql.parser.escapedStringLiterals"
+
+
+def check_sql_literals(spark) -> None:
+    """Raise unless ``spark`` parses string literals the way _sql_str
+    escapes them (every rendered expression depends on it)."""
+    if spark.conf.get(_RAW_LITERALS_CONF, "false").strip().lower() == "true":
+        raise ValueError(
+            f"{_RAW_LITERALS_CONF}=true: the engine renders its rule "
+            "expressions as Spark SQL text with escaped string literals, "
+            "which this setting would read verbatim; unset it for the session"
+        )
+
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Always single-quoted; ``\\`` is
+    escaped before ``'`` (the parser unescapes both), and ``${`` becomes
+    ``$\\{`` so the parser's ``${var}`` substitution leaves it alone (the
+    parser reads ``\\{`` back as ``{``)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("${", "$\\{") + "'"
+
+
+def _sql_lit(v: int | str) -> str:
+    """A rule field as a Spark SQL literal, typed as ``F.lit`` types it
+    (an integer is INT, or BIGINT past 32 bits)."""
+    if isinstance(v, str):
+        return _sql_str(v)
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    raise TypeError(f"no SQL literal for {v!r}")
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (...)``; ``false`` for no values — SQL has no empty IN
+    list, and an empty ``isin`` is false, NULL ``col`` included."""
+    values = list(values)
+    if not values:
+        return "false"
+    return f"({col} IN ({', '.join(_sql_lit(v) for v in values)}))"
+
+
+def _between(col: str, lo: int, hi: int) -> str:
+    return f"(({col} >= {int(lo)}) AND ({col} <= {int(hi)}))"
+
+
+def _contains(hay: str, needle: str) -> str:
+    return f"contains({hay}, {_sql_str(needle)})"
+
+
+# Longest chain _chain nests: each level is a parser recursion, and a few
+# hundred exceed Spark's parser ("too complex to parse").
+_NEST_MAX = 64
+
+
+def _chain(op: str, terms: list[str], empty: str) -> str:
+    """``terms`` joined by ``op`` (AND / OR), nested left-deep
+    ``((a op b) op c)``, or ``empty`` when there are none. The parser
+    would balance a flat ``a op b op c op d`` into ``(a op b) op (c op
+    d)``: the same predicate in another plan. Past _NEST_MAX terms that
+    flat chain is used."""
+    if not terms:
+        return empty
+    if len(terms) > _NEST_MAX:
+        return "(" + f" {op} ".join(terms) + ")"
+    out = terms[0]
+    for t in terms[1:]:
+        out = f"({out} {op} {t})"
+    return out
 
 
 def _ascii(s: str) -> bool:
@@ -463,35 +541,37 @@ def native_compilable(rule: Rule) -> bool:
     return True
 
 
-def _native_cond(rule: Rule, folded, lct: F.Column | None = None) -> F.Column:
-    """``lct``: optional pre-computed ``lower(text)`` column. The fused/
-    hybrid projections evaluate MANY rules in one Project; threading one
-    shared lowered column through them evaluates lower() once per row
-    instead of once per nocase predicate (Catalyst's subexpression
-    elimination does not reach inside the per-rule when() branches)."""
-    low = (lambda: lct) if lct is not None else (lambda: F.lower(F.col("text")))
-    cond = F.lit(True)
+_TEXT = "`text`"
+_LOWER_TEXT = "lower(`text`)"
+
+
+def _native_cond(rule: Rule, folded, low: str = _LOWER_TEXT) -> str:
+    """The rule's predicate as Spark SQL text.
+
+    ``low``: the SQL of ``lower(text)``. The fused/hybrid projections
+    evaluate MANY rules in one Project and pass their shared `_lct`
+    column: Catalyst's subexpression elimination does not reach inside the
+    per-rule CASE branches, so a shared column evaluates lower() once per
+    row instead of once per nocase predicate."""
+    terms: list[str] = []
     if rule.roles is not None:
-        m = F.col("role").isin(list(rule.roles))
-        cond = cond & (~m if rule.roles_negated else m)
+        m = _sql_in("`role`", rule.roles)
+        terms.append(f"(NOT {m})" if rule.roles_negated else m)
     if rule.tools is not None:
-        m = F.col("tool").isin(list(rule.tools))
-        cond = cond & (~m if rule.tools_negated else m)
+        m = _sql_in("`tool`", rule.tools)
+        terms.append(f"(NOT {m})" if rule.tools_negated else m)
     roles_ok, tools_ok, intervals = folded
     if roles_ok is not None:
-        cond = cond & F.col("role").isin(sorted(roles_ok))
+        terms.append(_sql_in("`role`", sorted(roles_ok)))
     if tools_ok is not None:
-        cond = cond & F.col("tool").isin(sorted(tools_ok))
+        terms.append(_sql_in("`tool`", sorted(tools_ok)))
     if intervals is not None:
-        iv = F.lit(False)
-        for lo, hi in intervals:
-            iv = iv | (F.col("risk_key").between(int(lo), int(hi)))
-        cond = cond & iv
+        terms.append(_chain("OR", [_between("`risk_key`", lo, hi) for lo, hi in intervals], "false"))
     at = rule.alert_time
     if at is not None:
-        cond = cond & F.col("hour").between(at.hour_lo, at.hour_hi)
+        terms.append(_between("`hour`", at.hour_lo, at.hour_hi))
         if at.days is not None:
-            cond = cond & F.col("dow").isin(list(at.days))
+            terms.append(_sql_in("`dow`", at.days))
     for c in rule.contents:
         if c.offset is not None or c.depth is not None:
             lo = c.offset or 0
@@ -499,90 +579,83 @@ def _native_cond(rule: Rule, folded, lct: F.Column | None = None) -> F.Column:
             # substring-then-lower (NOT the shared lowered column):
             # lower() may change string length for some code points, so
             # the window must be taken on the original text
-            hay = F.substring(F.col("text"), lo + 1, ln)
+            hay = f"substring({_TEXT}, {lo + 1}, {ln})"
             if c.nocase:
-                hay = F.lower(hay)
+                hay = f"lower({hay})"
         else:
-            hay = low() if c.nocase else F.col("text")
-        needle = c.pattern.lower() if c.nocase else c.pattern
-        m = hay.contains(F.lit(needle))
-        cond = cond & (~m if c.negated else m)
+            hay = low if c.nocase else _TEXT
+        m = _contains(hay, c.pattern.lower() if c.nocase else c.pattern)
+        terms.append(f"(NOT {m})" if c.negated else m)
     for p in rule.pcres:
         if _re.escape(p.pattern) == p.pattern and "s" not in p.flags and "m" not in p.flags:
             # literal-only pattern: substring scan beats per-row regex
             if "i" in p.flags:
-                m = low().contains(F.lit(p.pattern.lower()))
+                m = _contains(low, p.pattern.lower())
             else:
-                m = F.col("text").contains(F.lit(p.pattern))
+                m = _contains(_TEXT, p.pattern)
         else:
             flags = "".join(ch for ch in p.flags if ch in "ism")
-            pat = (f"(?{flags})" if flags else "") + p.pattern
-            m = F.col("text").rlike(pat)
+            m = f"({_TEXT} RLIKE {_sql_str((f'(?{flags})' if flags else '') + p.pattern)})"
             # guard the regex with its required literal (when one can be
             # derived): codegen's lazy AND skips the per-row regex on the
             # (typically vast) majority of rows that can't match
             req = _required_literal(p.pattern)
             if req is not None and _ascii(req):
                 if "i" in p.flags:
-                    m = low().contains(F.lit(req.lower())) & m
+                    m = f"({_contains(low, req.lower())} AND {m})"
                 else:
-                    m = F.col("text").contains(F.lit(req)) & m
-        cond = cond & (~m if p.negated else m)
+                    m = f"({_contains(_TEXT, req)} AND {m})"
+        terms.append(f"(NOT {m})" if p.negated else m)
     for mc in rule.meta_contents:
-        hay = low() if mc.nocase else F.col("text")
-        anym = F.lit(False)
-        for v in mc.values:
-            anym = anym | hay.contains(F.lit(v.lower() if mc.nocase else v))
-        cond = cond & anym
+        hay = low if mc.nocase else _TEXT
+        terms.append(
+            _chain("OR", [_contains(hay, v.lower() if mc.nocase else v) for v in mc.values], "false")
+        )
     for h in rule.hashes:
         if h.required:
-            cond = cond & F.col("text").rlike(h.regex)
+            terms.append(f"({_TEXT} RLIKE {_sql_str(h.regex)})")
     for tk in rule.tokens:
         if tk.required:
-            cond = cond & (
-                F.size(F.regexp_extract_all("text", F.lit(tk.regex), tk.group))
-                >= tk.position
+            terms.append(
+                f"(size(regexp_extract_all({_TEXT}, {_sql_str(tk.regex)}, {tk.group})) >= {tk.position})"
             )
-    return cond
+    return _chain("AND", terms, "true")
 
 
-def _native_extracted(rule: Rule) -> F.Column:
-    entries: list[F.Column] = []
+def _native_extracted(rule: Rule) -> str:
+    """The rule's ``extracted`` map as Spark SQL text."""
+    entries: list[str] = []
     for h in rule.hashes:
-        entries += [F.lit(h.kind), F.regexp_extract("text", h.regex, 0)]
+        entries += [_sql_str(h.kind), f"regexp_extract({_TEXT}, {_sql_str(h.regex)}, 0)"]
     for tk in rule.tokens:
-        val = F.try_element_at(
-            F.regexp_extract_all("text", F.lit(tk.regex), tk.group), F.lit(tk.position)
+        val = (
+            f"try_element_at(regexp_extract_all({_TEXT}, {_sql_str(tk.regex)}, {tk.group}), "
+            f"{tk.position})"
         )
         if tk.kind == "proto":
-            val = F.lower(val)
-        entries += [F.lit(tk.field), val]
+            val = f"lower({val})"
+        entries += [_sql_str(tk.field), val]
     for fname, default in rule.defaults:
-        entries += [F.lit(fname), F.lit(default)]
+        entries += [_sql_str(fname), _sql_lit(default)]
     if not entries:
-        return F.create_map().cast("map<string,string>")
-    return F.map_from_arrays(
-        F.array(*entries[0::2]), F.array(*entries[1::2])
-    )
+        return "CAST(map() AS MAP<STRING, STRING>)"
+    return f"map_from_arrays(array({', '.join(entries[0::2])}), array({', '.join(entries[1::2])}))"
 
 
-def _coarse_prefilter(
-    rules: list[Rule], folded: dict, lct: F.Column | None = None
-) -> F.Column:
-    """OR of per-rule cheap Spark-native conditions — the fast-pattern
-    prune that keeps non-candidate rows out of the Arrow crossing.
-    ``lct``: shared pre-computed lower(text), see _native_cond."""
-    low = (lambda: lct) if lct is not None else (lambda: F.lower(F.col("text")))
-    any_cond = F.lit(False)
+def _coarse_prefilter(rules: list[Rule], folded: dict, low: str = _LOWER_TEXT) -> str:
+    """OR of per-rule cheap Spark-native conditions, as Spark SQL text —
+    the fast-pattern prune that keeps non-candidate rows out of the Arrow
+    crossing. ``low``: the shared lower(text), see _native_cond."""
+    conds: list[str] = []
     for rule in rules:
-        cond = F.lit(True)
+        terms: list[str] = []
         if rule.roles is not None and not rule.roles_negated:
-            cond = cond & F.col("role").isin(list(rule.roles))
+            terms.append(_sql_in("`role`", rule.roles))
         roles_ok, tools_ok, _ = folded[rule.sid]
         if roles_ok is not None:
-            cond = cond & F.col("role").isin(sorted(roles_ok))
+            terms.append(_sql_in("`role`", sorted(roles_ok)))
         if tools_ok is not None:
-            cond = cond & F.col("tool").isin(sorted(tools_ok))
+            terms.append(_sql_in("`tool`", sorted(tools_ok)))
         fp = rule.fast_pattern
         if fp is None:
             for c in rule.contents:
@@ -596,10 +669,9 @@ def _coarse_prefilter(
                     break
         if fp is not None:
             lit_, nocase = fp
-            hay = low() if nocase else F.col("text")
-            cond = cond & hay.contains(F.lit(lit_.lower() if nocase else lit_))
-        any_cond = any_cond | cond
-    return any_cond
+            terms.append(_contains(low if nocase else _TEXT, lit_.lower() if nocase else lit_))
+        conds.append(_chain("AND", terms, "true"))
+    return _chain("OR", conds, "false")
 
 
 def _prepare(df: DataFrame) -> DataFrame:
@@ -680,7 +752,7 @@ def run_match(
     """parse+match stage: input transcript DF → one row per (turn, sid).
 
     mode="fused" (default): ONE scan. Native-compilable rules are still
-    evaluated as pure Column expressions (whole-stage codegen) — but into
+    evaluated as JVM expressions (whole-stage codegen) — but into
     a ``_nsids`` sid-array projection instead of a separate branch; rows
     with no native hit AND no UDF fast-pattern candidate are filtered
     JVM-side, and only the surviving candidates cross Arrow once, where
@@ -702,6 +774,7 @@ def run_match(
         # an unknown mode silently becoming a two-scan plan is the kind of
         # default drift this engine refuses.
         raise ValueError(f"unknown match mode {mode!r}")
+    check_sql_literals(df.sparkSession)
     dims = _get_dims(fold_dims)
     prepared = _prepare(df)
     folded = {r.sid: _fold_enrich(r, dims) for r in ruleset.rules}
@@ -709,64 +782,44 @@ def run_match(
     udf_rules = [r for r in ruleset.rules if not native_compilable(r)]
 
     # one shared lower(text) column for every nocase predicate and derived
-    # rlike guard: the per-rule when() branches defeat Catalyst's
+    # rlike guard: the per-rule CASE branches defeat Catalyst's
     # subexpression elimination, so without this each nocase rule pays its
     # own O(len) lower + allocation per row. A separate Project keeps it a
     # single evaluation (CollapseProject won't inline a non-cheap alias
     # referenced more than once); it is pruned when no rule uses it and
     # dropped before the Arrow crossing either way.
-    _lct = F.col("_lct")
+    with_lct = prepared.withColumn("_lct", F.expr(_LOWER_TEXT))
+    lct = "`_lct`"
 
     if mode == "fused":
-        nsids = F.array_compact(
-            F.array(
-                *[
-                    F.when(_native_cond(r, folded[r.sid], lct=_lct), F.lit(r.sid).cast("long"))
-                    for r in native_rules
-                ]
+        nsids = (
+            "array_compact(array("
+            + ", ".join(
+                f"CASE WHEN {_native_cond(r, folded[r.sid], lct)} THEN CAST({r.sid} AS BIGINT) END"
+                for r in native_rules
             )
-        ) if native_rules else F.array().cast("array<long>")
-        cand = F.size(F.col("_nsids")) > 0
-        if udf_rules:
-            cand = cand | _coarse_prefilter(udf_rules, folded, lct=_lct)
-        fused_in = (
-            prepared.withColumn("_lct", F.lower(F.col("text")))
-            .withColumn("_nsids", nsids)
-            .filter(cand)
-            .drop("_lct")
+            + "))"
+            if native_rules
+            else "CAST(array() AS ARRAY<BIGINT>)"
         )
+        cand = "(size(`_nsids`) > 0)"
+        if udf_rules:
+            cand = f"({cand} OR {_coarse_prefilter(udf_rules, folded, lct)})"
+        fused_in = with_lct.withColumn("_nsids", F.expr(nsids)).filter(cand).drop("_lct")
         return fused_in.mapInPandas(
             make_fused_matcher(native_rules, udf_rules, dims), schema=MATCH_SCHEMA
         )
 
+    cols = ("conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key")
     parts: list[DataFrame] = []
     if native_rules:
-        hits = F.array_compact(
-            F.array(
-                *[
-                    F.when(
-                        _native_cond(r, folded[r.sid], lct=_lct),
-                        F.struct(
-                            F.lit(r.sid).cast("long").alias("sid"),
-                            _native_extracted(r).alias("extracted"),
-                        ),
-                    )
-                    for r in native_rules
-                ]
-            )
+        hits = ", ".join(
+            f"CASE WHEN {_native_cond(r, folded[r.sid], lct)} THEN struct("
+            f"CAST({r.sid} AS BIGINT) AS sid, {_native_extracted(r)} AS extracted) END"
+            for r in native_rules
         )
-        native_df = (
-            prepared.withColumn("_lct", F.lower(F.col("text"))).select(
-                "conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key",
-                F.explode(hits).alias("_h"),
-            )
-            .select(
-                "conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key",
-                F.col("_h.sid").alias("sid"),
-                F.col("_h.extracted").alias("extracted"),
-            )
-        )
-        parts.append(native_df)
+        native_df = with_lct.selectExpr(*cols, f"explode(array_compact(array({hits}))) AS _h")
+        parts.append(native_df.selectExpr(*cols, "_h.sid AS sid", "_h.extracted AS extracted"))
     if udf_rules:
         cand = prepared.filter(_coarse_prefilter(udf_rules, folded))
         udf_df = cand.mapInPandas(

@@ -7,7 +7,7 @@ conv_id and every rule is native (resolve_match_mode). Fused plan shape
 (asserted by tests/test_plan_shape.py):
 
   ONE parquet/Iceberg scan (ReadSchema pruned to the 6 transcript columns)
-    → Project: native-rule when-array → `_nsids` [whole-stage codegen]
+    → Project: native-rule CASE array → `_nsids` [whole-stage codegen]
     → Filter: native hit OR UDF fast-pattern     [JVM-side candidate prune]
     → MapInPandas fused matcher                  ← the JVM↔Py boundary
     → BroadcastHashJoin ×2 + BroadcastNestedLoopJoin (attach dims)
@@ -25,6 +25,12 @@ Exceptions that DO persist: rule sets with role-tracked counters (two
 replay branches), run_dynamic with out_dir (each pass's alerts feed its
 count and the union's write), and route's Spark-writer fallback for an
 out_dir executors cannot open.
+
+Every rule-dependent expression of that plan (native predicates and
+`_nsids`, the prefilter, rule meta, the line CASE, the alert counters) is
+Spark SQL text rendered in Python and parsed by the JVM in one call each,
+so building the plan costs the same few hundred py4j round trips for 13
+rules as for 58.
 """
 
 from __future__ import annotations
@@ -243,20 +249,26 @@ def observe_alerts(
     reader of ``(sink_counts, sid_counts, metrics)`` for after its first
     action. Under a persist, both observations fire on the action that
     fills the cache."""
+    match.check_sql_literals(alerts.sparkSession)
     sinks = ruleset.sinks()
     sids = sorted(r.sid for r in ruleset.rules if not r.noalert)
-    observed, read_alerts = _observe(
-        alerts,
+    # one struct of every counter, rendered as SQL: one JVM call whatever
+    # the rule count
+    counts = ", ".join(
         [
-            F.count(F.lit(1)).alias("alerts"),
-            *[F.sum(F.when(F.col("sink") == s, 1).otherwise(0)).alias(f"sink_{s}") for s in sinks],
-            *[F.sum(F.when(F.col("sid") == s, 1).otherwise(0)).alias(f"sid_{s}") for s in sids],
-        ],
+            "'alerts', count(1)",
+            *[
+                f"{match._sql_str('sink_' + s)}, sum(CASE WHEN (`sink` = {match._sql_str(s)}) THEN 1 ELSE 0 END)"
+                for s in sinks
+            ],
+            *[f"'sid_{s}', sum(CASE WHEN (`sid` = {s}) THEN 1 ELSE 0 END)" for s in sids],
+        ]
     )
+    observed, read_alerts = _observe(alerts, [F.expr(f"named_struct({counts}) AS counts")])
     observed._sagan_persisted = getattr(alerts, "_sagan_persisted", ())
 
     def read() -> tuple[dict, dict, dict]:
-        got = read_alerts()
+        got = read_alerts()["counts"].asDict()
         sink_counts = {s: got[f"sink_{s}"] for s in sinks if got[f"sink_{s}"]}
         sid_counts = {s: got[f"sid_{s}"] for s in sids if got[f"sid_{s}"]}
         return sink_counts, sid_counts, {**read_input(), "alerts": got["alerts"] or 0}

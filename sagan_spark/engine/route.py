@@ -1,7 +1,8 @@
 """Routing + sinks — Sagan's output-plugin fan-out (SURVEY §2.1 S4-S7, A2).
 
-Each alert row gets (msg, rule_class, sink, rev, priority) from a broadcast
-rule dim, then fans out per sink:
+Each alert row gets (msg, rule_class, sink, rev, priority) from literal
+maps of the rule set (a broadcast rule dim past LITERAL_MAP_MAX_RULES),
+then fans out per sink:
 - fast / syslog: byte-stable text lines built with `format_string`
   (never Python str() of timestamps — SURVEY §7.4.3).
 - eve: newline-delimited JSON via `to_json(struct(...))` with a fixed
@@ -12,6 +13,11 @@ rule dim, then fans out per sink:
   entirely JVM-side).
 - external program (S8): pipe_to_program streams formatted lines into a
   subprocess per partition.
+
+The rule-meta maps, the noalert filter, the three line formatters and the
+line CASE built from them are Spark SQL text, rendered here in Python
+(every literal through match._sql_str) and parsed by the JVM in one call
+each, whatever the rule count; callers still get Columns.
 
 Write shape: one pass. The alerts take one repartition(conv_id) +
 sortWithinPartitions (each conversation in one file per sink, stable
@@ -34,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..rules.model import RuleSet
+from .match import _sql_in, _sql_lit, _sql_str, check_sql_literals
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 TS_FMT_ISO = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
@@ -50,10 +57,12 @@ def rule_dim(spark: SparkSession, ruleset: RuleSet) -> DataFrame:
 
 
 # Above this rule count attach_rule_meta switches from literal maps to a
-# broadcast join: five create_map literals × N rules embed ~10N entries in
-# the plan, and past a few hundred rules plan construction/codegen cost
-# grows with N on EVERY query while the broadcast join's cost stays flat
-# (measured at 57 vs 1,044 rules — see BENCH/TUNING.md "rule-meta switch").
+# broadcast join: five map literals × N rules embed ~10N entries in the
+# plan, and past a few hundred rules planning/codegen cost grows with N on
+# EVERY query while the broadcast join's cost stays flat (measured at 57 vs
+# 1,044 rules — see BENCH/TUNING.md "rule-meta switch"; that measurement
+# built the maps Column by Column, and the value was not re-measured once
+# they became one SQL text each).
 LITERAL_MAP_MAX_RULES = 500
 
 
@@ -65,17 +74,20 @@ def attach_rule_meta(
     """Attach rule metadata and drop noalert (state-only) rows.
 
     The rule dim is a compile-time constant, so for ordinary rule-set
-    sizes we fold it into literal-map lookups (`element_at(create_map)`)
-    — O(1) per row inside whole-stage codegen, zero exchange. Past
+    sizes we fold it into literal-map lookups (`element_at(map(...))`) —
+    O(1) per row inside whole-stage codegen, zero exchange. Each map and
+    the noalert filter are rendered as Spark SQL text in Python and reach
+    the JVM in one call each, whatever the rule count. Past
     ``max_literal_rules`` rules the embedded-literal plan itself becomes
     the cost (Sagan-realistic catalogs run thousands of rules), so large
     rule sets take a broadcast hash join against `rule_dim` instead —
     still no shuffle of the fact side, one tiny broadcast. Both paths
     yield identical rows AND column order (equality-tested)."""
+    check_sql_literals(alerts.sparkSession)
     noalert_sids = [r.sid for r in ruleset.rules if r.noalert]
     out = alerts
     if noalert_sids:
-        out = out.filter(~F.col("sid").isin(noalert_sids))
+        out = out.filter(f"(NOT {_sql_in('`sid`', noalert_sids)})")
     live = [r for r in ruleset.rules if not r.noalert]
 
     if len(live) > max_literal_rules:
@@ -86,76 +98,60 @@ def attach_rule_meta(
             *out.columns, "rev", "msg", "rule_class", "priority", "sink"
         )
 
-    def lit_map(fn) -> F.Column:
-        entries: list[F.Column] = []
-        for r in live:
-            entries += [F.lit(r.sid), F.lit(fn(r))]
-        return F.element_at(F.create_map(*entries), F.col("sid"))
+    def lit_map(fn) -> str:
+        entries = ", ".join(f"{r.sid}, {_sql_lit(fn(r))}" for r in live)
+        return f"element_at(map({entries}), `sid`)"
 
     return out.withColumns(
         {
-            "rev": lit_map(lambda r: r.rev).cast("int"),
-            "msg": lit_map(lambda r: r.msg),
-            "rule_class": lit_map(lambda r: r.rule_class),
-            "priority": lit_map(lambda r: r.priority).cast("int"),
-            "sink": lit_map(lambda r: r.sink),
+            "rev": F.expr(f"CAST({lit_map(lambda r: r.rev)} AS INT)"),
+            "msg": F.expr(lit_map(lambda r: r.msg)),
+            "rule_class": F.expr(lit_map(lambda r: r.rule_class)),
+            "priority": F.expr(f"CAST({lit_map(lambda r: r.priority)} AS INT)"),
+            "sink": F.expr(lit_map(lambda r: r.sink)),
         }
     )
 
 
-def _nn(name: str) -> F.Column:
+def _nn(name: str) -> str:
     """Sink fields render null role/tool as '-' (format_string would print
     'null' and to_json would drop the key — both diverge from the oracle's
     formatting). The transcript contract makes conv_id/turn_idx/ts/text
     non-null for routed rows; role/tool may legitimately be null."""
-    return F.coalesce(F.col(name), F.lit("-"))
+    return f"coalesce(`{name}`, '-')"
+
+
+# The text sinks' lines as Spark SQL text: _sink_line composes them into
+# one CASE, and each formatter below parses its own.
+_FAST_LINE = (
+    "format_string("
+    + _sql_str("%s  [**] [1:%d:%d] %s [**] [Classification: %s] [Priority: %d] %s:%d %s %s - %s")
+    + f", date_format(`ts`, {_sql_str(TS_FMT)}), `sid`, `rev`, `msg`, `rule_class`, `priority`,"
+    f" `conv_id`, `turn_idx`, {_nn('role')}, {_nn('tool')}, `text`)"
+)
+_EVE_JSON = (
+    f"to_json(struct(date_format(`ts`, {_sql_str(TS_FMT_ISO)}) AS `timestamp`, `sid`, `rev`,"
+    " `msg`, `rule_class` AS `classification`, `priority`, `conv_id`, `turn_idx`,"
+    f" {_nn('role')} AS `role`, {_nn('tool')} AS `tool`, `text`))"
+)
+_SYSLOG_LINE = (
+    # facility 13 (log audit) * 8 + severity
+    f"format_string({_sql_str('<%d>%s %s sagan[%d]: %s: %s')}, (`priority` + {8 * 13}),"
+    f" date_format(`ts`, {_sql_str(TS_FMT_ISO)}), `conv_id`, `sid`, `msg`, `text`)"
+)
+_LINE_SQL = {"fast": _FAST_LINE, "eve": _EVE_JSON, "syslog": _SYSLOG_LINE}
 
 
 def fast_line() -> F.Column:
-    return F.format_string(
-        "%s  [**] [1:%d:%d] %s [**] [Classification: %s] [Priority: %d] %s:%d %s %s - %s",
-        F.date_format("ts", TS_FMT),
-        F.col("sid"),
-        F.col("rev"),
-        F.col("msg"),
-        F.col("rule_class"),
-        F.col("priority"),
-        F.col("conv_id"),
-        F.col("turn_idx"),
-        _nn("role"),
-        _nn("tool"),
-        F.col("text"),
-    )
+    return F.expr(_FAST_LINE)
 
 
 def eve_json() -> F.Column:
-    return F.to_json(
-        F.struct(
-            F.date_format("ts", TS_FMT_ISO).alias("timestamp"),
-            F.col("sid"),
-            F.col("rev"),
-            F.col("msg"),
-            F.col("rule_class").alias("classification"),
-            F.col("priority"),
-            F.col("conv_id"),
-            F.col("turn_idx"),
-            _nn("role").alias("role"),
-            _nn("tool").alias("tool"),
-            F.col("text"),
-        )
-    )
+    return F.expr(_EVE_JSON)
 
 
 def syslog_line() -> F.Column:
-    return F.format_string(
-        "<%d>%s %s sagan[%d]: %s: %s",
-        F.col("priority") + F.lit(8 * 13),  # facility 13 (log audit) * 8 + severity
-        F.date_format("ts", TS_FMT_ISO),
-        F.col("conv_id"),
-        F.col("sid"),
-        F.col("msg"),
-        F.col("text"),
-    )
+    return F.expr(_SYSLOG_LINE)
 
 
 SINK_FORMATTERS = {"fast": fast_line, "eve": eve_json, "syslog": syslog_line}
@@ -163,6 +159,7 @@ SINK_FORMATTERS = {"fast": fast_line, "eve": eve_json, "syslog": syslog_line}
 
 def sink_lines(alerts: DataFrame, sink: str) -> DataFrame:
     """Formatted output lines for one text sink, with sort keys attached."""
+    check_sql_literals(alerts.sparkSession)
     fmt = SINK_FORMATTERS[sink]
     return alerts.filter(F.col("sink") == sink).select(
         "conv_id", "turn_idx", "sid", fmt().alias("line")
@@ -332,8 +329,11 @@ SINKS = (*TEXT_SINKS, "unified2")
 def _sink_line() -> F.Column:
     """The text sinks' output line as one CASE on sink; null on unified2
     rows."""
-    sink = F.col("sink")
-    return F.coalesce(*[F.when(sink == s, fmt()) for s, fmt in SINK_FORMATTERS.items()])
+    return F.expr(
+        "coalesce("
+        + ", ".join(f"CASE WHEN (`sink` = {_sql_str(s)}) THEN {sql} END" for s, sql in _LINE_SQL.items())
+        + ")"
+    )
 
 
 def _part_name(sink: str, pid: int) -> str:
@@ -394,6 +394,7 @@ def sink_rows(alerts: DataFrame) -> DataFrame:
     sinks' line as ``_line``. An Observation on this frame sits above the
     exchange, where AQE keeps it even when there are no rows
     (pipeline.run)."""
+    check_sql_literals(alerts.sparkSession)
     return (
         alerts.repartition("conv_id")
         .sortWithinPartitions("conv_id", "turn_idx", "sid")

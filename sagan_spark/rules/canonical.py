@@ -138,8 +138,8 @@ CANONICAL = RuleSet(
         ),
         # P10/P11: parse_src_ip / parse_port / parse_proto token extraction
         # ([PUB src/parsers/parse-ip.c]); the partial plant (no IP) must not
-        # fire — required-token semantics. Native-compilable: pure Column
-        # regexp_extract_all path, no Python.
+        # fire — required-token semantics. Native-compilable: a JVM
+        # regexp_extract_all expression, no Python.
         Rule(
             sid=1000014,
             msg="connection endpoint parsed",

@@ -74,7 +74,7 @@ def match_stateless(rule: Rule, text: str, role: str, tool: str, hour: int, dow:
     Returns the extracted-field dict on match (possibly empty), or None.
     ``hour``/``dow``: UTC hour 0-23 and ISO weekday 1-7 of the row's ts.
     Null text fails any rule with a text predicate; null role/tool never
-    satisfy a positive membership test (matches the Spark Column paths).
+    satisfy a positive membership test (matches the native SQL path).
     """
     if text is None and rule.has_text_pred:
         return None

@@ -114,7 +114,7 @@ class TokenSpec:
     - kind "proto": tcp|udp|icmp keyword, normalized to lowercase
     ``required``: the rule fails when fewer than ``position`` occurrences
     exist. Regexes live in the Java/Python-common subset so the native
-    Column path (regexp_extract_all + try_element_at) and the Python paths
+    SQL path (regexp_extract_all + try_element_at) and the Python paths
     agree byte-for-byte."""
 
     field: str  # extracted-map key, e.g. "src_ip"
