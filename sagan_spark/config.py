@@ -53,8 +53,8 @@ class PipelineConfig:
     master: str | None = None
     state_ttl_minutes: float | None = None
     # Batch sizing IS the streaming throughput knob: each micro-batch pays
-    # a ~4.5s row-count-independent floor (measured, BENCH/TUNING.md r5 —
-    # Python round trips + state-store commits + per-sink writes), so size
+    # a row-count-independent floor (measured, BENCH/TUNING.md r5 — Python
+    # round trips + state-store commits + its count and write jobs), so size
     # this so the floor is a small fraction of batch wall; latency-bound
     # deployments instead pick the smallest batch meeting their target.
     max_files_per_trigger: int = 1

@@ -6,7 +6,12 @@ Iceberg-snapshot checkpoints with per-partition lineage and rule-hit
 metrics") processes the input as *units* — groups of data files — and
 records, per unit: input rows, per-sink alert counts, per-rule hit counts,
 wall time. The manifest is written atomically (tmp + rename) after every
-unit, so a crashed run resumes by skipping completed units.
+unit, so a crashed run resumes by skipping completed units. A unit's
+alerts are written as pipeline.run writes them, in the one job that fills
+its counts (route.write_sink_rows, partitioned form: rows exchanged by
+conv_id, each file sorted by (conv_id, turn_idx, sid)), to
+``sinks/<sink>/unit=<uid>/``; a unit that crashed mid-write is rerun
+whole and replaces its directories.
 
 Unit boundaries and correctness: stateful correlation is per-conv_id, so a
 unit must contain whole conversations. With the Iceberg layout
@@ -34,6 +39,7 @@ from .. import fsutil
 from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import pipeline as pl
+from . import route
 
 MANIFEST = "_manifest.json"
 
@@ -139,17 +145,8 @@ def run_resumable(
         alerts = pl.build_alerts(
             spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode
         )
-        alerts, read_counts = pl.observe_alerts(alerts, ruleset, read_input)
-        alerts = alerts.persist()
-        for sink in ruleset.sinks():
-            (
-                alerts.where(F.col("sink") == sink)
-                .sortWithinPartitions("conv_id", "turn_idx", "sid")
-                .write.mode("overwrite")
-                .parquet(f"{out_dir.rstrip('/')}/sinks/{sink}/unit={uid}")
-            )
-        if not ruleset.sinks():  # no sink write to fire the observations
-            alerts.write.format("noop").mode("overwrite").save()
+        rows, read_counts = pl.observe_alerts(route.sink_rows(alerts), ruleset, read_input)
+        route.write_sink_rows(rows, f"{out_dir.rstrip('/')}/sinks", partition=f"unit={uid}")
         pl.unpersist_alerts(alerts)
         per_sink, per_sid, metrics = read_counts()
         manifest["units"][uid] = {

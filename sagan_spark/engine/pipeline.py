@@ -198,7 +198,7 @@ def build_alerts(
     return out
 
 
-def _observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
+def observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
     """``df`` observing ``aggs``, and a reader of their values for after the
     action that runs it.
 
@@ -228,7 +228,7 @@ def observe_input(df: DataFrame) -> tuple[DataFrame, Callable[[], dict]]:
     time span — the stats-json analogue) on ``df``: they ride whatever
     action runs the plan. Returns the observed frame and a reader for after
     that action."""
-    return _observe(
+    return observe(
         df,
         [
             F.count(F.lit(1)).alias("rows_in"),
@@ -264,7 +264,7 @@ def observe_alerts(
             *[f"'sid_{s}', sum(CASE WHEN (`sid` = {s}) THEN 1 ELSE 0 END)" for s in sids],
         ]
     )
-    observed, read_alerts = _observe(alerts, [F.expr(f"named_struct({counts}) AS counts")])
+    observed, read_alerts = observe(alerts, [F.expr(f"named_struct({counts}) AS counts")])
     observed._sagan_persisted = getattr(alerts, "_sagan_persisted", ())
 
     def read() -> tuple[dict, dict, dict]:

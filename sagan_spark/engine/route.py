@@ -19,27 +19,28 @@ line CASE built from them are Spark SQL text, rendered here in Python
 (every literal through match._sql_str) and parsed by the JVM in one call
 each, whatever the rule count; callers still get Columns.
 
-Write shape: one pass. The alerts take one repartition(conv_id) +
-sortWithinPartitions (each conversation in one file per sink, stable
-per-file order, no global sort; AQE coalesces the exchange, which also
-sizes the files), one projection adds the formatted text line
-(sink_rows), and one executor-side Arrow writer (mapInArrow over
+Write shape: one pass, one writer for every alert sink. The alerts take
+one repartition(conv_id) + sortWithinPartitions (each conversation in one
+file per sink, stable per-file order, no global sort; AQE coalesces the
+exchange, which also sizes the files), one projection adds the formatted
+text line (sink_rows), and one executor-side Arrow writer (mapInArrow over
 pyarrow.fs) streams every sink's part file from that pass
 (write_sink_rows). The driver qualifies a bare out_dir through Hadoop
 first, so it lands where Spark's writers would put it. Counts ride an
 Observation on the same action, placed on sink_rows' output
-(pipeline.run). An out_dir that pyarrow cannot open on executors takes
-Spark's own writers instead, one job per sink over the persisted rows.
+(pipeline.run). The same writer has a partitioned form, every sink as
+Parquet under ``<sink>/<partition>/``, for the stream's micro-batches
+(``batch=<id>``) and resumable units (``unit=<uid>``). An out_dir that
+pyarrow cannot open on executors takes Spark's own writers instead, one
+job per sink over the persisted rows.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..rules.model import RuleSet
+from ..rules.model import SINKS, RuleSet
 from .match import _sql_in, _sql_lit, _sql_str, check_sql_literals
 
 TS_FMT = "yyyy-MM-dd HH:mm:ss.SSSSSS"
@@ -122,7 +123,7 @@ def _nn(name: str) -> str:
 
 
 # The text sinks' lines as Spark SQL text: _sink_line composes them into
-# one CASE, and each formatter below parses its own.
+# one CASE, and sink_lines parses one.
 _FAST_LINE = (
     "format_string("
     + _sql_str("%s  [**] [1:%d:%d] %s [**] [Classification: %s] [Priority: %d] %s:%d %s %s - %s")
@@ -140,29 +141,14 @@ _SYSLOG_LINE = (
     f" date_format(`ts`, {_sql_str(TS_FMT_ISO)}), `conv_id`, `sid`, `msg`, `text`)"
 )
 _LINE_SQL = {"fast": _FAST_LINE, "eve": _EVE_JSON, "syslog": _SYSLOG_LINE}
-
-
-def fast_line() -> F.Column:
-    return F.expr(_FAST_LINE)
-
-
-def eve_json() -> F.Column:
-    return F.expr(_EVE_JSON)
-
-
-def syslog_line() -> F.Column:
-    return F.expr(_SYSLOG_LINE)
-
-
-SINK_FORMATTERS = {"fast": fast_line, "eve": eve_json, "syslog": syslog_line}
+TEXT_SINKS = tuple(s for s in SINKS if s in _LINE_SQL)
 
 
 def sink_lines(alerts: DataFrame, sink: str) -> DataFrame:
     """Formatted output lines for one text sink, with sort keys attached."""
     check_sql_literals(alerts.sparkSession)
-    fmt = SINK_FORMATTERS[sink]
     return alerts.filter(F.col("sink") == sink).select(
-        "conv_id", "turn_idx", "sid", fmt().alias("line")
+        "conv_id", "turn_idx", "sid", F.expr(_LINE_SQL[sink]).alias("line")
     )
 
 
@@ -322,10 +308,6 @@ def pipe_to_program(alerts: DataFrame, sink: str, argv: list[str]) -> int:
     return int(lines.rdd.mapPartitions(feed).sum())
 
 
-TEXT_SINKS = tuple(SINK_FORMATTERS)
-SINKS = (*TEXT_SINKS, "unified2")
-
-
 def _sink_line() -> F.Column:
     """The text sinks' output line as one CASE on sink; null on unified2
     rows."""
@@ -336,17 +318,24 @@ def _sink_line() -> F.Column:
     )
 
 
-def _part_name(sink: str, pid: int) -> str:
-    return f"part-{pid:05d}.{'parquet' if sink == 'unified2' else 'txt'}"
+def _sink_dir(base: str, sink: str, partition: str | None) -> str:
+    return f"{base}/{sink}" if partition is None else f"{base}/{sink}/{partition}"
 
 
-def _part_writer(out_dir: str):
-    """The mapInArrow body of write_sinks: streams one task's sorted
-    batches into one part file per sink it meets (``part-<pid>.txt``, or
-    ``.parquet`` for unified2), never holding the partition. Each file is
-    written under ``<sink>/_temporary/`` and moved to its name once the
-    task has written everything, so a retried task replaces its file and
-    readers never see a partial one. Yields the sinks it wrote."""
+def _part_name(sink: str, pid: int, partition: str | None = None) -> str:
+    text = partition is None and sink in TEXT_SINKS
+    return f"part-{pid:05d}.{'txt' if text else 'parquet'}"
+
+
+def _part_writer(out_dir: str, partition: str | None):
+    """The mapInArrow body of write_sink_rows: streams one task's sorted
+    batches into one part file per sink it meets, never holding the
+    partition: ``part-<pid>.txt`` of the text line for a text sink of the
+    batch form, ``part-<pid>.parquet`` of the alerts' columns otherwise.
+    Each file is written under its directory's ``_temporary/`` and moved
+    to its name once the task has written everything, so a retried task
+    replaces its file and readers never see a partial one. Yields the
+    sinks it wrote."""
 
     def write(batches):
         import pyarrow as pa
@@ -358,7 +347,7 @@ def _part_writer(out_dir: str):
         fs, base = _arrow_fs(out_dir)
         pid = ctx.partitionId()
         tmp = f"_temporary/{pid}-{ctx.taskAttemptId()}"
-        streams, u2 = {}, None
+        streams, parquet = {}, {}
         try:
             for batch in batches:
                 for sink in SINKS:
@@ -366,23 +355,26 @@ def _part_writer(out_dir: str):
                     if rows.num_rows == 0:
                         continue
                     if sink not in streams:
-                        fs.create_dir(f"{base}/{sink}/_temporary")
-                        streams[sink] = fs.open_output_stream(f"{base}/{sink}/{tmp}")
-                    if sink != "unified2":
-                        text = "\n".join(rows.column("_line").to_pylist()) + "\n"
-                        streams[sink].write(text.encode("utf-8"))
-                        continue
-                    rows = rows.drop_columns(["_line"])
-                    if u2 is None:
-                        u2 = pq.ParquetWriter(streams[sink], rows.schema)
-                    u2.write_batch(rows)
+                        d = _sink_dir(base, sink, partition)
+                        fs.create_dir(f"{d}/_temporary")
+                        streams[sink] = fs.open_output_stream(f"{d}/{tmp}")
+                    if partition is None:  # batch form: rows carry _line
+                        if sink in TEXT_SINKS:
+                            text = "\n".join(rows.column("_line").to_pylist()) + "\n"
+                            streams[sink].write(text.encode("utf-8"))
+                            continue
+                        rows = rows.drop_columns(["_line"])
+                    if sink not in parquet:
+                        parquet[sink] = pq.ParquetWriter(streams[sink], rows.schema)
+                    parquet[sink].write_batch(rows)
         finally:
-            if u2 is not None:
-                u2.close()
+            for writer in parquet.values():
+                writer.close()
             for stream in streams.values():
                 stream.close()
         for sink in streams:
-            fs.move(f"{base}/{sink}/{tmp}", f"{base}/{sink}/{_part_name(sink, pid)}")
+            d = _sink_dir(base, sink, partition)
+            fs.move(f"{d}/{tmp}", f"{d}/{_part_name(sink, pid, partition)}")
         yield pa.RecordBatch.from_pydict({"sink": list(streams)}, pa.schema([("sink", pa.string())]))
 
     return write
@@ -419,55 +411,73 @@ def write_sinks(alerts: DataFrame, out_dir: str) -> None:
     write_sink_rows(sink_rows(alerts), out_dir)
 
 
-def write_sink_rows(rows: DataFrame, out_dir: str) -> None:
-    """write_sinks for rows already shaped by ``sink_rows``."""
+def write_sink_rows(rows: DataFrame, out_dir: str, partition: str | None = None) -> None:
+    """write_sinks for rows already shaped by ``sink_rows``.
+
+    With ``partition`` (``batch=<id>``, ``unit=<uid>``) it writes the
+    partitioned form instead: every sink as Parquet with the rows' columns
+    (``_line`` dropped) under ``out_dir/<sink>/<partition>/``. Only that
+    directory is cleared and replaced, so rewriting a partition is
+    idempotent, and a sink with no rows gets nothing. The rows keep the
+    caller's partitioning and order: each task writes one file per sink
+    it meets."""
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from .. import fsutil
+    from ..packaging import ensure_shipped
 
+    if partition is not None and "_line" in rows.columns:
+        rows = rows.drop("_line")
     target = fsutil.fs_qualify(rows.sparkSession, out_dir)
     if not _executor_fs_ok(target):
-        _write_sinks_spark(rows, out_dir)
+        _write_sinks_spark(rows, out_dir, partition)
         return
+    ensure_shipped(rows.sparkSession)  # the writer runs this module on executors
     fs, base = _arrow_fs(target)
     for sink in SINKS:
-        if fs.get_file_info(f"{base}/{sink}").type != pafs.FileType.NotFound:
-            fs.delete_dir(f"{base}/{sink}")
-    written = {r.sink for r in rows.mapInArrow(_part_writer(target), "sink string").collect()}
-    for sink in SINKS:
-        d = f"{base}/{sink}"
+        d = _sink_dir(base, sink, partition)
+        if fs.get_file_info(d).type != pafs.FileType.NotFound:
+            fs.delete_dir(d)
+    written = {
+        r.sink for r in rows.mapInArrow(_part_writer(target, partition), "sink string").collect()
+    }
+    for sink in SINKS if partition is None else written:
+        d = _sink_dir(base, sink, partition)
         fs.create_dir(d)
         if fs.get_file_info(f"{d}/_temporary").type != pafs.FileType.NotFound:
             fs.delete_dir(f"{d}/_temporary")
-        if sink not in written:
+        if sink not in written:  # batch form: an empty sink stays readable
             with fs.open_output_stream(f"{d}/{_part_name(sink, 0)}") as f:
                 if sink == "unified2":  # Parquet readers need the schema
                     pq.write_table(to_arrow_schema(rows.drop("_line").schema).empty_table(), f)
         fs.open_output_stream(f"{d}/_SUCCESS").close()
 
 
-def _write_sinks_spark(rows: DataFrame, out_dir: str) -> None:
+def _write_sinks_spark(rows: DataFrame, out_dir: str, partition: str | None) -> None:
     """write_sink_rows through Spark's own writers, for an ``out_dir`` that
     only the JVM can open: one job per sink over the persisted rows, which
-    are already exchanged by conv_id and sorted."""
+    keep their partitioning and order. The partitioned form first collects
+    which sinks the rows touch, and clears the partition of the others."""
     from pyspark import StorageLevel
+
+    from .. import fsutil
 
     rows.persist(StorageLevel.MEMORY_AND_DISK)
     try:
-        for sink in TEXT_SINKS:
-            (
-                rows.filter(F.col("sink") == sink)
-                .select("_line")
-                .write.mode("overwrite")
-                .text(os.path.join(out_dir, sink))
-            )
-        (
-            rows.filter(F.col("sink") == "unified2")
-            .drop("_line")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "unified2"))
-        )
+        touched = SINKS
+        if partition is not None:
+            touched = {r.sink for r in rows.select("sink").distinct().collect()}
+        for sink in SINKS:
+            path = _sink_dir(out_dir.rstrip("/"), sink, partition)
+            if sink not in touched:
+                fsutil.fs_delete(rows.sparkSession, path)
+                continue
+            part = rows.filter(F.col("sink") == sink)
+            if partition is None and sink in TEXT_SINKS:
+                part.select("_line").write.mode("overwrite").text(path)
+            else:
+                part.drop("_line").write.mode("overwrite").parquet(path)
     finally:
         rows.unpersist()

@@ -18,7 +18,7 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
-_SHIPPED_SESSIONS: set[int] = set()
+_SHIPPED_CONTEXTS: set[int] = set()
 
 
 def build_zip(out_path: str | None = None) -> str:
@@ -37,11 +37,13 @@ def build_zip(out_path: str | None = None) -> str:
 
 
 def ensure_shipped(spark: SparkSession) -> None:
-    key = id(spark)
-    if key in _SHIPPED_SESSIONS:
+    # keyed by SparkContext, which every session of it shares (foreachBatch
+    # hands each micro-batch a new session object)
+    key = id(spark.sparkContext)
+    if key in _SHIPPED_CONTEXTS:
         return
     spark.sparkContext.addPyFile(build_zip())
-    _SHIPPED_SESSIONS.add(key)
+    _SHIPPED_CONTEXTS.add(key)
 
 
 if __name__ == "__main__":

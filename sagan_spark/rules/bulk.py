@@ -23,12 +23,11 @@ from __future__ import annotations
 import dataclasses
 
 from .canonical import CANONICAL
-from .model import ContentSpec, MetaContentSpec, PcreSpec, Rule, RuleSet
+from .model import SINKS, ContentSpec, MetaContentSpec, PcreSpec, Rule, RuleSet
 
 # words that occur in the synthetic transcript templates (rare→common)
 _COMMON = ["the", "and", "report", "results", "summary", "plan", "request", "data"]
 _RARE = ["deployment", "watermark", "checkpoint", "escalation", "translation"]
-_SINKS = ["fast", "eve", "syslog", "unified2"]
 
 
 def bulk_ruleset(
@@ -55,7 +54,7 @@ def bulk_ruleset(
             Rule(
                 sid=sid,
                 msg=f"bulk content {i}",
-                sink=_SINKS[i % 4],
+                sink=SINKS[i % len(SINKS)],
                 rule_class="bulk",
                 contents=(
                     ContentSpec(f"zq{i}xv marker", nocase=i % 3 == 0),
@@ -71,7 +70,7 @@ def bulk_ruleset(
             Rule(
                 sid=sid,
                 msg=f"bulk pcre {i}",
-                sink=_SINKS[i % 4],
+                sink=SINKS[i % len(SINKS)],
                 rule_class="bulk",
                 pcres=(PcreSpec(rf"{w}\s+\w+ine{i}\b", "i"), PcreSpec(rf"{r}{i}q", negated=True)),
                 fast_pattern=(w, True),
@@ -83,7 +82,7 @@ def bulk_ruleset(
             Rule(
                 sid=sid,
                 msg=f"bulk meta {i}",
-                sink=_SINKS[i % 4],
+                sink=SINKS[i % len(SINKS)],
                 rule_class="bulk",
                 meta_contents=(
                     MetaContentSpec("%sagan%", (f"proto{i}a", f"proto{i}b", f"proto{i}c")),

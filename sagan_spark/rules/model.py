@@ -20,6 +20,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
+#: The alert sinks a rule may route to (Sagan's output plugins): three text
+#: formats and unified2. Every writer and generator reads this one list.
+SINKS = ("fast", "eve", "syslog", "unified2")
+
 
 @dataclass(frozen=True)
 class ContentSpec:
@@ -228,7 +232,7 @@ class FlexbitSpec:
 class Rule:
     sid: int
     msg: str
-    sink: str  # fast | eve | syslog | unified2
+    sink: str  # one of SINKS
     rule_class: str = "policy"
     rev: int = 1
     priority: int = 3
@@ -293,6 +297,8 @@ class RuleSet:
       flexbits: bits are per-conversation state maintained only by the
       conversation-keyed replay. conv_id and conv_tool rules both run on
       that conv-keyed replay, so they may carry flexbits.
+    - sink must be one of SINKS: the writers write only those, so any
+      other name would be counted but never written.
     - depends_on may not reference a noalert sid in the same set: dynamic
       enablement is derived from *emitted* alerts, and a state-only parent
       never emits ([PUB src/processors/dynamic-rules.c] reads the output
@@ -311,6 +317,10 @@ class RuleSet:
             dup = next(r.sid for r in self.rules if r.sid in seen or seen.add(r.sid))
             raise ValueError(f"duplicate sid {dup} in rule set")
         for r in self.rules:
+            if r.sink not in SINKS:
+                raise ValueError(
+                    f"sid {r.sid}: unknown sink {r.sink!r} (sinks are {', '.join(SINKS)})"
+                )
             if r.threshold is not None and r.threshold.type not in (
                 "limit", "threshold", "suppress", "both",
             ):

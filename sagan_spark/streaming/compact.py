@@ -1,11 +1,12 @@
 """Sink compaction: bound the file count of long-running streaming sinks.
 
-The exactly-once sink layout (streaming/pipeline.make_batch_writer) writes
-one ``batch=<id>`` parquet directory per non-empty (sink, micro-batch) —
-the idempotence unit under micro-batch replay. Correct, but on a stream
-that runs for months it is the classic small-files problem: 10^5 batches
-× shuffle-partition files each makes every downstream scan pay file-open
-and listing costs that dwarf the data — the standard Structured
+The exactly-once sink layout (streaming/pipeline.make_batch_writer, through
+route.write_sink_rows) writes one ``batch=<id>`` parquet directory per
+non-empty (sink, micro-batch), one file per ~500k rows — the idempotence
+unit under micro-batch replay. Correct, but on a stream that runs for
+months it is the classic small-files problem: 10^5 batches × at least
+one file each makes every downstream scan pay file-open and listing
+costs that dwarf the data — the standard Structured
 Streaming + foreachBatch operational gap (reference parity: spool-file
 IDS sinks are conventionally bounded by an external
 rotate-and-archive step; here the engine owns that maintenance).
@@ -57,6 +58,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
+from ..rules.model import SINKS
 
 MANIFEST_NAME = "_compaction.json"
 MARKER_NAME = "_COMPACTED"
@@ -207,7 +209,7 @@ def compact_sink_batches(
 def compact_all_sinks(
     spark: SparkSession,
     out_dir: str,
-    sinks: tuple[str, ...] = ("fast", "eve", "syslog", "unified2"),
+    sinks: tuple[str, ...] = SINKS,
     **kwargs,
 ) -> list[dict]:
     """Compact every sink of a stream's output tree; kwargs as

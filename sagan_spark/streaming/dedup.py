@@ -12,7 +12,8 @@ Each micro-batch is signed ONCE; the signatures serve three uses:
    NEXT batch sees this one as corpus.
 
 Exactly-once under micro-batch replay, the same way the alert sinks get it
-(pipeline.make_batch_writer): every write is an idempotent per-batch-id
+(pipeline.make_batch_writer → route.write_sink_rows, which clears and
+rewrites each sink's ``batch=<id>``): every write is an idempotent per-batch-id
 directory overwrite — pairs to ``<pairs_out>/batch=<id>``, signatures to
 ``<index_root>/batch=<id>`` — and the cross-batch join reads only
 ``batch < id`` partitions (partition-pruned), so a REPLAYED batch recomputes

@@ -6,8 +6,8 @@ same stages run over ``readStream``:
   file/Iceberg stream → hybrid match (stream-safe: Column exprs +
   mapInPandas) → stream-static broadcast enrich joins →
   ``applyInPandasWithState`` keyed by conv_id for after/threshold/flexbit
-  state (carried across micro-batches) → per-sink append writes
-  (``foreachBatch`` fan-out).
+  state (carried across micro-batches) → one write of every sink per
+  micro-batch (``foreachBatch`` → route.write_sink_rows, partitioned form).
 
 Ordering contract: Sagan guarantees per-source arrival order; the streaming
 analogue is per-conversation turn order across micro-batches. Within a
@@ -48,6 +48,7 @@ from .. import fsutil
 from ..datagen import dims as dimsmod
 from ..engine import enrich, match, route
 from ..engine.correlate import counter_emit
+from ..engine.pipeline import observe
 from ..rules.canonical import CANONICAL
 from ..rules.model import Rule, RuleSet
 
@@ -522,91 +523,64 @@ def build_stream(
 
 
 def make_batch_writer(out_dir: str, sinks: tuple[str, ...]):
-    """Per-sink fan-out for ``foreachBatch`` — EXACTLY-ONCE via idempotent
-    per-batch overwrite: foreachBatch re-executes a micro-batch after a
-    failure between the write and the checkpoint commit, so a plain
-    append would duplicate that batch's rows. Each (sink, batch) writes
-    to its own ``batch=<id>`` partition directory with mode=overwrite —
-    a replayed batch id rewrites the same directory instead of appending.
-    Readers see one parquet tree per sink (``batch`` surfaces as an int
-    partition column via standard partition discovery).
+    """The ``foreachBatch`` body: every sink of a micro-batch in one write
+    job of route.write_sink_rows' partitioned form — EXACTLY-ONCE via
+    idempotent per-batch overwrite: foreachBatch re-executes a micro-batch
+    after a failure between the write and the checkpoint commit, so a
+    plain append would duplicate that batch's rows. Each (sink, batch)
+    lands in its own ``<sink>/batch=<id>`` Parquet directory, cleared and
+    rewritten by a replay of the same batch id. Readers see one Parquet
+    tree per sink (``batch`` surfaces as an int partition column via
+    standard partition discovery).
 
-    Empty batches write NOTHING (a quiet stream must not accumulate one
-    directory per (sink, trigger) forever); the skip is deterministic on
-    replay — the same input batch yields the same per-sink counts — so
-    idempotence holds. Sinks written by the pre-``batch=`` flat-append
-    layout are detected and refused with a migration message: mixing the
-    two layouts breaks partition discovery for every reader. The listing
-    goes through the Hadoop FileSystem API (fsutil.fs_listdir), so the
-    guard fires on ``s3a://``/``hdfs://`` sink paths too — exactly the
-    deployments most likely to hold a stale layout; only a genuinely
-    absent directory is treated as nothing-to-check."""
-    legacy_checked: set[str] = set()
+    The batch is persisted and counted first: an empty batch writes
+    NOTHING (a quiet stream must not accumulate one directory per trigger
+    forever; a replay skips it alike), and the count sizes the write at
+    one file per sink per ~500k rows (no AQE in streaming to coalesce
+    it); a sink with no rows in the batch gets no directory. Sinks written
+    by the pre-``batch=`` flat-append layout are detected and refused with
+    a migration message: mixing the two layouts breaks partition discovery
+    for every reader. The listing goes through the Hadoop FileSystem API
+    (fsutil.fs_listdir), so the guard fires on ``s3a://``/``hdfs://`` sink
+    paths too — exactly the deployments most likely to hold a stale
+    layout; only a genuinely absent directory is treated as
+    nothing-to-check."""
+    legacy_checked = False
 
-    def _check_legacy(spark: SparkSession, sink: str) -> None:
-        if sink in legacy_checked:
-            return
-        legacy_checked.add(sink)
-        sink_dir = out_dir.rstrip("/") + "/" + sink
-        try:
-            entries = fsutil.fs_listdir(spark, sink_dir)
-        except FileNotFoundError:  # absent — first write to this sink
-            return
-        if any(e.startswith("part-") for e in entries):
-            raise RuntimeError(
-                f"sink directory {sink_dir} contains flat part-* files from "
-                "the pre-batch=<id> append layout; move them aside (e.g. "
-                "into a batch=-1/ subdirectory) before resuming — mixed "
-                "layouts break parquet partition discovery"
-            )
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.persist()
-        try:
-            # one job decides which sinks this batch touches (and
-            # materializes the cache the writers share)
-            counts = {
-                r["sink"]: r["n"]
-                for r in batch_df.groupBy("sink").agg(F.count("*").alias("n")).collect()
-            }
-            touched = [s for s in sinks if counts.get(s)]
-            for sink in touched:
-                _check_legacy(batch_df.sparkSession, sink)
-
-            def _write_one(sink: str) -> None:
-                # size output files from the known per-sink row count
-                # (guide §6): the cache holds shuffle-partition-many
-                # blocks, and writing each as its own part file costs
-                # per-file open/commit overhead and litters the sink with
-                # tiny files — one file per ~500k rows instead, scaling
-                # back up with real batch volume. coalesce reads the
-                # cached blocks without a shuffle.
-                nparts = max(1, -(-counts[sink] // 500_000))
-                (
-                    batch_df.filter(F.col("sink") == sink)
-                    .coalesce(nparts)
-                    .sortWithinPartitions("conv_id", "turn_idx", "sid")
-                    .write.mode("overwrite")
-                    .parquet(f"{out_dir.rstrip('/')}/{sink}/batch={batch_id}")
+    def _check_legacy(spark: SparkSession) -> None:
+        for sink in sinks:
+            sink_dir = out_dir.rstrip("/") + "/" + sink
+            try:
+                entries = fsutil.fs_listdir(spark, sink_dir)
+            except FileNotFoundError:  # absent — first write to this sink
+                continue
+            if any(e.startswith("part-") for e in entries):
+                raise RuntimeError(
+                    f"sink directory {sink_dir} contains flat part-* files from "
+                    "the pre-batch=<id> append layout; move them aside (e.g. "
+                    "into a batch=-1/ subdirectory) before resuming — mixed "
+                    "layouts break parquet partition discovery"
                 )
 
-            if len(touched) <= 1:
-                for sink in touched:
-                    _write_one(sink)
-            else:
-                # the per-sink writers are independent jobs over the same
-                # persisted batch — run them concurrently (guide §2.6:
-                # overlap independent jobs so one writer's straggler tail
-                # back-fills with the next writer's tasks) instead of
-                # paying four sequential job latencies per micro-batch.
-                # Any failure propagates so the batch is retried whole;
-                # partial writes are repaired by the idempotent
-                # per-batch-id overwrite on replay.
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=len(touched)) as pool:
-                    for _ in pool.map(_write_one, touched):
-                        pass
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal legacy_checked
+        batch_df.persist()
+        try:
+            # one job fills the cache and counts it (a count() action is two
+            # or three under AQE)
+            counted, read = observe(batch_df, [F.count(F.lit(1)).alias("rows")])
+            counted.write.format("noop").mode("overwrite").save()
+            n = read()["rows"]
+            if n == 0:
+                return
+            if not legacy_checked:
+                _check_legacy(batch_df.sparkSession)
+                legacy_checked = True
+            # coalesce reads the cached blocks without a shuffle
+            rows = batch_df.coalesce(max(1, -(-n // 500_000))).sortWithinPartitions(
+                "conv_id", "turn_idx", "sid"
+            )
+            route.write_sink_rows(rows, out_dir, partition=f"batch={batch_id}")
         finally:
             batch_df.unpersist()
 
@@ -732,14 +706,16 @@ def run_stream(
     track_hwm_cap: int = 100_000,
     drain: bool = False,
 ):
-    """Start the streaming pipeline; per-sink fan-out via foreachBatch
-    (idempotent per-batch parquet directories — exactly-once under
-    micro-batch replay, see make_batch_writer — the streaming twin of
-    route.write_sinks). Returns the StreamingQuery.
+    """Start the streaming pipeline; every sink is written via foreachBatch
+    by route's one writer (idempotent per-batch parquet directories —
+    exactly-once under micro-batch replay, see make_batch_writer).
+    Returns the StreamingQuery.
 
     Batch sizing IS the throughput knob (measured, BENCH/TUNING.md r5):
-    each micro-batch pays a ~4.5s row-count-independent floor (Python
-    round trips + state-store commits + per-sink write jobs), so size
+    each micro-batch pays a row-count-independent floor (Python round
+    trips + state-store commits + its count and write jobs) — a
+    ``stream.batch_s`` of 0.97 s for 6,250-row batches (perfbench
+    dense_sinks, local[2] on 4 CPUs) — so size
     ``max_files_per_trigger`` so that floor is a small fraction of the
     batch's wall — the bench's production-sized batch ran the same input
     2.7× faster than quarter-sized batches with identical output.

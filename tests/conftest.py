@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
 
 import pandas as pd
 import pytest
@@ -39,3 +40,16 @@ def tiny_pdf(tiny_path) -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+def jobs_of(spark, fn):
+    """``(fn(), number of Spark jobs it launched)``, read from the status
+    tracker under a job group set around ``fn`` (jobs of threads that
+    ``fn`` starts are not in it)."""
+    sc, group = spark.sparkContext, uuid.uuid4().hex
+    sc.setJobGroup(group, "jobs_of")
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))

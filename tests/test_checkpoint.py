@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import os
 
+from conftest import jobs_of
+
 from sagan_spark.datagen.transcripts import write_transcripts
 from sagan_spark.engine import checkpoint as cp
 from sagan_spark.engine import pipeline
@@ -117,3 +119,13 @@ def test_noalert_only_ruleset_still_counts_its_input(spark, tmp_path):
     )
     n = spark.read.parquet(path).count()
     assert r.totals == {"rows_in": n, "per_sink": {}, "per_sid": {}}
+
+
+def test_unit_is_one_write(spark, tiny_path, tmp_path):
+    """A unit runs pipeline.run's one pass: the counts ride the single
+    sink write, with no persist, per-sink write jobs or noop write."""
+    res, jobs = jobs_of(
+        spark, lambda: cp.run_resumable(spark, tiny_path, str(tmp_path), files_per_unit=10**6)
+    )
+    assert res.processed_units == 1
+    assert 0 < jobs <= 8, jobs

@@ -87,11 +87,16 @@ def test_comment_and_quote_edge_cases():
         "  orphan: 1",  # indented line outside a section
         "mode: nonsense",  # validated enum
         "engine:\n  match_mode: udf",  # removed match mode
+        "rules:\n  - bad_sink.rules",  # a rule routed to no sink that exists
     ],
 )
-def test_bad_config_fails_loudly(bad):
+def test_bad_config_fails_loudly(bad, tmp_path, monkeypatch):
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "bad_sink.rules").write_text(
+        'alert any any -> any any (msg:"typo"; content:"error"; sink:fsat; sid:1; rev:1;)\n'
+    )
     with pytest.raises(ValueError):
-        parse_config(bad)
+        load_ruleset(parse_config(bad))
 
 
 def test_round_trip_property():

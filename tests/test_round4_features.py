@@ -76,6 +76,23 @@ def test_resumable_on_file_uri(spark, tmp_path):
     ref = pipeline.run(spark, local_in)
     assert r2.totals["per_sink"] == ref.sink_counts
     assert {int(k): v for k, v in r2.totals["per_sid"].items()} == ref.sid_counts
+
+    # the rows themselves: per sink, the units' part files hold exactly the
+    # batch run's alerts, each file sorted by (conv_id, turn_idx, sid)
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from sagan_spark.engine import route
+
+    key = ["conv_id", "turn_idx", "sid"]
+    for sink in route.SINKS:
+        got = []
+        for f in glob.glob(str(tmp_path / "out_uri" / "sinks" / sink / "unit=*" / "part-*.parquet")):
+            rows = list(zip(*pq.read_table(f, columns=key).to_pydict().values()))
+            assert rows == sorted(rows), f
+            got += rows
+        want = [tuple(r) for r in ref.alerts.filter(F.col("sink") == sink).select(*key).collect()]
+        assert sorted(got) == sorted(want) and len(got) == ref.sink_counts.get(sink, 0), sink
     ref.unpersist()
 
 

@@ -56,3 +56,5 @@ def test_parse_errors():
         parse_rule('alert any any -> any any (sid:1; nocase;)')
     with pytest.raises(ValueError, match="pcre must be"):
         parse_rule('alert any any -> any any (sid:1; pcre:"no-slashes";)')
+    with pytest.raises(ValueError, match=r"unknown sink 'fsat' \(sinks are fast, eve, syslog, unified2\)"):
+        parse_rules('alert any any -> any any (msg:"x"; sid:1; content:"a"; sink:fsat;)')

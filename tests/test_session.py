@@ -1,4 +1,5 @@
-"""get_spark on a live session: only explicit settings change it."""
+"""get_spark on a live session: only explicit settings change it; the
+package ships once per SparkContext."""
 
 from __future__ import annotations
 
@@ -14,3 +15,17 @@ def test_get_spark_keeps_live_session_conf(spark):
         assert get_spark(shuffle_partitions=5).conf.get(key) == "5"  # explicit wins
     finally:
         spark.conf.set(key, saved)
+
+
+def test_package_ships_once_per_context(spark, monkeypatch):
+    """foreachBatch hands every micro-batch a new session object of the same
+    SparkContext; the writer it calls must not re-zip and re-add the
+    package each time."""
+    from sagan_spark import packaging
+
+    added = []
+    monkeypatch.setattr(packaging, "_SHIPPED_CONTEXTS", set())
+    monkeypatch.setattr(spark.sparkContext, "addPyFile", added.append)
+    for session in (spark, spark.newSession(), spark.newSession()):
+        packaging.ensure_shipped(session)
+    assert len(added) == 1

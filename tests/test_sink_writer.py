@@ -1,6 +1,7 @@
 """route.write_sinks' one-pass writer: file layout, per-file order,
 unified2 schema, overwrite semantics, where a bare out_dir lands, the
-Spark-writer fallback and the job count of run(out_dir=...)."""
+Spark-writer fallback and the job count of run(out_dir=...); and its
+partitioned form as the stream's micro-batch writer."""
 
 from __future__ import annotations
 
@@ -8,9 +9,9 @@ import datetime as dt
 import glob
 import os
 import shutil
-import uuid
 
 import pytest
+from conftest import jobs_of
 
 from sagan_spark import fsutil
 from sagan_spark.engine import pipeline, route
@@ -43,14 +44,8 @@ def several_files(spark):
 
 
 def _write(spark, tiny_path, ruleset, out):
-    """run(out_dir=out) under a job group: (result, jobs it launched)."""
-    sc, group = spark.sparkContext, uuid.uuid4().hex
-    sc.setJobGroup(group, "run(out_dir)")
-    try:
-        res = pipeline.run(spark, tiny_path, ruleset, out_dir=out)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return res, len(sc.statusTracker().getJobIdsForGroup(group))
+    """run(out_dir=out): (result, jobs it launched)."""
+    return jobs_of(spark, lambda: pipeline.run(spark, tiny_path, ruleset, out_dir=out))
 
 
 def _line_keys(alerts) -> dict:
@@ -235,6 +230,86 @@ def test_out_dir_qualified_to_hdfs_takes_spark_writers(spark, monkeypatch):
     the executors' local disks."""
     monkeypatch.setattr(fsutil, "fs_qualify", lambda _, p: "hdfs://localhost:9" + p)
     calls = []
-    monkeypatch.setattr(route, "_write_sinks_spark", lambda rows, out: calls.append(out))
+    monkeypatch.setattr(route, "_write_sinks_spark", lambda rows, out, partition: calls.append(out))
     route.write_sinks(_alerts(spark, route.SINKS), "/data/alerts")
     assert calls == ["/data/alerts"]
+
+
+def _batch_dirs(out: str, batch: int) -> dict:
+    """Sink → its files of ``batch=<batch>``, for the sinks that have one."""
+    return {
+        sink: sorted(os.listdir(os.path.join(out, sink, f"batch={batch}")))
+        for sink in route.SINKS
+        if os.path.isdir(os.path.join(out, sink, f"batch={batch}"))
+    }
+
+
+def test_stream_batch_is_one_count_and_one_write(spark, tmp_path):
+    """A micro-batch that touches every sink costs one counting job and one
+    writer job, and writes one Parquet file per (sink, batch); an empty
+    batch costs the count and writes nothing; a replayed batch id is
+    rewritten, not appended."""
+    from sagan_spark.streaming.pipeline import make_batch_writer
+
+    out = str(tmp_path)
+    write = make_batch_writer(out, route.SINKS)
+    alerts = _alerts(spark, route.SINKS)
+    _, jobs = jobs_of(spark, lambda: write(alerts, 0))
+    assert jobs <= 2, jobs
+    assert _batch_dirs(out, 0) == {s: ["_SUCCESS", "part-00000.parquet"] for s in route.SINKS}
+
+    _, jobs = jobs_of(spark, lambda: write(spark.createDataFrame([], _SCHEMA), 1))
+    assert jobs <= 1, jobs
+    assert _batch_dirs(out, 1) == {}
+
+    write(alerts, 0)
+    assert spark.read.parquet(os.path.join(out, "fast")).count() == 3
+    write(alerts, 2)
+    assert spark.read.parquet(os.path.join(out, "fast")).count() == 6
+
+
+def test_stream_sink_from_spark_writer_resumes(spark, tmp_path, monkeypatch):
+    """A sink whose batch=0 Spark's Parquet writer wrote, as every batch was
+    written before the one writer, reads as one table with the batches
+    the Arrow writer adds, and compacts. With the Arrow writer unavailable
+    the partitioned form goes through Spark's writers with the same rows,
+    and still creates nothing for a sink without rows."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegerType
+
+    from sagan_spark.streaming import compact
+    from sagan_spark.streaming.pipeline import make_batch_writer
+
+    key = ["conv_id", "turn_idx", "sid"]
+    out = str(tmp_path / "arrow")
+    alerts = _alerts(spark, ("fast", "eve"))
+    fast = alerts.filter(F.col("sink") == "fast")
+    fast.coalesce(1).sortWithinPartitions(*key).write.parquet(os.path.join(out, "fast", "batch=0"))
+    make_batch_writer(out, route.SINKS)(alerts, 1)
+    arrow = {
+        sink: spark.read.parquet(os.path.join(out, sink, "batch=1")).sort(*key).collect()
+        for sink in ("fast", "eve")
+    }
+
+    got = spark.read.parquet(os.path.join(out, "fast"))
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        *((f.name, f.dataType) for f in alerts.schema),
+        ("batch", IntegerType()),
+    ]
+    want = sorted(tuple(r) for r in fast.select(*key).collect())
+    assert len(want) == 6
+    assert sorted(tuple(r) for r in got.select("batch", *key).collect()) == sorted(
+        (b, *k) for b in (0, 1) for k in want
+    )
+    assert compact.compact_sink_batches(spark, out, "fast")["compacted"] == 2
+    got = spark.read.parquet(os.path.join(out, "fast"))
+    assert sorted(tuple(r) for r in got.select(*key).collect()) == sorted(want * 2)
+    assert {r.batch for r in got.select("batch").collect()} == {1}
+
+    monkeypatch.setattr(route, "_executor_fs_ok", lambda _: False)
+    out_spark = str(tmp_path / "spark")
+    make_batch_writer(out_spark, route.SINKS)(alerts, 1)
+    assert set(_batch_dirs(out_spark, 1)) == {"fast", "eve"}
+    for sink, rows in arrow.items():
+        assert spark.read.parquet(os.path.join(out_spark, sink, "batch=1")).sort(*key).collect() == rows
+        assert len(rows) == 6, sink

@@ -7,10 +7,10 @@ round trips whatever the rule count, launching no Spark job of its own."""
 from __future__ import annotations
 
 import gc
-import uuid
 
 import pandas as pd
 import pytest
+from conftest import jobs_of
 from py4j import clientserver
 from pyspark.sql import functions as F
 
@@ -149,26 +149,26 @@ def test_plan_build_round_trip_budget(spark, tiny_path):
     """Building run(out_dir=...)'s plan costs a bounded number of py4j
     round trips, almost none per rule, and launches no Spark job beyond
     the parquet read's schema inference (spark.read.parquet runs one)."""
-    sc, group = spark.sparkContext, uuid.uuid4().hex
+    jobs = []
 
     def build(rs):
-        # pipeline._alerts, with the rule-dependent part under a job group
+        # pipeline._alerts, with the rule-dependent part's jobs counted
         df, read_input = pipeline.observe_input(
             iomod.read_table(spark, tiny_path, columns=iomod.TRANSCRIPT_COLUMNS)
         )
-        sc.setJobGroup(group, "plan build")
-        try:
+
+        def plan():
             alerts = pipeline.build_alerts(spark, df, rs)
             pipeline.observe_alerts(route.sink_rows(alerts), rs, read_input)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+
+        jobs.append(jobs_of(spark, plan)[1])
 
     canonical = _count_round_trips(lambda: build(CANONICAL))
     bulk = _count_round_trips(lambda: build(BULK))
     assert canonical <= 1500, canonical
     extra = len(BULK.rules) - len(CANONICAL.rules)
     assert extra > 0 and (bulk - canonical) <= 3 * extra, (canonical, bulk)
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert jobs == [0, 0]
 
 
 def test_long_chains_parse_flat(spark):
