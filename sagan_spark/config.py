@@ -13,8 +13,6 @@ same role is played by a ``sagan_spark.yaml`` consumed by
       - rules/base.rules
       - rules/extra.rules
     engine:
-      match_mode: auto                # auto | fused | hybrid
-      fold_dims: true
       shuffle_partitions: 4096
       state_ttl_minutes: 30           # streaming state eviction
       max_files_per_trigger: 1        # batch sizing = the throughput knob (see field note)
@@ -37,8 +35,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, fields
 
-from .engine.match import MATCH_MODES
-
 
 @dataclass(frozen=True)
 class PipelineConfig:
@@ -46,9 +42,8 @@ class PipelineConfig:
     output: str | None = None
     mode: str = "batch"  # batch | resumable | stream | dynamic
     rules: tuple[str, ...] = ()  # .rules file paths; empty -> CANONICAL
-    # engine: section
-    match_mode: str = "auto"
-    fold_dims: bool = True
+    # engine: section (no match-plan key: the input picks the plan,
+    # engine/pipeline.resolve_match_mode)
     shuffle_partitions: int | None = None
     master: str | None = None
     state_ttl_minutes: float | None = None
@@ -76,14 +71,10 @@ class PipelineConfig:
     def __post_init__(self) -> None:
         if self.mode not in ("batch", "resumable", "stream", "dynamic"):
             raise ValueError(f"unknown mode {self.mode!r}")
-        if self.match_mode not in ("auto", *MATCH_MODES):
-            raise ValueError(f"unknown match_mode {self.match_mode!r}")
 
 
 _TOP_KEYS = {"input", "output", "mode"}
 _ENGINE_KEYS = {
-    "match_mode",
-    "fold_dims",
     "shuffle_partitions",
     "master",
     "state_ttl_minutes",

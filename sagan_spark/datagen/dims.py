@@ -62,6 +62,3 @@ def tool_dim(spark: SparkSession) -> DataFrame:
 def risk_ranges(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(RISK_RANGES)
 
-
-def bluedot_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BLUEDOT_DIM)

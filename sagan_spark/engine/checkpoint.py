@@ -111,8 +111,6 @@ def run_resumable(
     ruleset: RuleSet = CANONICAL,
     files_per_unit: int = 1,
     max_units: int | None = None,
-    fold_dims: bool = True,
-    match_mode: str = "auto",
 ) -> ResumableResult:
     """Process input units not yet marked done; write per-sink parquet under
     ``out_dir/sinks/<sink>/unit=<uid>`` and update the manifest after each
@@ -142,9 +140,7 @@ def run_resumable(
             break
         t0 = time.time()
         df, read_input = pl.observe_input(spark.read.parquet(*files))
-        alerts = pl.build_alerts(
-            spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode
-        )
+        alerts = pl.build_alerts(spark, df, ruleset)
         rows, read_counts = pl.observe_alerts(route.sink_rows(alerts), ruleset, read_input)
         route.write_sink_rows(rows, f"{out_dir.rstrip('/')}/sinks", partition=f"unit={uid}")
         pl.unpersist_alerts(alerts)

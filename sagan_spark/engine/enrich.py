@@ -7,17 +7,15 @@ join), J4 (tool_dim ↔ Zeek intel [PUB src/processors/zeek-intel.c]).
 Join shape at scale: the fact side (alerts) is arbitrarily large; every dim
 is tiny → `F.broadcast` is explicit on every join, so the plan is pure
 map-side BroadcastHashJoin / BroadcastNestedLoopJoin(range) with ZERO
-shuffle. Filtering enrich conditions is normally constant-folded into the
-match stage (engine/match.py); when folding is disabled the conditions are
-applied here as compiled Column predicates per sid.
+shuffle. Every enrich condition, J3's Bluedot reputation snapshot
+included, is constant-folded into the match stage (engine/match.py), so
+these joins filter nothing: they only attach attributes.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..rules.model import EnrichCond, RuleSet
 
 
 def attach_dims(
@@ -25,16 +23,12 @@ def attach_dims(
     role_dim: DataFrame,
     tool_dim: DataFrame,
     risk_ranges: DataFrame,
-    bluedot_dim: DataFrame | None = None,
 ) -> DataFrame:
     """Attach enrichment attributes (origin/trust_level, category/
-    blacklisted, risk_tag, and J3 bd_category/bd_score when a Bluedot
-    reputation snapshot is supplied). Left joins — never filtering — and
-    all broadcast. ``risk_key`` was computed JVM-side in the match stage."""
+    blacklisted, risk_tag). Left joins — never filtering — and all
+    broadcast. ``risk_key`` was computed JVM-side in the match stage."""
     out = alerts.join(F.broadcast(role_dim), on="role", how="left")
     out = out.join(F.broadcast(tool_dim), on="tool", how="left")
-    if bluedot_dim is not None:
-        out = out.join(F.broadcast(bluedot_dim), on="tool", how="left")
     rr = risk_ranges.select("lo", "hi", "risk_tag")
     out = out.join(
         F.broadcast(rr),
@@ -88,30 +82,3 @@ def bucketed_range_join(
         how,
     )
     return out.drop("_bucket")
-
-
-def _cond_expr(ec: EnrichCond) -> Column:
-    col = F.col(ec.fieldname)
-    if ec.op == "is":
-        return col.isin(list(ec.values))
-    if ec.op == "isnot":
-        return ~col.isin(list(ec.values)) & col.isNotNull()
-    if ec.op == "range_tag_is":
-        return F.col("risk_tag").isin(list(ec.values))
-    if ec.op == "in_any_range":
-        return F.col("risk_tag").isNotNull()
-    raise ValueError(f"unknown enrich op {ec.op}")
-
-
-def apply_enrich_filters(alerts: DataFrame, ruleset: RuleSet) -> DataFrame:
-    """Per-sid enrich-condition filter (only needed when the match stage ran
-    with fold_dims=False). One `when` chain, whole-stage-codegen friendly."""
-    expr = F.lit(True)
-    for rule in ruleset.rules:
-        if not rule.enrich:
-            continue
-        cond = F.lit(True)
-        for ec in rule.enrich:
-            cond = cond & _cond_expr(ec)
-        expr = F.when(F.col("sid") == rule.sid, cond).otherwise(expr)
-    return alerts.filter(expr)

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import warnings
 from collections.abc import Callable, Iterator
-from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -47,6 +46,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from ..datagen.dims import BLUEDOT_DIM, RISK_RANGES, ROLE_DIM, TOOL_DIM
 from ..rules.eval import compile_re, match_contents, meta_regex
 from ..rules.model import Rule, RuleSet
 
@@ -72,29 +72,20 @@ def risk_key_col(conv_id: str = "conv_id"):
     return F.pmod(F.crc32(F.encode(F.col(conv_id), "utf-8")), F.lit(RISK_MOD)).cast("long")
 
 
-@dataclass
-class _FoldedDims:
-    """Static dim contents used for compile-time folding (pandas frames)."""
-
-    role_dim: pd.DataFrame | None = None
-    tool_dim: pd.DataFrame | None = None
-    risk_ranges: pd.DataFrame | None = None
-    bluedot_dim: pd.DataFrame | None = None  # J3 reputation snapshot (tool-keyed)
-
-
-def _fold_enrich(rule: Rule, dims: _FoldedDims):
+def _fold_enrich(rule: Rule):
     """Fold dim-table enrich conditions into (role_set, tool_set, intervals).
 
     Returns (roles_allowed | None, tools_allowed | None,
     list[(lo, hi)] | None). None = unconstrained. Folding is exact because
-    role_dim/tool_dim key on an input column and are total over its domain.
+    the static dims (datagen/dims.py) key on an input column and are total
+    over its domain.
     """
     roles_ok: set[str] | None = None
     tools_ok: set[str] | None = None
     intervals: list[tuple[int, int]] | None = None
     for ec in rule.enrich:
-        if ec.dim == "role_dim" and dims.role_dim is not None:
-            d = dims.role_dim
+        if ec.dim == "role_dim":
+            d = ROLE_DIM
             if ec.op == "is":
                 ok = set(d.loc[d[ec.fieldname].isin(ec.values), "role"])
             elif ec.op == "isnot":
@@ -103,9 +94,7 @@ def _fold_enrich(rule: Rule, dims: _FoldedDims):
                 raise ValueError(f"unsupported role_dim op {ec.op}")
             roles_ok = ok if roles_ok is None else roles_ok & ok
         elif ec.dim in ("tool_dim", "bluedot_dim"):
-            d = dims.tool_dim if ec.dim == "tool_dim" else dims.bluedot_dim
-            if d is None:
-                continue
+            d = TOOL_DIM if ec.dim == "tool_dim" else BLUEDOT_DIM
             if ec.op == "is":
                 ok = set(d.loc[d[ec.fieldname].isin(ec.values), "tool"])
             elif ec.op == "isnot":
@@ -113,8 +102,8 @@ def _fold_enrich(rule: Rule, dims: _FoldedDims):
             else:
                 raise ValueError(f"unsupported {ec.dim} op {ec.op}")
             tools_ok = ok if tools_ok is None else tools_ok & ok
-        elif ec.dim == "risk_ranges" and dims.risk_ranges is not None:
-            d = dims.risk_ranges
+        elif ec.dim == "risk_ranges":
+            d = RISK_RANGES
             if ec.op == "range_tag_is":
                 sel = d.loc[d["risk_tag"].isin(ec.values)]
             elif ec.op == "in_any_range":
@@ -280,15 +269,13 @@ def _field_cond_mask(rule: Rule, extracted: pd.Series) -> np.ndarray:
 
 def make_matcher(
     ruleset: RuleSet,
-    dims: _FoldedDims | None = None,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Compile the rule set into a mapInPandas function.
 
     The returned closure (and the RuleSet inside it) is serialized once per
     task; regexes compile lazily per executor process.
     """
-    dims = dims or _FoldedDims()
-    folded = {r.sid: _fold_enrich(r, dims) for r in ruleset.rules}
+    folded = {r.sid: _fold_enrich(r) for r in ruleset.rules}
     rules = ruleset.rules
     out_cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key"]
 
@@ -642,7 +629,7 @@ def _native_extracted(rule: Rule) -> str:
     return f"map_from_arrays(array({', '.join(entries[0::2])}), array({', '.join(entries[1::2])}))"
 
 
-def _coarse_prefilter(rules: list[Rule], folded: dict, low: str = _LOWER_TEXT) -> str:
+def _coarse_prefilter(rules: list[Rule], folded: dict, low: str) -> str:
     """OR of per-rule cheap Spark-native conditions, as Spark SQL text —
     the fast-pattern prune that keeps non-candidate rows out of the Arrow
     crossing. ``low``: the shared lower(text), see _native_cond."""
@@ -691,25 +678,16 @@ def _prepare(df: DataFrame) -> DataFrame:
     )
 
 
-def _get_dims(fold_dims: bool) -> _FoldedDims:
-    if fold_dims:
-        from ..datagen.dims import BLUEDOT_DIM, RISK_RANGES, ROLE_DIM, TOOL_DIM
-
-        return _FoldedDims(ROLE_DIM, TOOL_DIM, RISK_RANGES, BLUEDOT_DIM)
-    return _FoldedDims()
-
-
 def make_fused_matcher(
     native_rules: list[Rule],
     udf_rules: list[Rule],
-    dims: _FoldedDims,
 ) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
     """Python half of the fused single-scan plan (see run_match
     mode="fused"). Native rules arrive PRE-EVALUATED: the JVM projection
     put their matched sids in the ``_nsids`` array column, so Python only
     runs their (cheap, vectorized) extraction — predicates never re-run.
     UDF rules evaluate exactly as in make_matcher."""
-    udf_matcher = make_matcher(RuleSet(tuple(udf_rules)), dims) if udf_rules else None
+    udf_matcher = make_matcher(RuleSet(tuple(udf_rules))) if udf_rules else None
     nat_by_sid = {r.sid: r for r in native_rules}
     out_cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key"]
 
@@ -741,14 +719,12 @@ def make_fused_matcher(
     return matcher
 
 
-# the concrete plans run_match builds; "auto" is resolved before it
-# (pipeline.resolve_match_mode)
+# the concrete plans run_match builds, chosen from the input by
+# pipeline.resolve_match_mode
 MATCH_MODES = ("fused", "hybrid")
 
 
-def run_match(
-    df: DataFrame, ruleset: RuleSet, fold_dims: bool = True, mode: str = "fused"
-) -> DataFrame:
+def run_match(df: DataFrame, ruleset: RuleSet, mode: str = "fused") -> DataFrame:
     """parse+match stage: input transcript DF → one row per (turn, sid).
 
     mode="fused" (default): ONE scan. Native-compilable rules are still
@@ -760,26 +736,30 @@ def run_match(
     scan dominates, so single-scan is the right default; the extra Arrow
     crossing for native-hit rows is bounded by the alert rate.
 
-    mode="hybrid": native rules explode JVM-side (zero Python for them),
-    UDF candidates cross Arrow — but the input is scanned TWICE. Wins only
-    when alert rate is high (dense rule sets) AND the scan is cheap
-    (cached/local) — measured at sf0.1 in BENCH/BASELINE.md.
+    mode="hybrid": a non-empty, all-native rule set explodes its hits
+    JVM-side — one scan and no Python stage at all, so a conv_id-bucketed
+    scan's partitioning reaches the replay and its exchange is elided
+    (pipeline.resolve_match_mode picks it for exactly that input). A rule
+    that is not native-compilable raises: it would need a Python stage.
 
     A rule set with few or no native rules needs no mode of its own: fused
     with an empty ``_nsids`` array is the single-scan all-Python plan.
+    Enrich conditions over the static dims are always folded into the
+    predicates (_fold_enrich).
     """
     if mode not in MATCH_MODES:
-        # "auto" must be resolved by the caller (pipeline.resolve_match_mode)
-        # BEFORE reaching here — hybrid is the fallthrough branch below, and
-        # an unknown mode silently becoming a two-scan plan is the kind of
-        # default drift this engine refuses.
+        # "auto" is pipeline.resolve_match_mode's job, never a plan here
         raise ValueError(f"unknown match mode {mode!r}")
-    check_sql_literals(df.sparkSession)
-    dims = _get_dims(fold_dims)
-    prepared = _prepare(df)
-    folded = {r.sid: _fold_enrich(r, dims) for r in ruleset.rules}
     native_rules = [r for r in ruleset.rules if native_compilable(r)]
     udf_rules = [r for r in ruleset.rules if not native_compilable(r)]
+    if mode == "hybrid" and (udf_rules or not native_rules):
+        raise ValueError(
+            "match mode 'hybrid' needs a non-empty, all-native rule set; not "
+            f"native-compilable: {[r.sid for r in udf_rules]}"
+        )
+    check_sql_literals(df.sparkSession)
+    prepared = _prepare(df)
+    folded = {r.sid: _fold_enrich(r) for r in ruleset.rules}
 
     # one shared lower(text) column for every nocase predicate and derived
     # rlike guard: the per-rule CASE branches defeat Catalyst's
@@ -807,26 +787,14 @@ def run_match(
             cand = f"({cand} OR {_coarse_prefilter(udf_rules, folded, lct)})"
         fused_in = with_lct.withColumn("_nsids", F.expr(nsids)).filter(cand).drop("_lct")
         return fused_in.mapInPandas(
-            make_fused_matcher(native_rules, udf_rules, dims), schema=MATCH_SCHEMA
+            make_fused_matcher(native_rules, udf_rules), schema=MATCH_SCHEMA
         )
 
     cols = ("conv_id", "turn_idx", "role", "text", "tool", "ts", "risk_key")
-    parts: list[DataFrame] = []
-    if native_rules:
-        hits = ", ".join(
-            f"CASE WHEN {_native_cond(r, folded[r.sid], lct)} THEN struct("
-            f"CAST({r.sid} AS BIGINT) AS sid, {_native_extracted(r)} AS extracted) END"
-            for r in native_rules
-        )
-        native_df = with_lct.selectExpr(*cols, f"explode(array_compact(array({hits}))) AS _h")
-        parts.append(native_df.selectExpr(*cols, "_h.sid AS sid", "_h.extracted AS extracted"))
-    if udf_rules:
-        cand = prepared.filter(_coarse_prefilter(udf_rules, folded))
-        udf_df = cand.mapInPandas(
-            make_matcher(RuleSet(tuple(udf_rules)), dims), schema=MATCH_SCHEMA
-        )
-        parts.append(udf_df)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    hits = ", ".join(
+        f"CASE WHEN {_native_cond(r, folded[r.sid], lct)} THEN struct("
+        f"CAST({r.sid} AS BIGINT) AS sid, {_native_extracted(r)} AS extracted) END"
+        for r in native_rules
+    )
+    native_df = with_lct.selectExpr(*cols, f"explode(array_compact(array({hits}))) AS _h")
+    return native_df.selectExpr(*cols, "_h.sid AS sid", "_h.extracted AS extracted")

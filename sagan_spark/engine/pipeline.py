@@ -1,10 +1,11 @@
 """End-to-end batch pipeline: parse → match → enrich → correlate → route.
 
 The Spark re-expression of Sagan's per-event loop (SURVEY §3.2 E1). The
-default match_mode="auto" resolves to the fused plan below on ordinary
-input, and to the zero-exchange hybrid plan when the scan is bucketed by
-conv_id and every rule is native (resolve_match_mode). Fused plan shape
-(asserted by tests/test_plan_shape.py):
+input picks the match plan, no option does (resolve_match_mode): the fused
+plan below on ordinary input, and the zero-exchange hybrid plan when the
+scan is bucketed by conv_id and every rule is native. Enrich conditions
+are always folded into the match stage. Fused plan shape (asserted by
+tests/test_plan_shape.py):
 
   ONE parquet/Iceberg scan (ReadSchema pruned to the 6 transcript columns)
     → Project: native-rule CASE array → `_nsids` [whole-stage codegen]
@@ -35,7 +36,6 @@ rules as for 58.
 
 from __future__ import annotations
 
-import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -48,9 +48,6 @@ from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import correlate, enrich, match, route
 from .. import io as iomod
-
-
-logger = logging.getLogger("sagan_spark.pipeline")
 
 
 def _scan_bucketed_by(df: DataFrame, col: str) -> bool:
@@ -81,44 +78,27 @@ def _scan_bucketed_by(df: DataFrame, col: str) -> bool:
         return False
 
 
-def resolve_match_mode(
-    input_df: DataFrame, ruleset: RuleSet, match_mode: str = "auto"
-) -> str:
-    """Resolve ``match_mode="auto"`` to a concrete plan.
+def resolve_match_mode(input_df: DataFrame, ruleset: RuleSet) -> str:
+    """The match plan for ``ruleset`` over ``input_df``, read off the input.
 
-    auto → "hybrid" iff every rule is native-compilable AND the input scan
-    is bucketed by conv_id: the all-native hybrid plan is a SINGLE scan
-    with zero Python stages before the replay (native rules explode
-    JVM-side), so the scan's bucket partitioning survives to the conv_id
-    replay and the Exchange is elided entirely — the measured 100-TB
-    headline plan (tests/test_bucketed_layout.py, docs/SCALE.md). The
-    fused mode's MapInPandas reports UnknownPartitioning and always
-    re-inserts that exchange, so on a bucketed table defaults would
-    silently pay a shuffle the engine can provably skip.
+    "hybrid" iff the rule set is non-empty, every rule is native-compilable
+    AND the input scan is bucketed by conv_id: the all-native hybrid plan
+    is a SINGLE scan with zero Python stages before the replay (native
+    rules explode JVM-side), so the scan's bucket partitioning survives to
+    the conv_id replay and the Exchange is elided entirely — the measured
+    100-TB headline plan (tests/test_bucketed_layout.py, docs/SCALE.md).
+    The fused plan's MapInPandas reports UnknownPartitioning and always
+    re-inserts that exchange, so on such a table it would pay a shuffle
+    the engine can provably skip.
 
-    auto → "fused" otherwise (any Python-path rule, or an unbucketed
-    scan): one scan, JVM candidate pruning, one Arrow crossing — the
-    scan-dominated default measured in BENCH/BASELINE.md.
-
-    An EXPLICIT mode is honored as given; if it leaves the elision on the
-    table (fused on a bucketed all-native workload) a log line says so
-    rather than second-guessing the caller.
+    "fused" otherwise (any Python-path rule, no rule at all, or an
+    unbucketed scan): one scan, JVM candidate pruning, one Arrow crossing —
+    the scan-dominated default measured in BENCH/BASELINE.md.
     """
-    all_native = all(match.native_compilable(r) for r in ruleset.rules)
-    if match_mode != "auto":
-        if all_native and match_mode != "hybrid" and _scan_bucketed_by(input_df, "conv_id"):
-            logger.info(
-                "input is bucketed by conv_id and every rule is native-"
-                "compilable: match_mode='hybrid' (or 'auto') would elide "
-                "the conv_id exchange entirely; explicit %r keeps it",
-                match_mode,
-            )
-        return match_mode
+    all_native = bool(ruleset.rules) and all(
+        match.native_compilable(r) for r in ruleset.rules
+    )
     if all_native and _scan_bucketed_by(input_df, "conv_id"):
-        logger.info(
-            "auto match_mode → 'hybrid': bucketed conv_id scan + all-native "
-            "rules, replay exchange elided"
-        )
         return "hybrid"
     return "fused"
 
@@ -147,8 +127,6 @@ def build_alerts(
     spark: SparkSession,
     input_df: DataFrame,
     ruleset: RuleSet = CANONICAL,
-    fold_dims: bool = True,
-    match_mode: str = "auto",
 ) -> DataFrame:
     """The alert DataFrame (lazy).
 
@@ -166,21 +144,13 @@ def build_alerts(
     from ..packaging import ensure_shipped
 
     ensure_shipped(spark)
-    match_mode = resolve_match_mode(input_df, ruleset, match_mode)
-    matched = match.run_match(input_df, ruleset, fold_dims=fold_dims, mode=match_mode)
+    matched = match.run_match(input_df, ruleset, mode=resolve_match_mode(input_df, ruleset))
     enriched = enrich.attach_dims(
         matched,
         dimsmod.role_dim(spark),
         dimsmod.tool_dim(spark),
         dimsmod.risk_ranges(spark),
-        dimsmod.bluedot_dim(spark) if not fold_dims else None,
     )
-    if not fold_dims:
-        enriched = enrich.apply_enrich_filters(enriched, ruleset)
-        # bd_* are filter-only attributes of the unfolded path (folded mode
-        # never attaches them) — drop after filtering so PipelineResult.alerts
-        # has the SAME schema in both modes
-        enriched = enriched.drop("bd_category", "bd_score")
     # non-conv tracked rules (by_username → role, by_dst → tool) split the
     # plan into a conv-keyed and one-or-more track-keyed replay branches —
     # dual consumers of the match subtree, so persist it (MapInPandas
@@ -281,8 +251,6 @@ def run(
     input_path: str,
     ruleset: RuleSet = CANONICAL,
     out_dir: str | None = None,
-    fold_dims: bool = True,
-    match_mode: str = "auto",
 ) -> PipelineResult:
     """Execute the pipeline.
 
@@ -295,7 +263,7 @@ def run(
     alerts. Nothing is persisted (role-tracked rule sets aside:
     PipelineResult.unpersist).
     """
-    alerts, read_input = _alerts(spark, input_path, ruleset, fold_dims, match_mode)
+    alerts, read_input = _alerts(spark, input_path, ruleset)
     if out_dir is None:
         observed, read_counts = observe_alerts(alerts, ruleset, read_input)
         _noop(observed)
@@ -306,14 +274,14 @@ def run(
 
 
 def _alerts(
-    spark: SparkSession, input_path: str, ruleset: RuleSet, fold_dims: bool, match_mode: str
+    spark: SparkSession, input_path: str, ruleset: RuleSet
 ) -> tuple[DataFrame, Callable[[], dict]]:
     """The alerts of ``input_path``, built over an input observation, and
     that observation's reader (observe_input)."""
     df, read_input = observe_input(
         iomod.read_table(spark, input_path, columns=iomod.TRANSCRIPT_COLUMNS)
     )
-    return build_alerts(spark, df, ruleset, fold_dims=fold_dims, match_mode=match_mode), read_input
+    return build_alerts(spark, df, ruleset), read_input
 
 
 def _noop(df: DataFrame) -> None:
@@ -325,8 +293,6 @@ def run_dynamic(
     input_path: str,
     ruleset: RuleSet = CANONICAL,
     out_dir: str | None = None,
-    fold_dims: bool = True,
-    match_mode: str = "auto",
 ) -> PipelineResult:
     """C7 depends_on / dynamic rules ([PUB src/processors/dynamic-rules.c]),
     two-pass batch semantics: pass 1 runs all independent rules; a dependent
@@ -342,7 +308,7 @@ def run_dynamic(
     dependents = [r for r in ruleset.rules if r.depends_on is not None]
 
     def run_pass(rs: RuleSet) -> PipelineResult:
-        alerts, read_input = _alerts(spark, input_path, rs, fold_dims, match_mode)
+        alerts, read_input = _alerts(spark, input_path, rs)
         alerts, read_counts = observe_alerts(alerts, rs, read_input)
         if out_dir is not None:
             alerts.persist(StorageLevel.MEMORY_AND_DISK)

@@ -33,9 +33,10 @@ def read_table(spark: SparkSession, location: str, columns: list[str] | None = N
     """Read a table by location. ``location`` is either a slash-free table
     IDENTIFIER — Iceberg when the extension is loaded, otherwise a catalog
     table via ``spark.table`` (the form conv_id-BUCKETED tables take, so a
-    config file pointing at one gets the zero-exchange replay plan from
-    match_mode="auto" with no code) — or a parquet path. Column pruning is
-    passed through so Catalyst pushes ``ReadSchema`` down to the scan."""
+    config file pointing at one gets the zero-exchange replay plan, which
+    pipeline.resolve_match_mode reads off the scan) — or a parquet path.
+    Column pruning is passed through so Catalyst pushes ``ReadSchema`` down
+    to the scan."""
     if "/" not in location:
         if _iceberg_available(spark):
             df = spark.read.format("iceberg").load(location)

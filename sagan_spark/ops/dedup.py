@@ -673,96 +673,76 @@ def embedding_near_dups(
 
 
 def simhash_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16,
-    kernel: bool = True,
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
 ) -> DataFrame:
     """Cross-engine-reproducible SimHash variant: token hash = first 8 hex
     chars of md5(token) as int; bit b of the fingerprint = majority vote of
     token-hash bit b (every occurrence votes). ``bits`` kept small so the
     SQL oracle (one aggregate per bit) stays readable.
 
-    Plan (r7): by default the whole tokenize → md5 → majority-vote runs in
+    Plan (r7): the whole tokenize → md5 → majority-vote runs in
     ONE mapInPandas kernel over (id, text) — ZERO shuffle (the explode →
     17-partial-aggregate groupBy is gone), hashlib's C md5 instead of one
     JVM md5 per token OCCURRENCE (the kernel memoizes per distinct token,
     which the aggregate form cannot), and numpy popcount-style bit sums.
     Python lower()/split(" ")/utf-8-md5 reproduce the JVM expressions
     exactly on ASCII (same discipline as the minhash_signature fast path;
-    pinned by test_simhash_kernel_equals_column_path incl. null/empty/
-    non-ASCII/double-space rows). ``kernel=False`` keeps the original
-    Column path (the differential oracle)."""
-    if kernel:
-        import pandas as pd
+    pinned by test_simhash_kernel_equals_column_path, against the original
+    Column path kept in tests/test_ops.py, incl. null/empty/non-ASCII/
+    double-space rows)."""
+    import pandas as pd
 
-        def sim_kernel(batches):
-            import hashlib
+    def sim_kernel(batches):
+        import hashlib
 
-            import numpy as np
+        import numpy as np
 
-            md5 = hashlib.md5
-            memo: dict[str, int] = {}
-            shifts = np.arange(bits, dtype=np.uint64)
-            for pdf in batches:
-                ids: list = []
-                sims: list = []
-                for did, text in zip(pdf[id_col].values, pdf[text_col].values):
-                    if text is None or (isinstance(text, float) and pd.isna(text)):
+        md5 = hashlib.md5
+        memo: dict[str, int] = {}
+        shifts = np.arange(bits, dtype=np.uint64)
+        for pdf in batches:
+            ids: list = []
+            sims: list = []
+            for did, text in zip(pdf[id_col].values, pdf[text_col].values):
+                if text is None or (isinstance(text, float) and pd.isna(text)):
+                    continue
+                hs = []
+                for tok in text.lower().split(" "):
+                    if not tok:
                         continue
-                    hs = []
-                    for tok in text.lower().split(" "):
-                        if not tok:
-                            continue
-                        h = memo.get(tok)
-                        if h is None:
-                            h = int(md5(tok.encode("utf-8")).hexdigest()[:8], 16)
-                            memo[tok] = h
-                        hs.append(h)
-                    n = len(hs)
-                    if n == 0:  # no non-empty token → no row (groupBy semantics)
-                        continue
-                    arr = np.asarray(hs, dtype=np.uint64)
-                    bit_sums = ((arr[:, None] >> shifts) & 1).sum(axis=0)
-                    sim = int(((bit_sums * 2 > n).astype(np.uint64) << shifts).sum())
-                    ids.append(did)
-                    sims.append(sim)
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="object"),
-                        "simhash": pd.Series(sims, dtype="object"),
-                    }
-                )
-
-        id_type = dict(df.select(id_col).dtypes)[id_col]
-        narrow = df.select(F.col(id_col), F.col(text_col))
-        # single-file inputs scan as 1 task (row-group granularity) and
-        # would serialize the kernel on one core — spread them first;
-        # no-op whenever the scan already has ≥ cores splits, SKIPPED
-        # when the input is tiny (see _SPREAD_MIN_BYTES)
-        spark = narrow.sparkSession
-        p = spark.sparkContext.defaultParallelism
-        if narrow.rdd.getNumPartitions() < p:
-            sz = _est_size_bytes(narrow)
-            if sz is None or sz >= _SPREAD_MIN_BYTES:
-                narrow = narrow.repartition(p)
-        return narrow.mapInPandas(sim_kernel, schema=f"{id_col} {id_type}, simhash long")
-    toks = df.select(
-        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
-    ).where(F.length("tok") > 0)
-    h = toks.select(
-        id_col, F.conv(F.substring(F.md5(F.encode(F.col("tok"), "utf-8")), 1, 8), 16, 10).cast("long").alias("h")
-    )
-    bit_sums = h.groupBy(id_col).agg(
-        F.count("*").alias("n"),
-        *[F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"b{b}") for b in range(bits)],
-    )
-    sim = F.lit(0).cast("long")
-    for b in range(bits):
-        sim = sim.bitwiseOR(
-            F.when(F.col(f"b{b}") * 2 > F.col("n"), F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
-                F.lit(0).cast("long")
+                    h = memo.get(tok)
+                    if h is None:
+                        h = int(md5(tok.encode("utf-8")).hexdigest()[:8], 16)
+                        memo[tok] = h
+                    hs.append(h)
+                n = len(hs)
+                if n == 0:  # no non-empty token → no row (groupBy semantics)
+                    continue
+                arr = np.asarray(hs, dtype=np.uint64)
+                bit_sums = ((arr[:, None] >> shifts) & 1).sum(axis=0)
+                sim = int(((bit_sums * 2 > n).astype(np.uint64) << shifts).sum())
+                ids.append(did)
+                sims.append(sim)
+            yield pd.DataFrame(
+                {
+                    id_col: pd.Series(ids, dtype="object"),
+                    "simhash": pd.Series(sims, dtype="object"),
+                }
             )
-        )
-    return bit_sums.select(F.col(id_col), sim.alias("simhash"))
+
+    id_type = dict(df.select(id_col).dtypes)[id_col]
+    narrow = df.select(F.col(id_col), F.col(text_col))
+    # single-file inputs scan as 1 task (row-group granularity) and
+    # would serialize the kernel on one core — spread them first;
+    # no-op whenever the scan already has ≥ cores splits, SKIPPED
+    # when the input is tiny (see _SPREAD_MIN_BYTES)
+    spark = narrow.sparkSession
+    p = spark.sparkContext.defaultParallelism
+    if narrow.rdd.getNumPartitions() < p:
+        sz = _est_size_bytes(narrow)
+        if sz is None or sz >= _SPREAD_MIN_BYTES:
+            narrow = narrow.repartition(p)
+    return narrow.mapInPandas(sim_kernel, schema=f"{id_col} {id_type}, simhash long")
 
 
 def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

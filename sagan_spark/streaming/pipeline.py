@@ -3,7 +3,7 @@
 The reference consumes an unbounded FIFO ([PUB src/input-pipe.c]); here the
 same stages run over ``readStream``:
 
-  file/Iceberg stream → hybrid match (stream-safe: Column exprs +
+  file/Iceberg stream → fused match (stream-safe: SQL exprs +
   mapInPandas) → stream-static broadcast enrich joins →
   ``applyInPandasWithState`` keyed by conv_id for after/threshold/flexbit
   state (carried across micro-batches) → one write of every sink per
@@ -350,7 +350,6 @@ def build_stream(
     ruleset: RuleSet = CANONICAL,
     max_files_per_trigger: int = 1,
     state_ttl_minutes: int | None = None,
-    match_mode: str = "auto",
     track_hwm_cap: int = 100_000,
 ) -> DataFrame:
     """The streaming alert DataFrame (unstarted query).
@@ -367,17 +366,14 @@ def build_stream(
     from ..packaging import ensure_shipped
 
     ensure_shipped(spark)
-    if match_mode == "auto":
-        # the batch auto rule (bucketed scan + all-native → hybrid) never
-        # applies to a file stream: micro-batch scans carry no bucket
-        # partitioning, so the fused single-crossing plan is always right
-        match_mode = "fused"
     stream = (
         spark.readStream.schema(TRANSCRIPT_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
-    matched = match.run_match(stream, ruleset, mode=match_mode)
+    # always fused: micro-batch scans carry no bucket partitioning, so the
+    # batch engine's hybrid choice (pipeline.resolve_match_mode) never applies
+    matched = match.run_match(stream, ruleset, mode="fused")
     enriched = enrich.attach_dims(
         matched,
         dimsmod.role_dim(spark),
@@ -702,7 +698,6 @@ def run_stream(
     max_files_per_trigger: int = 1,
     state_ttl_minutes: int | None = None,
     trigger_processing_time: str | None = None,
-    match_mode: str = "auto",
     track_hwm_cap: int = 100_000,
     drain: bool = False,
 ):
@@ -741,7 +736,7 @@ def run_stream(
     check_checkpoint_layout(spark, checkpoint_dir, has_stateful)
     alerts = build_stream(
         spark, input_dir, ruleset, max_files_per_trigger, state_ttl_minutes,
-        match_mode=match_mode, track_hwm_cap=track_hwm_cap,
+        track_hwm_cap=track_hwm_cap,
     )
     writer = (
         alerts.writeStream.foreachBatch(make_batch_writer(out_dir, ruleset.sinks()))

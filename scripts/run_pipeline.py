@@ -96,37 +96,23 @@ def main(argv: list[str] | None = None) -> None:
     )
 
     if mode == "batch":
-        res = pipeline.run(
-            spark, inp, ruleset, out_dir=output,
-            fold_dims=cfg.fold_dims, match_mode=cfg.match_mode,
-        )
+        res = pipeline.run(spark, inp, ruleset, out_dir=output)
         print(json.dumps({"sink_counts": res.sink_counts, "sid_counts": res.sid_counts}))
         res.unpersist()
     elif mode == "dynamic":
-        res = pipeline.run_dynamic(
-            spark, inp, ruleset, out_dir=output,
-            fold_dims=cfg.fold_dims, match_mode=cfg.match_mode,
-        )
+        res = pipeline.run_dynamic(spark, inp, ruleset, out_dir=output)
         print(json.dumps({"sink_counts": res.sink_counts, "sid_counts": res.sid_counts}))
     elif mode == "resumable":
         out = resume_dir or (output + "/_bookmarks")
-        r = checkpoint.run_resumable(
-            spark, inp, out, ruleset,
-            fold_dims=cfg.fold_dims, match_mode=cfg.match_mode,
-        )
+        r = checkpoint.run_resumable(spark, inp, out, ruleset)
         print(json.dumps({"processed": r.processed_units, "skipped": r.skipped_units, **r.totals}))
     else:  # stream
         from sagan_spark.streaming import pipeline as sp
 
-        if not cfg.fold_dims:
-            # streaming always folds enrich conditions into the match
-            # stage; ignoring the knob would silently change semantics
-            ap.error("fold_dims: false is not supported in stream mode")
         q = sp.run_stream(
             spark, inp, output, checkpoint_dir, ruleset,
             max_files_per_trigger=cfg.max_files_per_trigger,
             state_ttl_minutes=cfg.state_ttl_minutes,
-            match_mode=cfg.match_mode,
             track_hwm_cap=cfg.track_hwm_cap,
             drain=cfg.stream_drain,
         )

@@ -8,11 +8,11 @@ real cluster; the iceberg jar itself is absent in this sandbox, io.py).
 
 Scope, honestly: partitioning survives only through PURE-COLUMN stages.
 A MapInPandas node reports UnknownPartitioning (probed empirically), so
-the fused match mode — one Python crossing for the candidate slice —
+the fused match plan — one Python crossing for the candidate slice —
 always re-inserts the exchange. The exchange-free plan is real for the
 all-native-rule regime via the hybrid plan (native rules explode
-JVM-side) — and since r6 the DEFAULT match_mode="auto" selects it
-whenever the scan is bucketed by conv_id and every rule is native
+JVM-side), which the engine picks from its input whenever the scan is
+bucketed by conv_id and every rule is native
 (pipeline.resolve_match_mode); with Python-path rules the exchange
 returns but only ever moves the matched ~1% slice. All asserted below.
 """
@@ -21,7 +21,7 @@ from __future__ import annotations
 
 import pytest
 
-from sagan_spark.rules.model import AfterSpec, ContentSpec, Rule, RuleSet
+from sagan_spark.rules.model import AfterSpec, ContentSpec, GrokSpec, Rule, RuleSet
 
 NATIVE_RS = RuleSet(
     (
@@ -33,6 +33,19 @@ NATIVE_RS = RuleSet(
             after=AfterSpec(track="conv_id", count=2, seconds=100_000),
         ),
         Rule(sid=4600002, msg="plain err", sink="eve", contents=(ContentSpec("error",),)),
+    )
+)
+# one Python-path rule (grok) keeps the whole set on the fused plan
+GROKKED_RS = RuleSet(
+    NATIVE_RS.rules
+    + (
+        Rule(
+            sid=4600003,
+            msg="py path",
+            sink="fast",
+            contents=(ContentSpec("error",),),
+            groks=(GrokSpec(r"code=(?P<code>\d+)", required=False),),
+        ),
     )
 )
 
@@ -63,16 +76,23 @@ def _n_conv_exchanges(df) -> int:
     return plan.count("Exchange hashpartitioning(conv_id")
 
 
-def _alerts(spark, src, match_mode):
+def _alerts(spark, src, ruleset=NATIVE_RS):
     from sagan_spark.engine.pipeline import build_alerts
 
-    return build_alerts(spark, src, NATIVE_RS, match_mode=match_mode)
+    return build_alerts(spark, src, ruleset)
+
+
+def _rows(df):
+    return sorted(
+        (r.conv_id, int(r.turn_idx), int(r.sid))
+        for r in df.select("conv_id", "turn_idx", "sid").collect()
+    )
 
 
 def test_bucketed_scan_eliminates_replay_exchange(spark, bucketed):
     plain, table = bucketed
-    bdf = _alerts(spark, spark.table(table), "hybrid")
-    pdf_plan = _alerts(spark, spark.read.parquet(plain), "hybrid")
+    bdf = _alerts(spark, spark.table(table))
+    pdf_plan = _alerts(spark, spark.read.parquet(plain))
     assert _n_conv_exchanges(bdf) == 0, "bucketed all-native plan still shuffles"
     assert _n_conv_exchanges(pdf_plan) >= 1, "plain-parquet plan lost its exchange?"
     # The exchange elision is only SOUND if the scan actually reads
@@ -86,86 +106,85 @@ def test_bucketed_scan_eliminates_replay_exchange(spark, bucketed):
 
 def test_bucketed_and_plain_outputs_equal(spark, bucketed):
     plain, table = bucketed
-    rows = lambda df: sorted(  # noqa: E731
-        (r.conv_id, int(r.turn_idx), int(r.sid))
-        for r in df.select("conv_id", "turn_idx", "sid").collect()
-    )
-    got_b = rows(_alerts(spark, spark.table(table), "hybrid"))
-    got_p = rows(_alerts(spark, spark.read.parquet(plain), "hybrid"))
+    got_b = _rows(_alerts(spark, spark.table(table)))
+    got_p = _rows(_alerts(spark, spark.read.parquet(plain)))
     assert got_b == got_p and len(got_b) > 0
 
 
 def test_fused_mode_python_stage_reinserts_exchange(spark, bucketed):
-    """Documented limitation: the fused mode's single mapInPandas crossing
-    reports UnknownPartitioning, so even a bucketed scan shuffles before
-    the replay — the exchange moves only the matched slice, but bucketed
-    deployments of all-native rule sets should choose hybrid."""
-    _, table = bucketed
-    fused = _alerts(spark, spark.table(table), "fused")
+    """Documented limitation: the fused plan's single mapInPandas crossing
+    reports UnknownPartitioning, so with a Python-path rule even a
+    bucketed scan shuffles before the replay — the exchange moves only
+    the matched slice."""
+    plain, table = bucketed
+    fused = _alerts(spark, spark.table(table), GROKKED_RS)
     assert _n_conv_exchanges(fused) >= 1
-    # equality across modes still holds on the bucketed input
-    rows = lambda df: sorted(  # noqa: E731
-        (r.conv_id, int(r.turn_idx), int(r.sid))
-        for r in df.select("conv_id", "turn_idx", "sid").collect()
-    )
-    assert rows(fused) == rows(_alerts(spark, spark.table(table), "hybrid"))
+    # the bucketed input still gives the plain input's alerts
+    got = _rows(fused)
+    assert got == _rows(_alerts(spark, spark.read.parquet(plain), GROKKED_RS)) and got
 
 
 def test_auto_mode_defaults_to_exchange_free_plan_on_bucketed(spark, bucketed):
-    """r6: the DEFAULT pipeline (match_mode='auto') must pick the measured
-    zero-shuffle plan itself when it is sound — bucketed conv_id scan +
-    all-native rules — instead of hiding it behind an explicit mode."""
+    """r6: the pipeline must pick the measured zero-shuffle plan itself
+    when it is sound — bucketed conv_id scan + all-native rules."""
     from sagan_spark.engine.pipeline import build_alerts
 
     plain, table = bucketed
-    auto_b = build_alerts(spark, spark.table(table), NATIVE_RS)  # default mode
+    auto_b = build_alerts(spark, spark.table(table), NATIVE_RS)
     assert _n_conv_exchanges(auto_b) == 0, "auto on bucketed input still shuffles"
     plan = auto_b._jdf.queryExecution().executedPlan().toString()
     assert "Bucketed: true" in plan
     # plain parquet stays on the fused single-scan default (exchange present)
     auto_p = build_alerts(spark, spark.read.parquet(plain), NATIVE_RS)
     assert _n_conv_exchanges(auto_p) >= 1
-    # and the auto plan's output is identical to both explicit modes
-    rows = lambda df: sorted(  # noqa: E731
-        (r.conv_id, int(r.turn_idx), int(r.sid))
-        for r in df.select("conv_id", "turn_idx", "sid").collect()
-    )
-    got = rows(auto_b)
-    assert got == rows(auto_p) == rows(_alerts(spark, spark.table(table), "fused"))
-    assert len(got) > 0
+    # and the bucketed plan's output is identical to the plain one's
+    got = _rows(auto_b)
+    assert got == _rows(auto_p) and len(got) > 0
 
 
 def test_auto_mode_resolution(spark, bucketed):
-    """Resolver unit surface: hybrid ONLY for bucketed + all-native; a
-    single Python-path rule (grok) keeps the fused default even on the
-    bucketed table; explicit modes are honored."""
+    """Resolver unit surface: hybrid ONLY for bucketed + non-empty
+    all-native; a single Python-path rule (grok) or an empty rule set
+    keeps the fused plan even on the bucketed table."""
+    from sagan_spark.engine import match as matchmod
     from sagan_spark.engine.pipeline import resolve_match_mode
-    from sagan_spark.rules.model import GrokSpec
 
     plain, table = bucketed
     bdf, pdf = spark.table(table), spark.read.parquet(plain)
-    assert resolve_match_mode(bdf, NATIVE_RS, "auto") == "hybrid"
-    assert resolve_match_mode(pdf, NATIVE_RS, "auto") == "fused"
-    grokked = RuleSet(
-        NATIVE_RS.rules
-        + (
-            Rule(
-                sid=4600003,
-                msg="py path",
-                sink="fast",
-                contents=(ContentSpec("error",),),
-                groks=(GrokSpec(r"code=(?P<code>\d+)", required=False),),
-            ),
-        )
-    )
-    assert resolve_match_mode(bdf, grokked, "auto") == "fused"
-    from sagan_spark.engine import match as matchmod
-
-    for explicit in matchmod.MATCH_MODES:
-        assert resolve_match_mode(bdf, NATIVE_RS, explicit) == explicit
-    # unresolved "auto" must never leak into run_match's hybrid fallthrough
+    assert resolve_match_mode(bdf, NATIVE_RS) == "hybrid"
+    assert resolve_match_mode(pdf, NATIVE_RS) == "fused"
+    assert resolve_match_mode(bdf, GROKKED_RS) == "fused"
+    assert resolve_match_mode(bdf, RuleSet(())) == "fused"
+    # "auto" is not a plan run_match builds
     with pytest.raises(ValueError, match="unknown match mode"):
         matchmod.run_match(bdf, NATIVE_RS, mode="auto")
+
+
+def test_hybrid_refuses_python_path_rule(spark, bucketed):
+    """The hybrid plan has no Python stage, so run_match refuses it for a
+    rule set with a rule that is not native-compilable (or none at all)
+    instead of dropping that rule."""
+    from sagan_spark.engine import match as matchmod
+
+    _, table = bucketed
+    with pytest.raises(ValueError, match="4600003"):
+        matchmod.run_match(spark.table(table), GROKKED_RS, mode="hybrid")
+    with pytest.raises(ValueError, match="non-empty, all-native"):
+        matchmod.run_match(spark.table(table), RuleSet(()), mode="hybrid")
+
+
+def test_empty_ruleset_on_bucketed_input(spark, bucketed):
+    """No rules over a conv_id-bucketed table: zero alerts and no counts.
+    all() over no rules is true, so the resolver must see the empty set
+    before it picks the hybrid plan, which needs at least one rule."""
+    from sagan_spark.engine import pipeline
+
+    _, table = bucketed
+    empty = RuleSet(())
+    assert _alerts(spark, spark.table(table), empty).count() == 0
+    res = pipeline.run(spark, table, ruleset=empty)
+    assert res.sink_counts == {} and res.sid_counts == {}
+    assert res.metrics["alerts"] == 0
 
 
 class _QueryExecutionFails:
@@ -195,16 +214,12 @@ def test_bucket_probe_failure_falls_back_to_fused(spark, bucketed, monkeypatch):
     broken = _QueryExecutionFails(bdf._jdf)
     monkeypatch.setattr(bdf, "_jdf", broken)
     assert _scan_bucketed_by(bdf, "conv_id") is False
-    assert resolve_match_mode(bdf, NATIVE_RS, "auto") == "fused"
+    assert resolve_match_mode(bdf, NATIVE_RS) == "fused"
     assert broken.probed == 2
-    got = _alerts(spark, bdf, "auto")
+    got = _alerts(spark, bdf)
     assert _n_conv_exchanges(got) >= 1
-    rows = lambda df: sorted(  # noqa: E731
-        (r.conv_id, int(r.turn_idx), int(r.sid))
-        for r in df.select("conv_id", "turn_idx", "sid").collect()
-    )
-    want = rows(_alerts(spark, spark.table(table), "hybrid"))
-    assert rows(got) == want and want
+    want = _rows(_alerts(spark, spark.table(table)))
+    assert _rows(got) == want and want
 
 
 def test_pipeline_run_on_catalog_identifier_elides_exchange(spark, bucketed):

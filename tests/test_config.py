@@ -17,7 +17,6 @@ from sagan_spark.config import (
     load_ruleset,
     parse_config,
 )
-from sagan_spark.engine.match import MATCH_MODES
 
 _EXAMPLE = """\
 # sagan_spark.yaml — example from the module docstring
@@ -28,8 +27,6 @@ rules:
   - rules/base.rules
   - rules/extra.rules
 engine:
-  match_mode: hybrid
-  fold_dims: false
   shuffle_partitions: 4096
   state_ttl_minutes: 30
   max_files_per_trigger: 2
@@ -46,8 +43,6 @@ def test_parse_example():
     assert cfg.output == "/data/alerts"
     assert cfg.mode == "stream"
     assert cfg.rules == ("rules/base.rules", "rules/extra.rules")
-    assert cfg.match_mode == "hybrid"
-    assert cfg.fold_dims is False
     assert cfg.shuffle_partitions == 4096
     assert cfg.state_ttl_minutes == 30
     assert cfg.max_files_per_trigger == 2
@@ -87,6 +82,8 @@ def test_comment_and_quote_edge_cases():
         "  orphan: 1",  # indented line outside a section
         "mode: nonsense",  # validated enum
         "engine:\n  match_mode: udf",  # removed match mode
+        "engine:\n  match_mode: fused",  # the input picks the match plan
+        "engine:\n  fold_dims: false",  # enrich conditions are always folded
         "rules:\n  - bad_sink.rules",  # a rule routed to no sink that exists
     ],
 )
@@ -119,8 +116,6 @@ def test_round_trip_property():
             output=st.one_of(st.none(), path),
             mode=st.sampled_from(["batch", "resumable", "stream", "dynamic"]),
             rules=st.lists(path, max_size=3).map(tuple),
-            match_mode=st.sampled_from(["auto", *MATCH_MODES]),
-            fold_dims=st.booleans(),
             shuffle_partitions=st.one_of(st.none(), st.integers(1, 10000)),
             master=st.one_of(st.none(), st.just("local[8]")),
             state_ttl_minutes=st.one_of(st.none(), st.integers(1, 100)),
@@ -182,7 +177,6 @@ def test_pipeline_runs_from_config(spark, tiny_path, tiny_pdf, tmp_path, capsys)
         "rules:\n"
         f"  - {rules}\n"
         "engine:\n"
-        "  match_mode: fused\n"
         "  master: local[4]\n"
     )
     # main's get_spark must leave the shared test session's settings alone

@@ -154,10 +154,37 @@ def test_lsh_cap_bounds_pathological_bucket(spark):
     assert stats.docs_in_dropped >= 1000
 
 
+def _simhash_column_path(df, text_col="text", id_col="doc_id", bits=16):
+    """The original Column plan of ``D.simhash_portable`` — explode → md5 →
+    one bit-aggregate per bit — kept as the differential oracle of its
+    mapInPandas kernel."""
+    toks = df.select(
+        F.col(id_col), F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("tok")
+    ).where(F.length("tok") > 0)
+    h = toks.select(
+        id_col,
+        F.conv(F.substring(F.md5(F.encode(F.col("tok"), "utf-8")), 1, 8), 16, 10)
+        .cast("long")
+        .alias("h"),
+    )
+    bit_sums = h.groupBy(id_col).agg(
+        F.count("*").alias("n"),
+        *[F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1))).alias(f"b{b}") for b in range(bits)],
+    )
+    sim = F.lit(0).cast("long")
+    for b in range(bits):
+        sim = sim.bitwiseOR(
+            F.when(F.col(f"b{b}") * 2 > F.col("n"), F.shiftleft(F.lit(1).cast("long"), b)).otherwise(
+                F.lit(0).cast("long")
+            )
+        )
+    return bit_sums.select(F.col(id_col), sim.alias("simhash"))
+
+
 def test_simhash_kernel_equals_column_path(spark):
     """r7 internals change: simhash_portable computes the fingerprint in a
-    shuffle-free mapInPandas kernel by default. The kernel must equal the
-    original explode → bit-aggregate Column path exactly — same
+    shuffle-free mapInPandas kernel. The kernel must equal the original
+    explode → bit-aggregate Column path (_simhash_column_path) exactly — same
     every-occurrence voting, same no-token-row exclusion — including on
     empty/null/non-ASCII/double-space texts, and at a non-default width."""
     rows = [
@@ -173,10 +200,7 @@ def test_simhash_kernel_equals_column_path(spark):
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
     for bits in (16, 24):
         fast = {r.doc_id: r.simhash for r in D.simhash_portable(df, bits=bits).collect()}
-        slow = {
-            r.doc_id: r.simhash
-            for r in D.simhash_portable(df, bits=bits, kernel=False).collect()
-        }
+        slow = {r.doc_id: r.simhash for r in _simhash_column_path(df, bits=bits).collect()}
         assert fast == slow and 0 in fast and 2 not in fast and 3 not in fast
 
 
@@ -595,7 +619,7 @@ def test_simhash_unknown_size_takes_spread_plan(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(D, "_est_size_bytes", lambda _df: None)
     fast = D.simhash_portable(df)
     assert spread(fast)
-    slow = D.simhash_portable(df, kernel=False)
+    slow = _simhash_column_path(df)
     assert {tuple(r) for r in fast.collect()} == {tuple(r) for r in slow.collect()}
 
 

@@ -18,12 +18,12 @@ def _explain(spark, alerts, mode: str = "formatted") -> str:
     )
 
 
-def _plans(spark, tiny_path, match_mode: str) -> tuple[str, str]:
-    """(formatted, simple) explain of the batch plan under one mode."""
+def _plans(spark, tiny_path) -> tuple[str, str]:
+    """(formatted, simple) explain of the batch plan."""
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         df = spark.read.parquet(tiny_path)
-        alerts = pipeline.build_alerts(spark, df, CANONICAL, match_mode=match_mode)
+        alerts = pipeline.build_alerts(spark, df, CANONICAL)
         return _explain(spark, alerts), _explain(spark, alerts, "simple")
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -33,17 +33,12 @@ def _plans(spark, tiny_path, match_mode: str) -> tuple[str, str]:
 def plan(spark, tiny_path) -> str:
     # AQE's pre-execution explain hides exchange/codegen details behind
     # isFinalPlan=false; disable it while capturing the assertable plan
-    return _plans(spark, tiny_path, "fused")[0]
+    return _plans(spark, tiny_path)[0]
 
 
 @pytest.fixture(scope="module")
 def plan_simple(spark, tiny_path) -> str:
-    return _plans(spark, tiny_path, "fused")[1]
-
-
-@pytest.fixture(scope="module")
-def hybrid_plans(spark, tiny_path) -> tuple[str, str]:
-    return _plans(spark, tiny_path, "hybrid")
+    return _plans(spark, tiny_path)[1]
 
 
 def test_scan_prunes_columns(plan):
@@ -56,17 +51,6 @@ def test_scan_prunes_columns(plan):
 def test_fused_default_scans_input_once(plan_simple):
     # the 100-TB invariant: the default plan reads the input EXACTLY once
     assert plan_simple.count("Scan parquet") == 1, "fused must not rescan the input"
-
-
-def test_hybrid_fast_pattern_filter_reaches_scan(hybrid_plans):
-    # hybrid's UDF branch coarse prefilter must appear as PushedFilters
-    # row-group hints on the scan (the fused OR-filter can't push, which is
-    # part of why hybrid exists as an option for cheap/cached scans)
-    formatted, simple = hybrid_plans
-    assert re.search(
-        r"PushedFilters: \[.*StringContains\(text", formatted
-    ), "prefilter not pushed"
-    assert simple.count("Scan parquet") == 2  # the documented trade
 
 
 def test_broadcast_joins_only(plan):

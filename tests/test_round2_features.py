@@ -245,25 +245,6 @@ def test_bluedot_dim_differential(spark, tiny_path, tiny_pdf):
     assert {a["tool"] for a in ora.alerts} == {"bash"}
 
 
-def test_bluedot_unfolded_path(spark, tiny_path, tiny_pdf):
-    """fold_dims=False exercises the broadcast join + post-join filter."""
-    rs = RuleSet(
-        (
-            Rule(
-                sid=2000022,
-                msg="exec via mal-reputation tool",
-                sink="eve",
-                contents=(ContentSpec("exec"),),
-                enrich=(EnrichCond("bluedot_dim", "bd_category", "is", ("mal",)),),
-            ),
-        )
-    )
-    res = pipeline.run(spark, tiny_path, rs, fold_dims=False)
-    ora = run_oracle(tiny_pdf, rs)
-    assert res.sid_counts == ora.sid_counts
-    res.unpersist()
-
-
 # ---------------------------------------------------------------------------
 # RuleSet construction-time validation
 # ---------------------------------------------------------------------------
@@ -356,8 +337,8 @@ def test_ruleset_rejects_depends_on_noalert_parent():
 
 
 # ---------------------------------------------------------------------------
-# fused / hybrid match modes and the all-pandas reference must agree,
-# including extraction edges
+# fused (full set) / hybrid (native subset) match plans and the all-pandas
+# reference must agree, including extraction edges
 # ---------------------------------------------------------------------------
 
 
@@ -388,12 +369,20 @@ def test_match_modes_equal_including_extraction(spark, tiny_path):
         )
     )
     df = spark.read.parquet(tiny_path)
-    plans = {mode: match.run_match(df, rs, mode=mode) for mode in match.MATCH_MODES}
-    # reference: every rule, native-compilable or not, through the
-    # vectorized-pandas _rule_mask — checks it against the native Columns
-    plans["pandas"] = match._prepare(df).mapInPandas(
-        match.make_matcher(rs, match._get_dims(True)), schema=match.MATCH_SCHEMA
-    )
+    native = RuleSet(tuple(r for r in rs.rules if match.native_compilable(r)))
+    native_sids = {r.sid for r in native.rules}
+    assert 2000050 in native_sids and 2000051 not in native_sids
+    plans = {
+        # fused on the full set; hybrid on its native subset (the only
+        # rule sets hybrid accepts)
+        "fused": match.run_match(df, rs, mode="fused"),
+        "hybrid": match.run_match(df, native, mode="hybrid"),
+        # reference: every rule, native-compilable or not, through the
+        # vectorized-pandas _rule_mask — checks it against the native SQL
+        "pandas": match._prepare(df).mapInPandas(
+            match.make_matcher(rs), schema=match.MATCH_SCHEMA
+        ),
+    }
     results = {}
     for name, plan in plans.items():
         rows = plan.select("conv_id", "turn_idx", "sid", "extracted").collect()
@@ -401,14 +390,17 @@ def test_match_modes_equal_including_extraction(spark, tiny_path):
             (r.conv_id, r.turn_idx, r.sid, tuple(sorted((r.extracted or {}).items())))
             for r in rows
         )
-    assert results["fused"] == results["hybrid"], "fused != hybrid"
     assert results["fused"] == results["pandas"], "fused != pandas reference"
-    assert any(r[2] == 2000050 for r in results["fused"])
-    assert all(
-        dict(r[3]).get("proto") == "tcp"
-        for r in results["fused"]
-        if r[2] == 2000050
-    ), "defaults lost in extraction"
+    assert results["hybrid"] == [r for r in results["pandas"] if r[2] in native_sids], (
+        "hybrid != pandas reference on the native subset"
+    )
+    for name in ("fused", "hybrid"):
+        assert any(r[2] == 2000050 for r in results[name])
+        assert all(
+            dict(r[3]).get("proto") == "tcp"
+            for r in results[name]
+            if r[2] == 2000050
+        ), f"defaults lost in {name} extraction"
 
 
 # ---------------------------------------------------------------------------

@@ -1,6 +1,5 @@
-"""Round-3 features: alert-schema mode invariance, role-track streaming
-redelivery guard + TTL eviction (the robustness policies the conv-keyed
-branch already had)."""
+"""Round-3 features: role-track streaming redelivery guard + TTL eviction
+(the robustness policies the conv-keyed branch already had)."""
 
 from __future__ import annotations
 
@@ -401,23 +400,6 @@ def test_batch_writer_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(os.path.join(out, "fast")).count() == 1
     w(df, 1)  # a genuinely new micro-batch
     assert spark.read.parquet(os.path.join(out, "fast")).count() == 2
-
-
-def test_alert_schema_mode_invariant(spark, tiny_path):
-    """PipelineResult.alerts must have the SAME schema whether enrich
-    conditions were constant-folded (fold_dims=True, the default) or
-    applied as post-join filters — bd_* are filter-only attributes and
-    must not leak into the unfolded mode's output."""
-    from sagan_spark import io as iomod
-    from sagan_spark.engine.pipeline import build_alerts
-
-    df = iomod.read_table(spark, tiny_path, columns=iomod.TRANSCRIPT_COLUMNS)
-    folded = build_alerts(spark, df, fold_dims=True)
-    unfolded = build_alerts(spark, df, fold_dims=False)
-    assert folded.schema == unfolded.schema, (
-        folded.schema.simpleString(),
-        unfolded.schema.simpleString(),
-    )
 
 
 def test_role_track_redelivery_dropped(spark, tmp_path):

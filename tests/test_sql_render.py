@@ -100,7 +100,7 @@ EMPTY_RS = RuleSet(
 
 def test_empty_sets_and_null_columns_match_oracle(spark):
     assert match._sql_in("`role`", []) == "false"
-    folded = match._fold_enrich(EMPTY_RS.rules[1], match._get_dims(True))
+    folded = match._fold_enrich(EMPTY_RS.rules[1])
     assert folded[0] == set() and "false" in match._native_cond(EMPTY_RS.rules[1], folded)
     pdf, df = _tiny_df(
         spark,

@@ -68,32 +68,6 @@ def test_stream_equals_batch(spark, split_input, tmp_path):
     ref.unpersist()
 
 
-def test_stream_hybrid_mode_equals_fused(spark, split_input, tmp_path):
-    """Match modes must be interchangeable in streaming too: the hybrid
-    (two-scan) matcher through the unified stateful operator produces
-    exactly the fused default's alert set."""
-    out_f = str(tmp_path / "out_fused")
-    out_h = str(tmp_path / "out_hybrid")
-    rows = {}
-    for mode, out in (("fused", out_f), ("hybrid", out_h)):
-        q = stream_pipeline.run_stream(
-            spark, split_input, out, str(tmp_path / f"ck_{mode}"),
-            max_files_per_trigger=1, match_mode=mode,
-        )
-        q.processAllAvailable()
-        q.stop()
-        got = set()
-        for sink in ("fast", "eve", "syslog", "unified2"):
-            p = os.path.join(out, sink)
-            if os.path.exists(p):
-                got |= {
-                    (r.conv_id, r.turn_idx, r.sid)
-                    for r in spark.read.parquet(p).select("conv_id", "turn_idx", "sid").collect()
-                }
-        rows[mode] = got
-    assert rows["fused"] == rows["hybrid"] and rows["fused"]
-
-
 def test_stream_rocksdb_state_store_equals_default(spark, split_input, tmp_path):
     """The unified stateful operator must run unchanged on the RocksDB state
     store (the production backend for large state at 100 TB — the default
