@@ -8,7 +8,7 @@ same role is played by a ``sagan_spark.yaml`` consumed by
     # sagan_spark.yaml
     input: /data/transcripts          # parquet dir / Iceberg identifier
     output: /data/alerts              # sink dir (optional: counts-only)
-    mode: batch                       # batch | resumable | stream | dynamic
+    mode: batch                       # batch | resumable | stream
     rules:                            # .rules files (empty -> canonical set)
       - rules/base.rules
       - rules/extra.rules
@@ -40,7 +40,7 @@ from dataclasses import dataclass, fields
 class PipelineConfig:
     input: str | None = None
     output: str | None = None
-    mode: str = "batch"  # batch | resumable | stream | dynamic
+    mode: str = "batch"  # batch | resumable | stream
     rules: tuple[str, ...] = ()  # .rules file paths; empty -> CANONICAL
     # engine: section (no match-plan key: the input picks the plan,
     # engine/pipeline.resolve_match_mode)
@@ -69,8 +69,11 @@ class PipelineConfig:
     track_hwm_cap: int = 100_000
 
     def __post_init__(self) -> None:
-        if self.mode not in ("batch", "resumable", "stream", "dynamic"):
-            raise ValueError(f"unknown mode {self.mode!r}")
+        if self.mode not in ("batch", "resumable", "stream"):
+            raise ValueError(
+                f"unknown mode {self.mode!r} (batch | resumable | stream; "
+                "batch honours depends_on)"
+            )
 
 
 _TOP_KEYS = {"input", "output", "mode"}

@@ -20,6 +20,10 @@ construction at any scale; the parquet emulation relies on the generator's
 conv-per-file locality (datagen writes each conversation entirely inside
 one chunk file). ``check_conv_locality`` verifies it when asked.
 
+A rule set with depends_on rules is refused before any unit runs: whether
+a dependent rule is enabled depends on its parent firing anywhere in the
+input, which one unit cannot see. pipeline.run takes such a set.
+
 On a real Iceberg deployment the bookmark also records the snapshot id the
 run read from, pinning reruns to a consistent table state.
 """
@@ -116,6 +120,12 @@ def run_resumable(
     ``out_dir/sinks/<sink>/unit=<uid>`` and update the manifest after each
     unit. ``max_units`` bounds work this call (used to simulate failures
     in tests and to run in windowed increments operationally)."""
+    dependent = next((r.sid for r in ruleset.rules if r.depends_on is not None), None)
+    if dependent is not None:
+        raise ValueError(
+            f"sid {dependent}: depends_on rules need the whole input to decide "
+            "whether their parent fired, which one unit cannot see; use pipeline.run"
+        )
     fsutil.fs_mkdirs(spark, out_dir)
     manifest = _load_manifest(spark, out_dir)
     manifest.setdefault("input_path", input_path)

@@ -241,7 +241,9 @@ def _replay_tracked_carry(
 _UNSET = object()
 
 
-def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") -> DataFrame:
+def run_correlate(
+    alerts: DataFrame, ruleset: RuleSet, scope: str = "linear", buckets: int = 0
+) -> DataFrame:
     """Apply stateful correlation.
 
     ONE shuffle of all alerts by conv_id; stateless rows pass through the
@@ -256,7 +258,10 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") ->
     — verified empirically: a pushdown-barriered identical exchange still
     executed twice), and a persist materialization contends on the block
     manager/disk instead of scaling with cores. ``scope`` names that plan
-    and accepts only "linear".
+    and accepts only "linear". ``buckets`` > 0 replays into that many
+    partitions: the bucket count of a conv_id-bucketed scan whose
+    partitioning reaches here, so the exchange is elided whatever
+    spark.sql.shuffle.partitions is.
 
     Non-conv tracked rules (Sagan `by_username` → role, `by_dst` → tool)
     take a SEPARATE branch per track column: their rows repartition by the
@@ -369,7 +374,7 @@ def run_correlate(alerts: DataFrame, ruleset: RuleSet, scope: str = "linear") ->
     out = alerts.filter(~alerts.sid.isin(handled)) if handled else alerts
     if conv_rules:
         out = (
-            out.repartition("conv_id")
+            out.repartition(*([buckets] if buckets else []), "conv_id")
             .sortWithinPartitions("conv_id", "turn_idx", "sid")
             .mapInPandas(replay, schema=schema)
         )

@@ -23,9 +23,9 @@ Strictly linear: every stage has one consumer, so nothing recomputes and
 nothing needs a persist (counts ride the single action via the Observation
 API; with out_dir that action is route.write_sinks' one-pass writer).
 Exceptions that DO persist: rule sets with role-tracked counters (two
-replay branches), run_dynamic with out_dir (each pass's alerts feed its
-count and the union's write), and route's Spark-writer fallback for an
-out_dir executors cannot open.
+replay branches) and route's Spark-writer fallback for an out_dir
+executors cannot open. A rule set with depends_on rules runs a counting
+pass of its base rules first (run), which persists nothing either.
 
 Every rule-dependent expression of that plan (native predicates and
 `_nsids`, the prefilter, rule meta, the line CASE, the alert counters) is
@@ -50,32 +50,32 @@ from . import correlate, enrich, match, route
 from .. import io as iomod
 
 
-def _scan_bucketed_by(df: DataFrame, col: str) -> bool:
-    """True iff EVERY leaf relation of ``df``'s plan is a file scan bucketed
-    by exactly ``[col]`` (Spark native bucketing — the same planner
-    distribution Iceberg's bucket transform provides on a real cluster).
-    With ``autoBucketedScan`` pinned off (session.py) a bucketed relation
-    is always read bucketed, so the scan's HashPartitioning(col) is real.
-    Detection failure of any kind returns False (callers fall back to the
+def _scan_bucketed_by(df: DataFrame, col: str) -> int:
+    """The bucket count of ``df``'s scan iff EVERY leaf relation of its plan
+    is a file scan bucketed by exactly ``[col]`` into the same number of
+    buckets (Spark native bucketing — the same planner distribution
+    Iceberg's bucket transform provides on a real cluster), else 0. With
+    ``autoBucketedScan`` pinned off (session.py) a bucketed relation is
+    always read bucketed, so the scan's HashPartitioning(col) is real.
+    Detection failure of any kind returns 0 (callers fall back to the
     shuffle-inserting plan, which is always correct)."""
     try:
         leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        n = leaves.size()
-        if n == 0:
-            return False
-        for i in range(n):
+        counts = set()
+        for i in range(leaves.size()):
             try:
                 spec = leaves.apply(i).relation().bucketSpec()
                 if not spec.isDefined():
-                    return False
+                    return 0
                 cols = spec.get().bucketColumnNames()
                 if cols.size() != 1 or cols.apply(0) != col:
-                    return False
+                    return 0
+                counts.add(spec.get().numBuckets())
             except Exception:
-                return False  # non-file leaf (e.g. LocalRelation): no buckets
-        return True
+                return 0  # non-file leaf (e.g. LocalRelation): no buckets
+        return counts.pop() if len(counts) == 1 else 0
     except Exception:
-        return False
+        return 0
 
 
 def resolve_match_mode(input_df: DataFrame, ruleset: RuleSet) -> str:
@@ -105,7 +105,7 @@ def resolve_match_mode(input_df: DataFrame, ruleset: RuleSet) -> str:
 
 @dataclass
 class PipelineResult:
-    alerts: DataFrame  # routed alert rows; only run_dynamic(out_dir=...) caches them, per pass
+    alerts: DataFrame  # routed alert rows, lazy; role-/tool-tracked sets cache a frame under them
     sink_counts: dict[str, int]
     sid_counts: dict[int, int]
     metrics: dict  # A3 stats ([PUB src/stats-json.c])
@@ -144,7 +144,8 @@ def build_alerts(
     from ..packaging import ensure_shipped
 
     ensure_shipped(spark)
-    matched = match.run_match(input_df, ruleset, mode=resolve_match_mode(input_df, ruleset))
+    mode = resolve_match_mode(input_df, ruleset)
+    matched = match.run_match(input_df, ruleset, mode=mode)
     enriched = enrich.attach_dims(
         matched,
         dimsmod.role_dim(spark),
@@ -160,7 +161,10 @@ def build_alerts(
     )
     if has_track_branch:
         enriched = enriched.persist(StorageLevel.MEMORY_AND_DISK)
-    correlated = correlate.run_correlate(enriched, ruleset)
+    # the hybrid plan keeps the scan's bucket partitioning: replaying into
+    # that many partitions lets the planner elide the conv_id exchange
+    buckets = _scan_bucketed_by(input_df, "conv_id") if mode == "hybrid" else 0
+    correlated = correlate.run_correlate(enriched, ruleset, buckets=buckets)
     out = route.attach_rule_meta(correlated, ruleset)
     if has_track_branch:
         # hand the cache handle to callers (unpersist_alerts)
@@ -182,7 +186,7 @@ def observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
     with zero counts. The reader then aggregates the same metrics over the
     unobserved ``df`` (an Observation is single-use): extra jobs, only on
     those degenerate runs."""
-    obs = Observation()  # unnamed → unique (plans may be unioned, e.g. run_dynamic)
+    obs = Observation()  # unnamed → unique per call
 
     def read() -> dict:
         try:
@@ -262,7 +266,24 @@ def run(
     the sink exchange, where AQE keeps the observation on a run with no
     alerts. Nothing is persisted (role-tracked rule sets aside:
     PipelineResult.unpersist).
+
+    C7 depends_on ([PUB src/processors/dynamic-rules.c]): a dependent rule
+    runs only if its parent sid fired somewhere in the input. When the set
+    holds one, a first pass runs the base rules alone as a noop write, and
+    only its fired-sid set reaches the driver. The run itself is then the
+    one pass above over the base rules plus the enabled dependents, so
+    they share one conversation replay and flexbits set by either kind
+    are seen by both; which dependents are enabled is still decided by
+    the first pass alone.
     """
+    if any(r.depends_on is not None for r in ruleset.rules):
+        base = RuleSet(tuple(r for r in ruleset.rules if r.depends_on is None))
+        first = run(spark, input_path, base)
+        first.unpersist()
+        fired = set(first.sid_counts)
+        ruleset = RuleSet(
+            tuple(r for r in ruleset.rules if r.depends_on is None or r.depends_on in fired)
+        )
     alerts, read_input = _alerts(spark, input_path, ruleset)
     if out_dir is None:
         observed, read_counts = observe_alerts(alerts, ruleset, read_input)
@@ -286,52 +307,3 @@ def _alerts(
 
 def _noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
-
-
-def run_dynamic(
-    spark: SparkSession,
-    input_path: str,
-    ruleset: RuleSet = CANONICAL,
-    out_dir: str | None = None,
-) -> PipelineResult:
-    """C7 depends_on / dynamic rules ([PUB src/processors/dynamic-rules.c]),
-    two-pass batch semantics: pass 1 runs all independent rules; a dependent
-    rule is enabled for pass 2 iff its parent sid fired at least once in
-    pass 1. Only the tiny fired-sid set crosses to the driver. Dependent
-    rules re-scan the input — acceptable because dynamic rules are rare and
-    pass 2 can also be narrowed by its own fast patterns.
-
-    With ``out_dir``, each pass's alerts are persisted under the noop write
-    that fires its counts, and the union of the passes is written from
-    those caches (released by PipelineResult.unpersist)."""
-    base = RuleSet(tuple(r for r in ruleset.rules if r.depends_on is None))
-    dependents = [r for r in ruleset.rules if r.depends_on is not None]
-
-    def run_pass(rs: RuleSet) -> PipelineResult:
-        alerts, read_input = _alerts(spark, input_path, rs)
-        alerts, read_counts = observe_alerts(alerts, rs, read_input)
-        if out_dir is not None:
-            alerts.persist(StorageLevel.MEMORY_AND_DISK)
-        _noop(alerts)
-        return PipelineResult(alerts, *read_counts())
-
-    res = run_pass(base)
-    if dependents:
-        fired = set(res.sid_counts)
-        enabled = tuple(r for r in dependents if r.depends_on in fired)
-        if enabled:
-            res2 = run_pass(RuleSet(enabled))
-            for k, v in res2.sink_counts.items():
-                res.sink_counts[k] = res.sink_counts.get(k, 0) + v
-            res.sid_counts.update(res2.sid_counts)
-            union = res.alerts.unionByName(res2.alerts)
-            # keep both passes and their cache handles reachable from the result
-            union._sagan_persisted = tuple(
-                frame
-                for a in (res.alerts, res2.alerts)
-                for frame in (a, *getattr(a, "_sagan_persisted", ()))
-            )
-            res.alerts = union
-    if out_dir is not None:
-        route.write_sinks(res.alerts, out_dir)
-    return res

@@ -239,7 +239,8 @@ class Rule:
     noalert: bool = False  # flexbit-setter rules: act on state, emit nothing
     # C7 depends_on / dynamic rules ([PUB src/processors/dynamic-rules.c]):
     # this rule is evaluated only if the named sid fired at least once in
-    # the run (two-pass batch semantics — see engine/pipeline.run_dynamic).
+    # the run (batch: a first counting pass in engine/pipeline.run;
+    # streaming: a go-forward gate; checkpoint.run_resumable refuses it).
     depends_on: int | None = None
     roles: tuple[str, ...] | None = None  # P1 program prefilter
     roles_negated: bool = False

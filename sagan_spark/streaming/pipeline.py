@@ -232,7 +232,7 @@ def _make_role_state_fn(
 def _make_dynamic_gate_fn(out_cols: list[str]):
     """C7 dynamic rules, streaming form ([PUB src/processors/dynamic-rules.c]
     enables a dependent rule when its parent fires; the batch transposition
-    is the two-pass re-scan in engine/pipeline.run_dynamic).
+    is engine/pipeline.run's counting pass over the base rules).
 
     Streaming semantics are GO-FORWARD, like the reference's runtime
     loader: a child alert emits iff its parent fired at an earlier OR

@@ -16,10 +16,11 @@ the format; explicit CLI flags override config values):
     spark-submit ... scripts/run_pipeline.py --config sagan_spark.yaml
 
 Modes:
-  batch      one-shot run, per-sink writes + counts to stdout (JSON)
-  resumable  unit-based run with the bookmark manifest (skips done units)
+  batch      one-shot run, per-sink writes + counts to stdout (JSON);
+             honours Rule.depends_on (pipeline.run)
+  resumable  unit-based run with the bookmark manifest (skips done units);
+             refuses depends_on rules
   stream     structured streaming with checkpointing
-  dynamic    two-pass run honoring Rule.depends_on
 
 The input is an Iceberg table identifier when the Iceberg extension is on
 the session (cluster), else a parquet path (local/dev) — io.read_table.
@@ -48,7 +49,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--config", default=None, help="sagan_spark.yaml (CLI flags override)")
     ap.add_argument("--input", default=None)
     ap.add_argument("--output", default=None)
-    ap.add_argument("--mode", choices=["batch", "resumable", "stream", "dynamic"], default=None)
+    ap.add_argument("--mode", choices=["batch", "resumable", "stream"], default=None)
     ap.add_argument(
         "--ruleset",
         choices=["canonical", "bulk", "bulk-production"],
@@ -99,9 +100,6 @@ def main(argv: list[str] | None = None) -> None:
         res = pipeline.run(spark, inp, ruleset, out_dir=output)
         print(json.dumps({"sink_counts": res.sink_counts, "sid_counts": res.sid_counts}))
         res.unpersist()
-    elif mode == "dynamic":
-        res = pipeline.run_dynamic(spark, inp, ruleset, out_dir=output)
-        print(json.dumps({"sink_counts": res.sink_counts, "sid_counts": res.sid_counts}))
     elif mode == "resumable":
         out = resume_dir or (output + "/_bookmarks")
         r = checkpoint.run_resumable(spark, inp, out, ruleset)

@@ -104,6 +104,50 @@ def test_bucketed_scan_eliminates_replay_exchange(spark, bucketed):
     assert "Bucketed: true" in plan, plan[:2000]
 
 
+@pytest.mark.parametrize("n_buckets", [4, 8, 16])
+def test_replay_takes_the_bucket_count(spark, bucketed, n_buckets):
+    """The replay repartitions into the table's bucket count, read from its
+    bucket spec, so the exchange is elided whether or not that count equals
+    spark.sql.shuffle.partitions (8 here)."""
+    from sagan_spark.engine.pipeline import _scan_bucketed_by
+
+    plain, _ = bucketed
+    table = f"tx_bucketed_test_{n_buckets}"
+    (
+        spark.read.parquet(plain)
+        .write.bucketBy(n_buckets, "conv_id")
+        .sortBy("conv_id", "turn_idx")
+        .mode("overwrite")
+        .saveAsTable(table)
+    )
+    try:
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        assert _scan_bucketed_by(spark.table(table), "conv_id") == n_buckets
+        got = _alerts(spark, spark.table(table))
+        assert _n_conv_exchanges(got) == 0
+        assert _rows(got) == _rows(_alerts(spark, spark.read.parquet(plain)))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_bucket_count_of_unlike_leaves_is_zero(spark, bucketed):
+    """Leaves bucketed into different counts have no one partitioning to
+    keep: the probe reports 0, as for a plain scan."""
+    from sagan_spark.engine.pipeline import _scan_bucketed_by
+
+    plain, table = bucketed
+    spark.read.parquet(plain).write.bucketBy(4, "conv_id").mode("overwrite").saveAsTable(
+        "tx_bucketed_test_4u"
+    )
+    try:
+        both = spark.table(table).unionByName(spark.table("tx_bucketed_test_4u"))
+        assert _scan_bucketed_by(spark.table(table), "conv_id") == 8
+        assert _scan_bucketed_by(both, "conv_id") == 0
+        assert _scan_bucketed_by(spark.read.parquet(plain), "conv_id") == 0
+    finally:
+        spark.sql("DROP TABLE IF EXISTS tx_bucketed_test_4u")
+
+
 def test_bucketed_and_plain_outputs_equal(spark, bucketed):
     plain, table = bucketed
     got_b = _rows(_alerts(spark, spark.table(table)))
@@ -213,7 +257,7 @@ def test_bucket_probe_failure_falls_back_to_fused(spark, bucketed, monkeypatch):
     bdf = spark.table(table)
     broken = _QueryExecutionFails(bdf._jdf)
     monkeypatch.setattr(bdf, "_jdf", broken)
-    assert _scan_bucketed_by(bdf, "conv_id") is False
+    assert _scan_bucketed_by(bdf, "conv_id") == 0
     assert resolve_match_mode(bdf, NATIVE_RS) == "fused"
     assert broken.probed == 2
     got = _alerts(spark, bdf)

@@ -76,8 +76,9 @@ def test_resume_rejects_different_ruleset(spark, tmp_path):
 def test_role_tracked_runs_release_their_cache(spark, tmp_path):
     """Role-tracked rules make build_alerts persist the enriched frame for
     their second replay branch. Every batch entry point must hand that
-    cache back: run_resumable per unit, run_dynamic across both passes, and
-    run with an out_dir, whose persisted frame is a new, observed one."""
+    cache back: run_resumable per unit, run across the counting pass of a
+    rule set with a dependent, and run with an out_dir, whose persisted
+    frame is a new, observed one."""
     from sagan_spark.rules.model import AfterSpec, ContentSpec, Rule, RuleSet
 
     path = str(tmp_path / "tx_role")
@@ -94,10 +95,10 @@ def test_role_tracked_runs_release_their_cache(spark, tmp_path):
     assert r.processed_units == 3
     assert cache.isEmpty(), "run_resumable left a cached frame behind"
 
-    res = pipeline.run_dynamic(spark, path, RuleSet((role, child)))
+    res = pipeline.run(spark, path, RuleSet((role, child)))
     assert res.sid_counts.get(20) and res.sid_counts.get(21)
     res.unpersist()
-    assert cache.isEmpty(), "run_dynamic dropped a cache handle"
+    assert cache.isEmpty(), "run with a dependent rule dropped a cache handle"
 
     res = pipeline.run(spark, path, RuleSet((role,)), out_dir=str(tmp_path / "sinks"))
     assert res.sid_counts.get(20) and res.metrics["rows_in"] > 0

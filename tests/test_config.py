@@ -81,6 +81,7 @@ def test_comment_and_quote_edge_cases():
         "rules:\n  not-a-list-item",  # malformed list
         "  orphan: 1",  # indented line outside a section
         "mode: nonsense",  # validated enum
+        "mode: dynamic",  # removed: batch honours depends_on
         "engine:\n  match_mode: udf",  # removed match mode
         "engine:\n  match_mode: fused",  # the input picks the match plan
         "engine:\n  fold_dims: false",  # enrich conditions are always folded
@@ -114,7 +115,7 @@ def test_round_trip_property():
             PipelineConfig,
             input=st.one_of(st.none(), path),
             output=st.one_of(st.none(), path),
-            mode=st.sampled_from(["batch", "resumable", "stream", "dynamic"]),
+            mode=st.sampled_from(["batch", "resumable", "stream"]),
             rules=st.lists(path, max_size=3).map(tuple),
             shuffle_partitions=st.one_of(st.none(), st.integers(1, 10000)),
             master=st.one_of(st.none(), st.just("local[8]")),

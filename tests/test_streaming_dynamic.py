@@ -1,6 +1,6 @@
 """Streaming C7 dynamic rules (depends_on): the arrival-order gate.
 
-Batch semantics (engine/pipeline.run_dynamic) are two-pass: once the
+Batch semantics (engine/pipeline.run) are two-pass: once the
 parent fires anywhere in the input, dependent rules re-scan EVERYTHING.
 Streaming semantics are go-forward, like the reference's runtime rule
 loader: a child alert emits iff the parent fired at an earlier arrival
@@ -94,7 +94,7 @@ def _stream_fired(spark, input_dir, out, ck, ruleset):
 def _batch_fired(spark, input_dir, ruleset):
     from sagan_spark.engine import pipeline
 
-    res = pipeline.run_dynamic(spark, input_dir, ruleset)
+    res = pipeline.run(spark, input_dir, ruleset)
     got = {
         (r.conv_id, r.turn_idx, r.sid)
         for r in res.alerts.select("conv_id", "turn_idx", "sid").collect()
