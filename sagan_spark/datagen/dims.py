@@ -1,19 +1,21 @@
-"""Broadcast-enrichment dimension tables (FIXTURES.md §2).
+"""Enrichment dimension tables (FIXTURES.md §2).
 
 Stand-ins for Sagan's read-side lookup tables (SURVEY.md §2.3):
 - role_dim  ↔ GeoIP country lookup   [PUB src/geoip2.c]
 - tool_dim  ↔ Zeek/intel indicators  [PUB src/processors/zeek-intel.c]
 - risk_ranges ↔ blacklist CIDR lists [PUB src/processors/blacklist.c]
 
-These are tiny (single-digit rows) by construction — the point is the
-JOIN SHAPE: always `F.broadcast(dim)`, never a shuffle. At 100 TB the
-fact side streams through map-side hash joins with zero exchange.
+These are tiny (single-digit rows) compile-time constants by
+construction, read in three places: match._fold_enrich folds enrich
+conditions over them, enrich.attach_dims renders them as CASE lookups (no
+join, no broadcast, no exchange: at 100 TB the fact side streams through
+one projection), and the pandas oracle looks them up.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 ROLE_DIM = pd.DataFrame(
     {
@@ -51,14 +53,16 @@ BLUEDOT_DIM = pd.DataFrame(
 )
 
 
-def role_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_DIM)
+# The dims as enrich.attach_dims takes them; ``spark`` is unused (the
+# dims are constants, not tables) and kept for the callers' call form.
+def role_dim(spark: SparkSession) -> pd.DataFrame:
+    return ROLE_DIM
 
 
-def tool_dim(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_DIM)
+def tool_dim(spark: SparkSession) -> pd.DataFrame:
+    return TOOL_DIM
 
 
-def risk_ranges(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(RISK_RANGES)
+def risk_ranges(spark: SparkSession) -> pd.DataFrame:
+    return RISK_RANGES
 

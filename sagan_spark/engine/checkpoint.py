@@ -8,7 +8,7 @@ records, per unit: input rows, per-sink alert counts, per-rule hit counts,
 wall time. The manifest is written atomically (tmp + rename) after every
 unit, so a crashed run resumes by skipping completed units. A unit's
 alerts are written as pipeline.run writes them, in the one job that fills
-its counts (route.write_sink_rows, partitioned form: rows exchanged by
+its counts (route.write_sink_rows, partitioned form: rows partitioned by
 conv_id, each file sorted by (conv_id, turn_idx, sid)), to
 ``sinks/<sink>/unit=<uid>/``; a unit that crashed mid-write is rerun
 whole and replaces its directories.
@@ -40,6 +40,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
+from ..io import TRANSCRIPT_SCHEMA
 from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import pipeline as pl
@@ -149,7 +150,7 @@ def run_resumable(
         if max_units is not None and processed >= max_units:
             break
         t0 = time.time()
-        df, read_input = pl.observe_input(spark.read.parquet(*files))
+        df, read_input = pl.observe_input(spark.read.schema(TRANSCRIPT_SCHEMA).parquet(*files))
         alerts = pl.build_alerts(spark, df, ruleset)
         rows, read_counts = pl.observe_alerts(route.sink_rows(alerts), ruleset, read_input)
         route.write_sink_rows(rows, f"{out_dir.rstrip('/')}/sinks", partition=f"unit={uid}")

@@ -249,10 +249,15 @@ def run_correlate(
     ONE shuffle of all alerts by conv_id; stateless rows pass through the
     replay untouched. Strictly one consumer of the match subtree: every
     cost here (shuffle write/read, sort, Arrow, replay) is per-task
-    parallel, so nothing recomputes and nothing needs a persist. (The
-    sink writer still exchanges by conv_id once more: stateless-only and
-    role-tracked plans leave rows unpartitioned by conv_id, and that
-    exchange is where AQE sizes the sink files.) A branching plan cannot beat it: exchange reuse
+    parallel, so nothing recomputes and nothing needs a persist. When
+    there is no track branch, the frame returned is the replay's own
+    output, partitioned by conv_id and sorted by (conv_id, turn_idx, sid),
+    and is tagged ``_sagan_conv_sorted`` so the sink writer skips its own
+    conv_id exchange (route.sink_rows): one shuffle of every alert per
+    run, and AQE sizes the sink files on this exchange. A stateless-only
+    set returns ``alerts`` untouched and a track branch's union loses the
+    order, so both leave the sink exchange in place. A branching plan
+    cannot beat the one linear plan: exchange reuse
     can NEVER deduplicate a dual-consumer plan whose subtree contains a
     Python stage (MapInPandas does not canonicalize equal across branches
     — verified empirically: a pushdown-barriered identical exchange still
@@ -378,6 +383,11 @@ def run_correlate(
             .sortWithinPartitions("conv_id", "turn_idx", "sid")
             .mapInPandas(replay, schema=schema)
         )
+        if not branches:
+            # partitioned by conv_id and sorted by (conv_id, turn_idx, sid)
+            # as it stands: route.sink_rows writes it without a second
+            # exchange (route.attach_rule_meta carries the tag)
+            out._sagan_conv_sorted = True
     for b in branches:
         out = out.unionByName(b)
     return out

@@ -1,41 +1,117 @@
-"""Enrichment joins — Sagan's GeoIP/CIDR/intel lookups as broadcast joins.
+"""Enrichment — Sagan's GeoIP/CIDR/intel lookups as one projection.
 
 SURVEY.md §2.3: J1 (role_dim ↔ GeoIP [PUB src/geoip2.c]), J2 (risk_ranges ↔
-blacklist CIDR [PUB src/processors/blacklist.c], a non-equi broadcast range
-join), J4 (tool_dim ↔ Zeek intel [PUB src/processors/zeek-intel.c]).
+blacklist CIDR [PUB src/processors/blacklist.c], a range lookup), J4
+(tool_dim ↔ Zeek intel [PUB src/processors/zeek-intel.c]).
 
-Join shape at scale: the fact side (alerts) is arbitrarily large; every dim
-is tiny → `F.broadcast` is explicit on every join, so the plan is pure
-map-side BroadcastHashJoin / BroadcastNestedLoopJoin(range) with ZERO
-shuffle. Every enrich condition, J3's Bluedot reputation snapshot
-included, is constant-folded into the match stage (engine/match.py), so
-these joins filter nothing: they only attach attributes.
+Plan shape at scale: the fact side (alerts) is arbitrarily large and every
+dim is a tiny compile-time constant (datagen/dims.py, the same frames
+match._fold_enrich and the pandas oracle read). So the lookups are not
+joins at all: attach_dims renders each dim as a CASE over its key, SQL
+text in one ``selectExpr``. No broadcast, no collect job, no exchange;
+the projection codegens with its neighbours. Every enrich condition, J3's
+Bluedot reputation snapshot included, is constant-folded into the match
+stage (engine/match.py), so this stage filters nothing: it only attaches
+attributes.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_type
+
+from ..datagen.dims import RISK_RANGES, ROLE_DIM, TOOL_DIM
+from .match import _sql_str, check_sql_literals
+
+
+def _sql_value(v) -> str:
+    """A dim cell as a Spark SQL literal (its column's CAST types it)."""
+    if pd.isna(v):
+        return "NULL"
+    if isinstance(v, (bool, np.bool_)):
+        return "true" if v else "false"
+    if isinstance(v, (int, np.integer)):
+        return str(int(v))
+    if isinstance(v, str):
+        return _sql_str(v)
+    raise TypeError(f"no SQL literal for dim value {v!r}")
+
+
+def _sql_types(dim: pd.DataFrame) -> dict[str, str]:
+    """Each column's Spark SQL type, inferred as createDataFrame infers it
+    from pandas (through Arrow)."""
+    schema = pa.Schema.from_pandas(dim, preserve_index=False)
+    return {f.name: from_arrow_type(f.type).simpleString() for f in schema}
+
+
+def _lookup(dim: pd.DataFrame, key: str) -> list[str]:
+    """The non-key columns of ``dim`` as CASE columns on ``key``: a left
+    equi-join's attributes. A NULL key matches nothing, as in a join; a
+    duplicated key raises, since a join would duplicate the fact row."""
+    rows = dim[dim[key].notna()]
+    dup = rows[key][rows[key].duplicated()]
+    if len(dup):
+        raise ValueError(f"dim key {key!r} repeats {dup.iloc[0]!r}: a lookup must be unique")
+    types = _sql_types(dim)
+    out = []
+    for col in dim.columns.drop(key):
+        whens = " ".join(
+            f"WHEN (`{key}` = {_sql_value(k)}) THEN {_sql_value(v)}"
+            for k, v in zip(rows[key], rows[col])
+        )
+        out.append(f"CAST(CASE {whens} END AS {types[col]}) AS `{col}`")
+    return out
+
+
+def _range_lookup(ranges: pd.DataFrame, key: str, col: str) -> str:
+    """``col`` of the range [lo, hi] (both ends inclusive) holding ``key``,
+    as one CASE: a left range join's attribute. A range with a NULL end or
+    lo > hi holds nothing, as in the join; overlapping ranges raise, since
+    a join would give a key held by two ranges two rows."""
+    rows = ranges[ranges["lo"].notna() & ranges["hi"].notna() & (ranges["lo"] <= ranges["hi"])]
+    rows = rows.sort_values("lo", kind="mergesort")
+    lo, hi = rows["lo"].tolist(), rows["hi"].tolist()
+    reach = None  # the highest hi of the ranges before
+    for a, b in zip(lo, hi):
+        if reach is not None and a <= reach:
+            raise ValueError(f"ranges overlap at {key} = {a}: a range lookup must be unique")
+        reach = b if reach is None else max(reach, b)
+    whens = " ".join(
+        f"WHEN ((`{key}` >= {_sql_value(a)}) AND (`{key}` <= {_sql_value(b)})) THEN {_sql_value(v)}"
+        for a, b, v in zip(lo, hi, rows[col])
+    )
+    return f"CAST(CASE {whens} END AS {_sql_types(ranges)[col]}) AS `{col}`"
 
 
 def attach_dims(
     alerts: DataFrame,
-    role_dim: DataFrame,
-    tool_dim: DataFrame,
-    risk_ranges: DataFrame,
+    role_dim: pd.DataFrame = ROLE_DIM,
+    tool_dim: pd.DataFrame = TOOL_DIM,
+    risk_ranges: pd.DataFrame = RISK_RANGES,
 ) -> DataFrame:
     """Attach enrichment attributes (origin/trust_level, category/
-    blacklisted, risk_tag). Left joins — never filtering — and all
-    broadcast. ``risk_key`` was computed JVM-side in the match stage."""
-    out = alerts.join(F.broadcast(role_dim), on="role", how="left")
-    out = out.join(F.broadcast(tool_dim), on="tool", how="left")
-    rr = risk_ranges.select("lo", "hi", "risk_tag")
-    out = out.join(
-        F.broadcast(rr),
-        on=(F.col("risk_key") >= F.col("lo")) & (F.col("risk_key") <= F.col("hi")),
-        how="left",
-    ).drop("lo", "hi")
-    return out
+    blacklisted, risk_tag) as one projection of SQL text, never filtering.
+    ``risk_key`` was computed JVM-side in the match stage.
+
+    The columns, their order and types are those of the left joins this
+    replaces (role_dim on ``role``, then tool_dim on ``tool``, then the
+    range join on ``risk_key``): ``tool, role``, the other alert columns,
+    then the dims' attributes (tests/test_enrich.py keeps those joins as
+    its oracle)."""
+    check_sql_literals(alerts.sparkSession)
+    rest = [f"`{c}`" for c in alerts.columns if c not in ("tool", "role")]
+    return alerts.selectExpr(
+        "`tool`",
+        "`role`",
+        *rest,
+        *_lookup(role_dim, "role"),
+        *_lookup(tool_dim, "tool"),
+        _range_lookup(risk_ranges, "risk_key", "risk_tag"),
+    )
 
 
 def bucketed_range_join(

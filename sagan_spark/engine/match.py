@@ -22,7 +22,7 @@ Scale design:
   static role/tool dims fold into vectorized role/tool membership masks
   (the dims are total functions of an input column), and range conditions
   fold into interval checks on a JVM-computed ``risk_key`` column. The
-  broadcast joins in engine/enrich.py then only ATTACH attributes — they
+  dim lookups in engine/enrich.py then only ATTACH attributes — they
   filter nothing — so the match stage's output is already minimal.
   This is the Snort "fast pattern" idea applied at plan level (SURVEY §4.1).
 """

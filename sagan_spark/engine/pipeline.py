@@ -7,17 +7,24 @@ scan is bucketed by conv_id and every rule is native. Enrich conditions
 are always folded into the match stage. Fused plan shape (asserted by
 tests/test_plan_shape.py):
 
-  ONE parquet/Iceberg scan (ReadSchema pruned to the 6 transcript columns)
+  ONE parquet/Iceberg scan (ReadSchema pruned to the 6 transcript columns;
+    a parquet path is read with their known schema: no inference job)
     → Project: native-rule CASE array → `_nsids` [whole-stage codegen]
     → Filter: native hit OR UDF fast-pattern     [JVM-side candidate prune]
     → MapInPandas fused matcher                  ← the JVM↔Py boundary
-    → BroadcastHashJoin ×2 + BroadcastNestedLoopJoin (attach dims)
-    → Exchange hashpartitioning(conv_id)         [the ONLY shuffle before sinks]
+    → Project: dims as CASE lookups (attach_dims; no join, no broadcast)
+    → Exchange hashpartitioning(conv_id)         [the ONLY shuffle]
     → Sort within partitions → MapInPandas replay (stateless pass through)
     → literal-map rule meta
     → Observation counts → noop write, or (out_dir) route.sink_rows:
-      Exchange(conv_id) → Sort → line CASE → Observation counts
+      line CASE → Observation counts
       → route.write_sink_rows: MapInArrow writer of every sink
+
+With out_dir that is two Spark jobs: the exchange's map stage and the
+writer. The replay's output is already partitioned by conv_id and sorted,
+so the sink rows take it as it stands; a rule set with no conv replay
+(stateless only) or with role-/tool-tracked branches gets its conv_id
+exchange and sort in route.sink_rows instead.
 
 Strictly linear: every stage has one consumer, so nothing recomputes and
 nothing needs a persist (counts ride the single action via the Observation
@@ -43,7 +50,6 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..datagen import dims as dimsmod
 from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import correlate, enrich, match, route
@@ -130,9 +136,11 @@ def build_alerts(
 ) -> DataFrame:
     """The alert DataFrame (lazy).
 
-    Plan: scan → match (resolve_match_mode: fused or hybrid) → broadcast
-    enrich joins → ONE conv_id Exchange → sorted partition replay
-    (stateless alerts pass through inside it) → literal-map rule meta.
+    Plan: scan → match (resolve_match_mode: fused or hybrid) → enrich
+    projection → ONE conv_id Exchange → sorted partition replay
+    (stateless alerts pass through inside it) → literal-map rule meta,
+    tagged ``_sagan_conv_sorted`` when the replay's layout reaches it
+    (correlate.run_correlate).
     Strictly linear: the scan + match subtree has exactly one consumer, so
     nothing recomputes and nothing needs a persist; every stage cost is
     per-task parallel (scales with cores/executors). See
@@ -146,12 +154,7 @@ def build_alerts(
     ensure_shipped(spark)
     mode = resolve_match_mode(input_df, ruleset)
     matched = match.run_match(input_df, ruleset, mode=mode)
-    enriched = enrich.attach_dims(
-        matched,
-        dimsmod.role_dim(spark),
-        dimsmod.tool_dim(spark),
-        dimsmod.risk_ranges(spark),
-    )
+    enriched = enrich.attach_dims(matched)
     # non-conv tracked rules (by_username → role, by_dst → tool) split the
     # plan into a conv-keyed and one-or-more track-keyed replay branches —
     # dual consumers of the match subtree, so persist it (MapInPandas
@@ -179,13 +182,13 @@ def observe(df: DataFrame, aggs: list) -> tuple[DataFrame, Callable[[], dict]]:
     AQE replaces a shuffle stage whose output is empty with an empty
     relation, and the CollectMetrics node inside that stage leaves the
     executed plan with it: the observation never fires and its JVM row
-    cannot convert. That happens to the input observation on an all-empty
-    input, and would happen to an alerts observation under write_sinks'
-    exchange on every run with no alerts — so run observes the alerts
-    above that exchange (route.sink_rows), where the observation fires
-    with zero counts. The reader then aggregates the same metrics over the
-    unobserved ``df`` (an Observation is single-use): extra jobs, only on
-    those degenerate runs."""
+    cannot convert. That happens to the input observation on a run with
+    no alerts (it sits under the empty conv_id exchange), and would happen
+    to an alerts observation under that exchange — so run observes the
+    alerts above the last one (route.sink_rows), where the observation
+    fires with zero counts. The reader then aggregates the same metrics
+    over the unobserved ``df`` (an Observation is single-use): extra jobs,
+    only on those degenerate runs."""
     obs = Observation()  # unnamed → unique per call
 
     def read() -> dict:
@@ -263,8 +266,8 @@ def run(
     Without ``out_dir`` that action is ONE noop write; with it, the one
     pass of route.write_sinks that writes every sink, and the alert counts
     are observed on the rows its writer consumes (route.sink_rows): above
-    the sink exchange, where AQE keeps the observation on a run with no
-    alerts. Nothing is persisted (role-tracked rule sets aside:
+    the last conv_id exchange, where AQE keeps the observation on a run
+    with no alerts. Nothing is persisted (role-tracked rule sets aside:
     PipelineResult.unpersist).
 
     C7 depends_on ([PUB src/processors/dynamic-rules.c]): a dependent rule
@@ -274,16 +277,19 @@ def run(
     one pass above over the base rules plus the enabled dependents, so
     they share one conversation replay and flexbits set by either kind
     are seen by both; which dependents are enabled is still decided by
-    the first pass alone.
+    the first pass alone. When none is enabled and there is no
+    ``out_dir``, the first pass is the run and is returned as it is.
     """
     if any(r.depends_on is not None for r in ruleset.rules):
         base = RuleSet(tuple(r for r in ruleset.rules if r.depends_on is None))
         first = run(spark, input_path, base)
-        first.unpersist()
         fired = set(first.sid_counts)
         ruleset = RuleSet(
             tuple(r for r in ruleset.rules if r.depends_on is None or r.depends_on in fired)
         )
+        if out_dir is None and len(ruleset.rules) == len(base.rules):
+            return first  # no dependent enabled: the first pass is the run
+        first.unpersist()
     alerts, read_input = _alerts(spark, input_path, ruleset)
     if out_dir is None:
         observed, read_counts = observe_alerts(alerts, ruleset, read_input)

@@ -19,13 +19,15 @@ line CASE built from them are Spark SQL text, rendered here in Python
 (every literal through match._sql_str) and parsed by the JVM in one call
 each, whatever the rule count; callers still get Columns.
 
-Write shape: one pass, one writer for every alert sink. The alerts take
-one repartition(conv_id) + sortWithinPartitions (each conversation in one
-file per sink, stable per-file order, no global sort; AQE coalesces the
-exchange, which also sizes the files), one projection adds the formatted
-text line (sink_rows), and one executor-side Arrow writer (mapInArrow over
-pyarrow.fs) streams every sink's part file from that pass
-(write_sink_rows). The driver qualifies a bare out_dir through Hadoop
+Write shape: one pass, one writer for every alert sink. The alerts are
+partitioned by conv_id and sorted within partitions (each conversation in
+one file per sink, stable per-file order, no global sort; AQE coalesces
+the exchange, which also sizes the files): the conv replay's output is
+already laid out that way and is taken as it stands, any other frame gets
+one repartition(conv_id) + sortWithinPartitions. One projection adds the
+formatted text line (sink_rows), and one executor-side Arrow writer
+(mapInArrow over pyarrow.fs) streams every sink's part file from that
+pass (write_sink_rows). The driver qualifies a bare out_dir through Hadoop
 first, so it lands where Spark's writers would put it. Counts ride an
 Observation on the same action, placed on sink_rows' output
 (pipeline.run). The same writer has a partitioned form, every sink as
@@ -83,7 +85,9 @@ def attach_rule_meta(
     the cost (Sagan-realistic catalogs run thousands of rules), so large
     rule sets take a broadcast hash join against `rule_dim` instead —
     still no shuffle of the fact side, one tiny broadcast. Both paths
-    yield identical rows AND column order (equality-tested)."""
+    yield identical rows AND column order (equality-tested). Both keep
+    ``alerts``' partitioning and order, so the result carries its
+    ``_sagan_conv_sorted`` tag (correlate.run_correlate, sink_rows)."""
     check_sql_literals(alerts.sparkSession)
     noalert_sids = [r.sid for r in ruleset.rules if r.noalert]
     out = alerts
@@ -93,25 +97,27 @@ def attach_rule_meta(
 
     if len(live) > max_literal_rules:
         dim = rule_dim(alerts.sparkSession, ruleset).drop("noalert")
+        # the broadcast side is built; the alerts stream through in order
         joined = out.join(F.broadcast(dim), "sid", "left")
         # restore the literal path's column order (join moves sid first)
-        return joined.select(
-            *out.columns, "rev", "msg", "rule_class", "priority", "sink"
+        out = joined.select(*out.columns, "rev", "msg", "rule_class", "priority", "sink")
+    else:
+
+        def lit_map(fn) -> str:
+            entries = ", ".join(f"{r.sid}, {_sql_lit(fn(r))}" for r in live)
+            return f"element_at(map({entries}), `sid`)"
+
+        out = out.withColumns(
+            {
+                "rev": F.expr(f"CAST({lit_map(lambda r: r.rev)} AS INT)"),
+                "msg": F.expr(lit_map(lambda r: r.msg)),
+                "rule_class": F.expr(lit_map(lambda r: r.rule_class)),
+                "priority": F.expr(f"CAST({lit_map(lambda r: r.priority)} AS INT)"),
+                "sink": F.expr(lit_map(lambda r: r.sink)),
+            }
         )
-
-    def lit_map(fn) -> str:
-        entries = ", ".join(f"{r.sid}, {_sql_lit(fn(r))}" for r in live)
-        return f"element_at(map({entries}), `sid`)"
-
-    return out.withColumns(
-        {
-            "rev": F.expr(f"CAST({lit_map(lambda r: r.rev)} AS INT)"),
-            "msg": F.expr(lit_map(lambda r: r.msg)),
-            "rule_class": F.expr(lit_map(lambda r: r.rule_class)),
-            "priority": F.expr(f"CAST({lit_map(lambda r: r.priority)} AS INT)"),
-            "sink": F.expr(lit_map(lambda r: r.sink)),
-        }
-    )
+    out._sagan_conv_sorted = getattr(alerts, "_sagan_conv_sorted", False)
+    return out
 
 
 def _nn(name: str) -> str:
@@ -381,25 +387,31 @@ def _part_writer(out_dir: str, partition: str | None):
 
 
 def sink_rows(alerts: DataFrame) -> DataFrame:
-    """The rows write_sink_rows writes: ``alerts`` exchanged by conv_id,
-    sorted by (conv_id, turn_idx, sid) within partitions, with the text
-    sinks' line as ``_line``. An Observation on this frame sits above the
-    exchange, where AQE keeps it even when there are no rows
+    """The rows write_sink_rows writes: ``alerts`` partitioned by conv_id
+    and sorted by (conv_id, turn_idx, sid) within partitions, with the
+    text sinks' line as ``_line``.
+
+    A frame tagged ``_sagan_conv_sorted`` (the conv replay's output,
+    correlate.run_correlate, through route.attach_rule_meta) is already
+    laid out that way and is taken as it stands: one conv_id exchange per
+    run. Any other frame (a stateless-only set, the union of track
+    branches, anything a caller derives) is exchanged by conv_id and
+    sorted here. Either way an Observation on this frame sits above the
+    last exchange, where AQE keeps it even when there are no rows
     (pipeline.run)."""
     check_sql_literals(alerts.sparkSession)
-    return (
-        alerts.repartition("conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx", "sid")
-        .withColumn("_line", _sink_line())
-    )
+    if not getattr(alerts, "_sagan_conv_sorted", False):
+        alerts = alerts.repartition("conv_id").sortWithinPartitions("conv_id", "turn_idx", "sid")
+    return alerts.withColumn("_line", _sink_line())
 
 
 def write_sinks(alerts: DataFrame, out_dir: str) -> None:
     """Write every sink to ``out_dir/<sink>`` in one pass: text sinks as
     UTF-8 lines (``part-<pid>.txt``, byte-identical to Spark's text
     writer), unified2 as Parquet with the alerts' columns. Rows are
-    exchanged by conv_id and sorted by (conv_id, turn_idx, sid), so each
-    conversation sits in one file per sink, in order.
+    partitioned by conv_id and sorted by (conv_id, turn_idx, sid) as
+    sink_rows lays them out, so each conversation sits in one file per
+    sink, in order.
 
     Like ``mode("overwrite")``, the four sink directories are cleared
     first; a sink with no rows gets one empty part file and stays

@@ -20,8 +20,28 @@ reruns prune partitions at the scan.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
-TRANSCRIPT_COLUMNS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+# The transcript contract: batch reads of a parquet path and the stream's
+# file source both read these columns with these types, so neither infers
+# a schema with a Spark job.
+TRANSCRIPT_SCHEMA = StructType(
+    [
+        StructField("conv_id", StringType()),
+        StructField("turn_idx", IntegerType()),
+        StructField("role", StringType()),
+        StructField("text", StringType()),
+        StructField("tool", StringType()),
+        StructField("ts", TimestampNTZType()),
+    ]
+)
+TRANSCRIPT_COLUMNS = TRANSCRIPT_SCHEMA.fieldNames()
 
 
 def _iceberg_available(spark: SparkSession) -> bool:
@@ -36,12 +56,26 @@ def read_table(spark: SparkSession, location: str, columns: list[str] | None = N
     config file pointing at one gets the zero-exchange replay plan, which
     pipeline.resolve_match_mode reads off the scan) — or a parquet path.
     Column pruning is passed through so Catalyst pushes ``ReadSchema`` down
-    to the scan."""
+    to the scan.
+
+    A parquet path read for transcript columns only is read with those
+    columns' TRANSCRIPT_SCHEMA types, so Spark runs no schema-inference
+    job. A file column whose type Spark cannot read as that type fails
+    the scan with an error naming the column. Spark's one exception is an
+    unsigned 32-bit ``turn_idx``: plain-encoded values past 2^31 read
+    wrapped to negative INTs, and a dictionary-encoded page fails without
+    naming the column. A UTC-adjusted ``ts`` reads as its UTC wall clock,
+    as the inferred read gives it under the engine's UTC session. A
+    transcript column missing from a file reads as NULL there, as in the
+    stream's file source. Any other path read is inferred."""
     if "/" not in location:
         if _iceberg_available(spark):
             df = spark.read.format("iceberg").load(location)
         else:
             df = spark.table(location)
+    elif columns and set(columns) <= set(TRANSCRIPT_COLUMNS):
+        schema = StructType([TRANSCRIPT_SCHEMA[c] for c in columns])
+        df = spark.read.schema(schema).parquet(location)
     else:
         df = spark.read.parquet(location)
     if columns:

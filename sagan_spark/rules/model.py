@@ -165,7 +165,8 @@ class AlertTime:
 
 @dataclass(frozen=True)
 class EnrichCond:
-    """Post-join condition on a broadcast dimension (SURVEY §2.3).
+    """Condition on an enrichment dimension (SURVEY §2.3), constant-folded
+    into the match stage (match._fold_enrich).
 
     dim/field → role_dim.origin|trust_level, tool_dim.blacklisted|category,
     risk_ranges.risk_tag. op: "is" (value in values), "isnot",

@@ -4,7 +4,7 @@ The reference consumes an unbounded FIFO ([PUB src/input-pipe.c]); here the
 same stages run over ``readStream``:
 
   file/Iceberg stream → fused match (stream-safe: SQL exprs +
-  mapInPandas) → stream-static broadcast enrich joins →
+  mapInPandas) → the enrich projection (dims as CASE lookups) →
   ``applyInPandasWithState`` keyed by conv_id for after/threshold/flexbit
   state (carried across micro-batches) → one write of every sink per
   micro-batch (``foreachBatch`` → route.write_sink_rows, partitioned form).
@@ -36,32 +36,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from .. import fsutil
-from ..datagen import dims as dimsmod
 from ..engine import enrich, match, route
 from ..engine.correlate import counter_emit
 from ..engine.pipeline import observe
+from ..io import TRANSCRIPT_SCHEMA
 from ..rules.canonical import CANONICAL
 from ..rules.model import Rule, RuleSet
-
-TRANSCRIPT_SCHEMA = StructType(
-    [
-        StructField("conv_id", StringType()),
-        StructField("turn_idx", IntegerType()),
-        StructField("role", StringType()),
-        StructField("text", StringType()),
-        StructField("tool", StringType()),
-        StructField("ts", TimestampNTZType()),
-    ]
-)
 
 STATE_SCHEMA = StructType([StructField("blob", StringType())])
 
@@ -374,12 +357,7 @@ def build_stream(
     # always fused: micro-batch scans carry no bucket partitioning, so the
     # batch engine's hybrid choice (pipeline.resolve_match_mode) never applies
     matched = match.run_match(stream, ruleset, mode="fused")
-    enriched = enrich.attach_dims(
-        matched,
-        dimsmod.role_dim(spark),
-        dimsmod.tool_dim(spark),
-        dimsmod.risk_ranges(spark),
-    )
+    enriched = enrich.attach_dims(matched)
 
     tracked: dict[str, dict[int, Rule]] = {}
     for r in ruleset.rules:

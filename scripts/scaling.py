@@ -171,7 +171,7 @@ Notes
 - Single-box proxy for the N→4N executor requirement (driver instruction;
   no cluster in sandbox). The pipeline's only all-to-all exchange is the
   conv_id repartition of alerts; everything else is scan-parallel map
-  work + broadcast joins — the plan shape that scales on a real cluster
+  work + projections — the plan shape that scales on a real cluster
   (see docs/SCALE.md).
 - Workload: 58-rule production-selectivity profile (rules/bulk.py,
   plant_scale=0.02 → ~1.2% of turns alert) — the representative regime;

@@ -7,7 +7,7 @@ stall. Stages:
 
   scan     — parquet scan + prepare projection (hour/dow/risk_key), noop
   match    — + fused match (JVM predicates + one Arrow crossing)
-  enrich   — + broadcast dim joins
+  enrich   — + dim lookups (one projection)
   full     — + conv_id exchange, sorted replay, route meta, counts
 
 Prints one JSON line; run manually when retuning. Each (cpus) leg is one

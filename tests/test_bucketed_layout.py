@@ -108,8 +108,10 @@ def test_bucketed_scan_eliminates_replay_exchange(spark, bucketed):
 def test_replay_takes_the_bucket_count(spark, bucketed, n_buckets):
     """The replay repartitions into the table's bucket count, read from its
     bucket spec, so the exchange is elided whether or not that count equals
-    spark.sql.shuffle.partitions (8 here)."""
+    spark.sql.shuffle.partitions (8 here); the sink rows are the replay's
+    own partitions, so the run moves no rows at all."""
     from sagan_spark.engine.pipeline import _scan_bucketed_by
+    from sagan_spark.engine.route import sink_rows
 
     plain, _ = bucketed
     table = f"tx_bucketed_test_{n_buckets}"
@@ -125,9 +127,24 @@ def test_replay_takes_the_bucket_count(spark, bucketed, n_buckets):
         assert _scan_bucketed_by(spark.table(table), "conv_id") == n_buckets
         got = _alerts(spark, spark.table(table))
         assert _n_conv_exchanges(got) == 0
+        assert _n_conv_exchanges(sink_rows(got)) == 0
         assert _rows(got) == _rows(_alerts(spark, spark.read.parquet(plain)))
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+@pytest.mark.parametrize("stateful", [True, False], ids=["canonical", "stateless_only"])
+def test_one_conv_exchange_per_run_on_parquet(spark, bucketed, stateful):
+    """build_alerts + route.sink_rows exchange the alerts by conv_id once:
+    the replay's exchange for CANONICAL (the sink rows take its
+    partitions), the sink writer's own for a set with no replay."""
+    from sagan_spark.engine.route import sink_rows
+    from sagan_spark.rules.canonical import CANONICAL
+
+    plain, _ = bucketed
+    rs = CANONICAL if stateful else RuleSet(tuple(r for r in CANONICAL.rules if not r.stateful))
+    assert any(r.stateful for r in rs.rules) == stateful
+    assert _n_conv_exchanges(sink_rows(_alerts(spark, spark.read.parquet(plain), rs))) == 1
 
 
 def test_bucket_count_of_unlike_leaves_is_zero(spark, bucketed):

@@ -43,9 +43,13 @@ def test_dependent_enabled_when_parent_fires(spark, tiny_path):
 
 def test_dependent_disabled_when_parent_never_fires(spark, tiny_path):
     # parent restricted to a role that doesn't exist → child must not run,
-    # even though 'retry' texts are plentiful
-    res = pipeline.run(spark, tiny_path, _rs(("nonexistent-role",)))
+    # even though 'retry' texts are plentiful; with no dependent enabled
+    # the counting pass is the run: one noop write (two before)
+    res, jobs = jobs_of(spark, lambda: pipeline.run(spark, tiny_path, _rs(("nonexistent-role",))))
     assert res.sid_counts == {}
+    base = RuleSet(_rs(("nonexistent-role",)).rules[:1])
+    _, base_jobs = jobs_of(spark, lambda: pipeline.run(spark, tiny_path, base))
+    assert (jobs, base_jobs) == (1, 1)
 
 
 def test_enabled_dependent_shares_the_replay_with_base_rules(spark, tiny_path):
@@ -88,14 +92,17 @@ def test_resumable_refuses_dependents_before_any_unit(spark, tiny_path, tmp_path
 def test_out_dir_writes_base_and_dependents_in_one_pass(spark, tiny_path, tmp_path):
     """With out_dir, the counting pass is a noop write and the one write of
     base rules plus enabled dependents fills the counts: the written lines
-    equal sink_counts, nothing stays cached, and the job count is pinned
-    (14 for the former runner, which wrote the union of two cached passes)."""
+    equal sink_counts, nothing stays cached, and the job count is pinned:
+    the counting pass's one noop write, then the exchange's map job and
+    the writer (14 for the former runner, which wrote the union of two
+    cached passes; 11 while every pass inferred the input schema and
+    collected three dim broadcasts)."""
     out = str(tmp_path)
     res, jobs = jobs_of(
         spark, lambda: pipeline.run(spark, tiny_path, _rs(("assistant",)), out_dir=out)
     )
     res.unpersist()
-    assert jobs == 11
+    assert jobs == 3
     assert set(res.sink_counts) == {"fast", "eve"}
     for sink in ("fast", "eve", "syslog"):
         lines = 0

@@ -3,6 +3,8 @@ scan, partitioned writes round-trip."""
 
 from __future__ import annotations
 
+import pytest
+
 from sagan_spark import io as iomod
 
 
@@ -28,3 +30,73 @@ def test_write_table_partitioned_roundtrip(spark, tiny_path, tmp_path):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "PartitionFilters: [isnotnull(role" in plan
+
+
+def _rewrite(src: str, dst: str, **cols) -> str:
+    """The transcript files of ``src`` rewritten to ``dst`` with ``cols``
+    (name → pyarrow type) cast, as a producer other than datagen writes them."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    os.makedirs(dst)
+    for f in sorted(glob.glob(os.path.join(src, "*.parquet")))[:2]:
+        t = pq.read_table(f)
+        for name, typ in cols.items():
+            i = t.schema.get_field_index(name)
+            t = t.set_column(i, name, t.column(name).cast(typ))
+        pq.write_table(t, os.path.join(dst, os.path.basename(f)))
+    return dst
+
+
+def test_transcript_read_runs_no_job(spark, tiny_path):
+    from conftest import jobs_of
+
+    df, jobs = jobs_of(
+        spark, lambda: iomod.read_table(spark, tiny_path, columns=iomod.TRANSCRIPT_COLUMNS)
+    )
+    assert jobs == 0
+    assert df.schema == iomod.TRANSCRIPT_SCHEMA
+    assert df.schema == spark.read.parquet(tiny_path).schema
+
+
+def test_utc_adjusted_ts_gives_the_inferred_reads_alerts(spark, tiny_path, tmp_path):
+    """A ts written UTC-adjusted (Spark's TIMESTAMP, not TIMESTAMP_NTZ)
+    reads as its UTC wall clock: the alerts equal those of the inferred
+    read, which keeps the column's own type."""
+    import pyarrow as pa
+
+    from sagan_spark.engine import pipeline
+
+    utc = _rewrite(tiny_path, str(tmp_path / "utc"), ts=pa.timestamp("us", tz="UTC"))
+    inferred = spark.read.parquet(utc)
+    assert dict(inferred.dtypes)["ts"] == "timestamp"
+    known = iomod.read_table(spark, utc, columns=iomod.TRANSCRIPT_COLUMNS)
+    assert known.collect() == spark.read.parquet(utc).selectExpr(
+        *iomod.TRANSCRIPT_COLUMNS[:-1], "CAST(ts AS TIMESTAMP_NTZ) AS ts"
+    ).collect()
+
+    def rows(alerts):
+        cols = ["conv_id", "turn_idx", "sid", "CAST(ts AS STRING) AS ts", "msg", "sink"]
+        return sorted(tuple(r) for r in alerts.selectExpr(*cols).collect())
+
+    want = rows(pipeline.build_alerts(spark, inferred))
+    got = pipeline.run(spark, utc)
+    assert want and rows(got.alerts) == want
+    assert sum(got.sink_counts.values()) == len(want)
+
+
+@pytest.mark.parametrize(
+    "column, typ", [("turn_idx", "int64"), ("turn_idx", "string"), ("ts", "string")]
+)
+def test_unreadable_column_type_fails_naming_it(spark, tiny_path, tmp_path, column, typ):
+    """A column Spark cannot read as its TRANSCRIPT_SCHEMA type fails the
+    run, and the error names it; no alerts come out of a wrong read."""
+    import pyarrow as pa
+
+    from sagan_spark.engine import pipeline
+
+    bad = _rewrite(tiny_path, str(tmp_path / "bad"), **{column: getattr(pa, typ)()})
+    with pytest.raises(Exception, match=rf"\[{column}\]"):
+        pipeline.run(spark, bad)

@@ -97,11 +97,30 @@ def test_text_files_sorted_and_conv_local(spark, tiny_path, tmp_path, several_fi
     _assert_sorted_and_conv_local(str(tmp_path), keys)
 
 
+def test_rule_meta_join_keeps_the_replay_layout(spark, tiny_path, tmp_path, several_files):
+    """Past max_literal_rules the rule meta is a broadcast join, which
+    streams the replay's rows through in order: the sink rows still take
+    the replay's exchange as theirs, and every file stays sorted and
+    conversation-local."""
+    from sagan_spark.engine import correlate, enrich, match
+
+    matched = match.run_match(spark.read.parquet(tiny_path), CANONICAL, mode="fused")
+    replayed = correlate.run_correlate(enrich.attach_dims(matched), CANONICAL)
+    alerts = route.attach_rule_meta(replayed, CANONICAL, max_literal_rules=0)
+    plan = route.sink_rows(alerts)._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan
+    assert plan.count("Exchange hashpartitioning(conv_id") == 1
+    route.write_sinks(alerts, str(tmp_path))
+    _assert_sorted_and_conv_local(str(tmp_path), _line_keys(alerts))
+
+
 def test_run_out_dir_launches_few_jobs(canonical):
-    """One exchange and one writer: the persist and the four per-sink jobs
-    (14 jobs on the dense benchmark input) are gone."""
+    """One exchange and one writer: the replay's conv_id exchange is the
+    sinks' too, the transcripts are read with a known schema and the dims
+    are constants, so the run is the exchange's map job and the writer's
+    (7 jobs before, 14 before the one-pass writer)."""
     _, _, jobs, _ = canonical
-    assert 0 < jobs <= 8
+    assert jobs == 2
 
 
 def test_unified2_parquet_has_alert_schema_and_rows(spark, canonical):
@@ -142,17 +161,26 @@ def test_spark_writer_fallback_writes_the_same(spark, tiny_path, canonical, tmp_
 
 
 def test_run_without_alerts_counts_zero_from_the_write(spark, tiny_path, tmp_path):
-    """With no alerts the sink exchange is empty and AQE drops its stage;
-    the alert counts are observed above it, so they still fire (zeros)
-    and the plan is not re-run to count them."""
-    never = RuleSet((Rule(sid=1, msg="never", sink="fast", contents=(ContentSpec("zqxj-no-such-text"),)),))
-    res, jobs = _write(spark, tiny_path, never, str(tmp_path))
-    assert (res.sink_counts, res.sid_counts, res.metrics["alerts"]) == ({}, {}, 0)
-    assert res.metrics["rows_in"] > 0
-    assert 0 < jobs <= 8
-    for sink in route.TEXT_SINKS:
-        assert spark.read.text(str(tmp_path / sink)).count() == 0
-    assert spark.read.parquet(str(tmp_path / "unified2")).count() == 0
+    """With no alerts the last conv_id exchange is empty and AQE drops its
+    stage; the alert counts are observed above it, so they still fire
+    (zeros) and the plan is not re-run to count them. That exchange is the
+    sink writer's for a stateless rule and the replay's for a conv_id-
+    tracked one. (Two of the jobs re-read the input's counts, whose
+    Observation sits under the empty exchange.)"""
+    never = Rule(sid=1, msg="never", sink="fast", contents=(ContentSpec("zqxj-no-such-text"),))
+    never_after = Rule(
+        sid=2, msg="never after", sink="eve", contents=(ContentSpec("zqxj-no-such-text"),),
+        after=AfterSpec(track="conv_id", count=1, seconds=100),
+    )
+    for rule, want_jobs in ((never, 4), (never_after, 4)):
+        out = tmp_path / str(rule.sid)
+        res, jobs = _write(spark, tiny_path, RuleSet((rule,)), str(out))
+        assert (res.sink_counts, res.sid_counts, res.metrics["alerts"]) == ({}, {}, 0)
+        assert res.metrics["rows_in"] > 0
+        assert jobs == want_jobs, rule.msg
+        for sink in route.TEXT_SINKS:
+            assert spark.read.text(str(out / sink)).count() == 0
+        assert spark.read.parquet(str(out / "unified2")).count() == 0
 
 
 _SCHEMA = (
