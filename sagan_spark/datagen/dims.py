@@ -41,6 +41,16 @@ RISK_RANGES = pd.DataFrame(
     }
 )
 
+# The Spark SQL type of each attribute above, the type a join of the dim
+# as a Spark frame gives it: enrich.attach_dims casts its CASE lookups to it.
+DIM_TYPES = {
+    "origin": "string",
+    "trust_level": "int",
+    "category": "string",
+    "blacklisted": "boolean",
+    "risk_tag": "string",
+}
+
 # J3: Bluedot reputation snapshot ([PUB src/processors/bluedot.c] queries a
 # live reputation API; the batch analogue is a periodically-refreshed static
 # dim). Keyed on tool (the indicator column of this payload transposition).

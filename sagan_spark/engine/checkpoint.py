@@ -40,7 +40,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsutil
-from ..io import TRANSCRIPT_SCHEMA
+from ..io import read_table
 from ..rules.canonical import CANONICAL
 from ..rules.model import RuleSet
 from . import pipeline as pl
@@ -150,7 +150,7 @@ def run_resumable(
         if max_units is not None and processed >= max_units:
             break
         t0 = time.time()
-        df, read_input = pl.observe_input(spark.read.schema(TRANSCRIPT_SCHEMA).parquet(*files))
+        df, read_input = pl.observe_input(read_table(spark, files))
         alerts = pl.build_alerts(spark, df, ruleset)
         rows, read_counts = pl.observe_alerts(route.sink_rows(alerts), ruleset, read_input)
         route.write_sink_rows(rows, f"{out_dir.rstrip('/')}/sinks", partition=f"unit={uid}")

@@ -19,19 +19,15 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_type
 
-from ..datagen.dims import RISK_RANGES, ROLE_DIM, TOOL_DIM
+from ..datagen.dims import DIM_TYPES, RISK_RANGES, ROLE_DIM, TOOL_DIM
 from .match import _sql_str, check_sql_literals
 
 
 def _sql_value(v) -> str:
     """A dim cell as a Spark SQL literal (its column's CAST types it)."""
-    if pd.isna(v):
-        return "NULL"
     if isinstance(v, (bool, np.bool_)):
         return "true" if v else "false"
     if isinstance(v, (int, np.integer)):
@@ -41,50 +37,37 @@ def _sql_value(v) -> str:
     raise TypeError(f"no SQL literal for dim value {v!r}")
 
 
-def _sql_types(dim: pd.DataFrame) -> dict[str, str]:
-    """Each column's Spark SQL type, inferred as createDataFrame infers it
-    from pandas (through Arrow)."""
-    schema = pa.Schema.from_pandas(dim, preserve_index=False)
-    return {f.name: from_arrow_type(f.type).simpleString() for f in schema}
-
-
 def _lookup(dim: pd.DataFrame, key: str) -> list[str]:
     """The non-key columns of ``dim`` as CASE columns on ``key``: a left
-    equi-join's attributes. A NULL key matches nothing, as in a join; a
-    duplicated key raises, since a join would duplicate the fact row."""
-    rows = dim[dim[key].notna()]
-    dup = rows[key][rows[key].duplicated()]
+    equi-join's attributes. A duplicated key raises, since a join would
+    duplicate the fact row."""
+    dup = dim[key][dim[key].duplicated()]
     if len(dup):
         raise ValueError(f"dim key {key!r} repeats {dup.iloc[0]!r}: a lookup must be unique")
-    types = _sql_types(dim)
     out = []
     for col in dim.columns.drop(key):
         whens = " ".join(
             f"WHEN (`{key}` = {_sql_value(k)}) THEN {_sql_value(v)}"
-            for k, v in zip(rows[key], rows[col])
+            for k, v in zip(dim[key], dim[col])
         )
-        out.append(f"CAST(CASE {whens} END AS {types[col]}) AS `{col}`")
+        out.append(f"CAST(CASE {whens} END AS {DIM_TYPES[col]}) AS `{col}`")
     return out
 
 
 def _range_lookup(ranges: pd.DataFrame, key: str, col: str) -> str:
     """``col`` of the range [lo, hi] (both ends inclusive) holding ``key``,
-    as one CASE: a left range join's attribute. A range with a NULL end or
-    lo > hi holds nothing, as in the join; overlapping ranges raise, since
-    a join would give a key held by two ranges two rows."""
-    rows = ranges[ranges["lo"].notna() & ranges["hi"].notna() & (ranges["lo"] <= ranges["hi"])]
-    rows = rows.sort_values("lo", kind="mergesort")
+    as one CASE: a left range join's attribute. Overlapping ranges raise,
+    since a join would give a key held by two ranges two rows."""
+    rows = ranges.sort_values("lo", kind="mergesort")
     lo, hi = rows["lo"].tolist(), rows["hi"].tolist()
-    reach = None  # the highest hi of the ranges before
-    for a, b in zip(lo, hi):
-        if reach is not None and a <= reach:
+    for a, reach in zip(lo[1:], np.maximum.accumulate(hi)):
+        if a <= reach:
             raise ValueError(f"ranges overlap at {key} = {a}: a range lookup must be unique")
-        reach = b if reach is None else max(reach, b)
     whens = " ".join(
         f"WHEN ((`{key}` >= {_sql_value(a)}) AND (`{key}` <= {_sql_value(b)})) THEN {_sql_value(v)}"
         for a, b, v in zip(lo, hi, rows[col])
     )
-    return f"CAST(CASE {whens} END AS {_sql_types(ranges)[col]}) AS `{col}`"
+    return f"CAST(CASE {whens} END AS {DIM_TYPES[col]}) AS `{col}`"
 
 
 def attach_dims(

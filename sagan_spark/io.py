@@ -44,43 +44,60 @@ TRANSCRIPT_SCHEMA = StructType(
 TRANSCRIPT_COLUMNS = TRANSCRIPT_SCHEMA.fieldNames()
 
 
+# The key columns a run cannot do without: (column, failing condition,
+# what the error calls it). NULL is how the known-schema read gives a
+# column missing from the file; negative how it gives an unsigned 32-bit
+# turn_idx past 2^31.
+_CHECKS = [
+    ("conv_id", "`conv_id` IS NULL", "NULL"),
+    ("turn_idx", "`turn_idx` IS NULL OR `turn_idx` < 0", "NULL or negative"),
+    ("ts", "`ts` IS NULL", "NULL"),
+]
+
+
 def _iceberg_available(spark: SparkSession) -> bool:
     ext = spark.conf.get("spark.sql.extensions", "") or ""
     return "IcebergSparkSessionExtensions" in ext
 
 
-def read_table(spark: SparkSession, location: str, columns: list[str] | None = None) -> DataFrame:
+def read_table(
+    spark: SparkSession, location: str | list[str], columns: list[str] | None = None
+) -> DataFrame:
     """Read a table by location. ``location`` is either a slash-free table
     IDENTIFIER — Iceberg when the extension is loaded, otherwise a catalog
     table via ``spark.table`` (the form conv_id-BUCKETED tables take, so a
     config file pointing at one gets the zero-exchange replay plan, which
-    pipeline.resolve_match_mode reads off the scan) — or a parquet path.
-    Column pruning is passed through so Catalyst pushes ``ReadSchema`` down
-    to the scan.
+    pipeline.resolve_match_mode reads off the scan) — or a parquet path or
+    list of parquet files (a resumable unit's). Column pruning is passed
+    through so Catalyst pushes ``ReadSchema`` down to the scan.
 
-    A parquet path read for transcript columns only is read with those
-    columns' TRANSCRIPT_SCHEMA types, so Spark runs no schema-inference
-    job. A file column whose type Spark cannot read as that type fails
-    the scan with an error naming the column. Spark's one exception is an
-    unsigned 32-bit ``turn_idx``: plain-encoded values past 2^31 read
-    wrapped to negative INTs, and a dictionary-encoded page fails without
-    naming the column. A UTC-adjusted ``ts`` reads as its UTC wall clock,
-    as the inferred read gives it under the engine's UTC session. A
-    transcript column missing from a file reads as NULL there, as in the
-    stream's file source. Any other path read is inferred."""
-    if "/" not in location:
+    Parquet is read with TRANSCRIPT_SCHEMA, pruned to ``columns`` (all
+    of them when None), so Spark runs no schema-inference job. A file
+    column whose type Spark cannot read as that type fails the scan with
+    an error naming the column. A UTC-adjusted ``ts`` reads as its UTC
+    wall clock, as the inferred read gives it under the engine's UTC
+    session. Under a known schema a column missing from a file (or
+    misspelled in it) would read as NULL, and an unsigned 32-bit
+    ``turn_idx`` past 2^31 would read wrapped to a negative INT; so a NULL
+    ``conv_id``, ``turn_idx`` or ``ts``, or a negative ``turn_idx``, fails
+    the scan with an error naming the column (a filter fused into the
+    scan's stage: no extra job)."""
+    if isinstance(location, str) and "/" not in location:
         if _iceberg_available(spark):
             df = spark.read.format("iceberg").load(location)
         else:
             df = spark.table(location)
-    elif columns and set(columns) <= set(TRANSCRIPT_COLUMNS):
-        schema = StructType([TRANSCRIPT_SCHEMA[c] for c in columns])
-        df = spark.read.schema(schema).parquet(location)
-    else:
-        df = spark.read.parquet(location)
-    if columns:
-        df = df.select(*columns)
-    return df
+        return df.select(*columns) if columns else df
+    names = columns or TRANSCRIPT_COLUMNS
+    paths = [location] if isinstance(location, str) else location
+    df = spark.read.schema(StructType([TRANSCRIPT_SCHEMA[c] for c in names])).parquet(*paths)
+    checks = [
+        f"WHEN {cond} THEN raise_error('transcript column [{c}] is {what}:"
+        " missing from the file, misspelled there, or not a valid value')"
+        for c, cond, what in _CHECKS
+        if c in names
+    ]
+    return df.filter(f"CASE {' '.join(checks)} ELSE true END") if checks else df
 
 
 def write_table(

@@ -300,6 +300,24 @@ def test_pipeline_run_on_catalog_identifier_elides_exchange(spark, bucketed):
     assert _n_conv_exchanges(res_p.alerts) >= 1
 
 
+def test_sink_file_count_is_the_replays_partition_count(spark, bucketed, tmp_path):
+    """route.sink_rows takes the replay's partitions as they stand, so a
+    sink's file count is their count: the bucket count on the bucketed
+    table (no exchange is left for AQE to coalesce), AQE's coalesced
+    count (one, on this small input) behind the parquet read's exchange."""
+    import glob
+
+    from sagan_spark.engine import pipeline
+
+    plain, table = bucketed
+    for src, want in [(table, 8), (plain, 1)]:
+        out = str(tmp_path / ("bucketed" if src == table else "plain"))
+        res = pipeline.run(spark, src, ruleset=NATIVE_RS, out_dir=out)
+        assert set(res.sink_counts) == {"fast", "eve"}
+        for sink in res.sink_counts:
+            assert len(glob.glob(f"{out}/{sink}/part-*.txt")) == want, (src, sink)
+
+
 def test_replay_guard_refuses_non_contiguous_partition():
     """The replay resets per-conversation state on conv change, so a
     partition where a conversation REAPPEARS after others (lost sort —

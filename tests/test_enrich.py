@@ -79,24 +79,6 @@ def test_dims_call_form_takes_the_constant_frames(spark):
     assert got.collect() == enrich.attach_dims(alerts).collect()
 
 
-def test_other_dims_equal_the_joins(spark):
-    """Dims other than the constants: a NULL key, a NULL attribute and an
-    empty range (lo > hi) match nothing in a join, and nothing here."""
-    role_dim = pd.DataFrame(
-        {"role": ["user", None, "it's"], "origin": ["US", "XX", None],
-         "trust_level": pd.array([1, 2, None], dtype="Int32")}
-    )
-    ranges = pd.DataFrame(
-        {"lo": pd.array([60, 10, 500], dtype="int64"), "hi": pd.array([80, 20, 400], dtype="int64"),
-         "risk_tag": ["b", "a", "never"]}
-    )
-    alerts = _alerts(spark).withColumn("role", F.when(F.col("turn_idx") % 5 == 0, "it's").otherwise(F.col("role")))
-    want = _attach_dims_joins(alerts, role_dim, dims.TOOL_DIM, ranges)
-    got = enrich.attach_dims(alerts, role_dim, dims.TOOL_DIM, ranges)
-    assert _fields(got) == _fields(want)
-    assert got.sort("turn_idx").collect() == want.sort("turn_idx").collect()
-
-
 @pytest.mark.parametrize(
     "which, dim",
     [

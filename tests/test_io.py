@@ -32,9 +32,10 @@ def test_write_table_partitioned_roundtrip(spark, tiny_path, tmp_path):
     assert "PartitionFilters: [isnotnull(role" in plan
 
 
-def _rewrite(src: str, dst: str, **cols) -> str:
-    """The transcript files of ``src`` rewritten to ``dst`` with ``cols``
-    (name → pyarrow type) cast, as a producer other than datagen writes them."""
+def _rewrite(src: str, dst: str, fn) -> str:
+    """The transcript files of ``src`` rewritten to ``dst`` as ``fn`` (a
+    pyarrow Table → Table) makes them, as a producer other than datagen
+    writes them."""
     import glob
     import os
 
@@ -42,12 +43,15 @@ def _rewrite(src: str, dst: str, **cols) -> str:
 
     os.makedirs(dst)
     for f in sorted(glob.glob(os.path.join(src, "*.parquet")))[:2]:
-        t = pq.read_table(f)
-        for name, typ in cols.items():
-            i = t.schema.get_field_index(name)
-            t = t.set_column(i, name, t.column(name).cast(typ))
-        pq.write_table(t, os.path.join(dst, os.path.basename(f)))
+        pq.write_table(fn(pq.read_table(f)), os.path.join(dst, os.path.basename(f)))
     return dst
+
+
+def _cast(column: str, typ):
+    """A rewrite casting ``column`` to the pyarrow type ``typ``."""
+    return lambda t: t.set_column(
+        t.schema.get_field_index(column), column, t.column(column).cast(typ)
+    )
 
 
 def test_transcript_read_runs_no_job(spark, tiny_path):
@@ -69,7 +73,7 @@ def test_utc_adjusted_ts_gives_the_inferred_reads_alerts(spark, tiny_path, tmp_p
 
     from sagan_spark.engine import pipeline
 
-    utc = _rewrite(tiny_path, str(tmp_path / "utc"), ts=pa.timestamp("us", tz="UTC"))
+    utc = _rewrite(tiny_path, str(tmp_path / "utc"), _cast("ts", pa.timestamp("us", tz="UTC")))
     inferred = spark.read.parquet(utc)
     assert dict(inferred.dtypes)["ts"] == "timestamp"
     known = iomod.read_table(spark, utc, columns=iomod.TRANSCRIPT_COLUMNS)
@@ -88,15 +92,50 @@ def test_utc_adjusted_ts_gives_the_inferred_reads_alerts(spark, tiny_path, tmp_p
 
 
 @pytest.mark.parametrize(
-    "column, typ", [("turn_idx", "int64"), ("turn_idx", "string"), ("ts", "string")]
+    "column, rewrite",
+    [
+        ("turn_idx", _cast("turn_idx", "int64")),
+        ("turn_idx", _cast("turn_idx", "string")),
+        ("ts", _cast("ts", "string")),
+        ("conv_id", lambda t: t.drop_columns(["conv_id"])),
+        ("conv_id", lambda t: t.rename_columns(["conversation_id", *t.column_names[1:]])),
+    ],
+    ids=["turn_idx-int64", "turn_idx-string", "ts-string", "conv_id-missing", "conv_id-misspelled"],
 )
-def test_unreadable_column_type_fails_naming_it(spark, tiny_path, tmp_path, column, typ):
-    """A column Spark cannot read as its TRANSCRIPT_SCHEMA type fails the
-    run, and the error names it; no alerts come out of a wrong read."""
-    import pyarrow as pa
-
+def test_unreadable_column_fails_naming_it(spark, tiny_path, tmp_path, column, rewrite):
+    """A column Spark cannot read as its TRANSCRIPT_SCHEMA type, or a key
+    column the file lacks (the known schema would read it as NULL and
+    replay every row as one conversation), fails the run, and the error
+    names it; no alerts come out of a wrong read."""
     from sagan_spark.engine import pipeline
 
-    bad = _rewrite(tiny_path, str(tmp_path / "bad"), **{column: getattr(pa, typ)()})
+    bad = _rewrite(tiny_path, str(tmp_path / "bad"), rewrite)
     with pytest.raises(Exception, match=rf"\[{column}\]"):
         pipeline.run(spark, bad)
+
+
+def test_unsigned_turn_idx_past_int_range_fails_naming_it(spark, tmp_path):
+    """An unsigned 32-bit turn_idx past 2^31 reads wrapped to a negative
+    INT under the known schema (plain encoding); the read refuses it."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pa.table(
+        {
+            "conv_id": ["c1"] * 3,
+            "turn_idx": pa.array([1, 2**31 + 5, 2**32 - 1], pa.uint32()),
+            "role": ["user"] * 3,
+            "text": ["hi"] * 3,
+            "tool": pa.array([None] * 3, pa.string()),
+            "ts": pa.array([dt.datetime(2025, 1, 1)] * 3, pa.timestamp("us")),
+        }
+    )
+    path = tmp_path / "u32"
+    path.mkdir()
+    pq.write_table(t, str(path / "part-0.parquet"), use_dictionary=False)
+    df = iomod.read_table(spark, str(path), columns=iomod.TRANSCRIPT_COLUMNS)
+    with pytest.raises(Exception, match=r"\[turn_idx\]"):
+        df.collect()
+    assert iomod.read_table(spark, str(path), columns=["role", "text"]).count() == 3

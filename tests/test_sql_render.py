@@ -164,9 +164,9 @@ def test_plan_build_round_trip_budget(spark, tiny_path):
 
     canonical = _count_round_trips(lambda: build(CANONICAL))
     bulk = _count_round_trips(lambda: build(BULK))
-    # measured: 532 for a session's first build, 521 after it (764 while
+    # measured: 504 for a session's first build, 493 after it (764 while
     # the read inferred its schema and the dims were three Spark frames)
-    assert canonical <= 532, canonical
+    assert canonical <= 504, canonical
     extra = len(BULK.rules) - len(CANONICAL.rules)
     assert extra > 0 and (bulk - canonical) <= 3 * extra, (canonical, bulk)
     assert jobs == [0, 0]
