@@ -60,6 +60,91 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id", w: i
     return out
 
 
+# Entry caps of the kernels' per-task memos, which live across a task's
+# Arrow batches (minhash: shingle → hash vector; simhash: token → hash):
+# past a cap the memo stops growing and lookups keep paying off for the
+# hot keys already cached, so a partition with a huge vocabulary cannot
+# grow a worker without bound. minhash's per-batch arrays are sized by
+# the batch. Module level so tests can force them to 0, as
+# _COLLECT_EDGE_BYTES.
+_MINHASH_MEMO_CAP = 1 << 17
+_SIMHASH_MEMO_CAP = 1 << 17
+
+
+def _minhash_kernel(id_col: str, text_col: str, w: int, num_hashes: int):
+    """The mapInArrow body of minhash_signature's fast path: Arrow batches
+    of (id, text) in, batches of (id, sig array<string>) out, one per
+    batch (typed and empty when no row of the batch has a shingle).
+
+    Per batch, every row's non-empty w-shingles are mapped to batch-local
+    integer codes, each distinct shingle is hashed once (``num_hashes``
+    seeded md5s; the first 8 digest bytes as a big-endian uint64, whose
+    numeric order is the lexicographic order of the 16-hex prefix), and
+    one ``np.minimum.reduceat`` over the gathered ``H[codes]`` takes every
+    row's per-seed minimum. A row's repeated shingle is gathered twice,
+    which leaves its minimum unchanged. Hash vectors persist across the
+    task's batches in a memo bounded by ``_MINHASH_MEMO_CAP``."""
+    cap = _MINHASH_MEMO_CAP
+
+    def sign(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        # CPython's builtin md5 takes 0.22 µs a call on these short inputs,
+        # OpenSSL's hashlib.md5 0.48 µs; the digests are identical
+        try:
+            from _md5 import md5
+        except ImportError:
+            from hashlib import md5
+
+        prefixes = [f"{i}:".encode() for i in range(num_hashes)]
+        memo: dict[str, bytes] = {}
+        for batch in batches:
+            codes: dict[str, int] = {}
+            flat: list[int] = []
+            starts: list[int] = []
+            keep: list[int] = []
+            for row, text in enumerate(batch.column(text_col).to_pylist()):
+                if text is None:
+                    continue
+                toks = text.lower().split(" ")
+                # Spark's windows: offsets 0..max(n - w, 0), so a row of
+                # fewer than w tokens is one short window of all of them
+                wins = zip(*[toks[k:] for k in range(w)]) if len(toks) >= w else (toks,)
+                start = len(flat)
+                flat.extend(codes.setdefault(s, len(codes)) for s in map(" ".join, wins) if s)
+                if len(flat) > start:  # no non-empty shingle → no sig row
+                    keep.append(row)
+                    starts.append(start)
+            digests = []
+            for s in codes:
+                d = memo.get(s)
+                if d is None:
+                    sb = s.encode("utf-8")
+                    d = b"".join([md5(p + sb).digest()[:8] for p in prefixes])
+                    if len(memo) < cap:
+                        memo[s] = d
+                digests.append(d)
+            n = len(keep) * num_hashes
+            hexed = b""
+            if keep:
+                h = np.frombuffer(b"".join(digests), dtype=">u8").reshape(len(codes), num_hashes)
+                mins = np.minimum.reduceat(h.astype(np.uint64)[np.array(flat)], starts, axis=0)
+                # the minima are native uint64: back to big-endian, so the
+                # hex reads as the digest's leading bytes
+                hexed = mins.astype(">u8").tobytes().hex().encode("ascii")
+            values = pa.StringArray.from_buffers(
+                n, pa.py_buffer(np.arange(0, 16 * n + 1, 16, dtype=np.int32)), pa.py_buffer(hexed)
+            )
+            sig = pa.ListArray.from_arrays(
+                pa.array(np.arange(0, n + 1, num_hashes, dtype=np.int32)), values
+            )
+            ids = batch.column(id_col).take(pa.array(keep, pa.int64()))
+            yield pa.RecordBatch.from_arrays([ids, sig], [id_col, "sig"])
+
+    return sign
+
+
 def minhash_signature(
     sh: DataFrame, id_col: str = "doc_id", num_hashes: int = 8
 ) -> DataFrame:
@@ -69,76 +154,33 @@ def minhash_signature(
 
     Plan (r7): when ``sh`` comes straight from `shingles` (provenance
     attribute), the whole shingle → hash → per-seed-min computation runs
-    in ONE mapInPandas kernel over (id, text) — ZERO shuffle, and the
-    md5s run through hashlib's C implementation instead of 8 interpreted
-    higher-order-function passes (Spark HOFs are CodegenFallback, and
-    the transform/slice/concat_ws shingle construction alone cost more
-    than the whole Python kernel — measured at sf1.0: 23.9s exploded /
-    38.1s array-HOF / ~2s kernel for the 50k-doc signature). The kernel
-    reproduces the JVM semantics exactly on ASCII text — Python
-    str.lower()/split(" ")/" ".join match Spark lower()/split/concat_ws,
-    and hashlib md5 hex == Spark md5 — and the equality is pinned by
-    test_minhash_fast_path_equals_exploded_path (including empty/null/
-    short-text edge rows). Any other input takes the original
-    explode → groupBy path — map-side combine keeps that shuffle tiny."""
+    in ONE mapInArrow kernel over (id, text) — ZERO shuffle (Spark HOFs
+    are CodegenFallback, and the transform/slice/concat_ws shingle
+    construction alone cost more than the whole Python kernel — measured
+    at sf1.0: 23.9s exploded / 38.1s array-HOF / ~2s kernel for the
+    50k-doc signature). The kernel (_minhash_kernel) maps each Arrow
+    batch's shingles to integer codes, hashes each DISTINCT shingle once
+    into a row of big-endian uint64s (numeric order = order of the
+    16-hex prefix), and takes every row's minima with one numpy
+    ``minimum.reduceat`` over the gathered hash rows: no pandas, no
+    per-occurrence Python min. The reduce runs on native uint64s, so the
+    minima are swapped back to big-endian before they are written as hex
+    (native bytes would print little-endian on x86). md5 is CPython's
+    builtin ``_md5`` when importable, else ``hashlib`` (same digests).
+    Measured on perfbench dedup_docs (5,000 docs, 27,199 distinct
+    shingles, seed 42, local[2] on a 4-CPU host): the traced signature
+    step takes 0.62 s where a per-occurrence string-min kernel took
+    1.13 s, and the chain's wall_s median is 1.29 s against 1.71 s
+    (10 alternated pairs). The kernel reproduces the JVM semantics
+    exactly on ASCII text — Python str.lower()/split(" ")/" ".join match
+    Spark lower()/split/concat_ws, and md5 hex == Spark md5 — and the
+    equality is pinned by test_minhash_fast_path_equals_exploded_path
+    (including empty/null/short-text edge rows). Any other input takes
+    the original explode → groupBy path — map-side combine keeps that
+    shuffle tiny."""
     src = getattr(sh, "_sagan_shingles", None)
     if src is not None and src["id_col"] == id_col:
-        import pandas as pd
-
-        text_col, w = src["text_col"], src["w"]
-        prefixes = [f"{i}:".encode() for i in range(num_hashes)]
-
-        def sign(batches):
-            import hashlib
-
-            md5 = hashlib.md5
-            # Near-dup corpora repeat shingles heavily across documents
-            # (that is WHY minhash works), so memoize each distinct
-            # shingle's hash vector per task — measured −31% on a
-            # replica-family 10× corpus, neutral on sf0.1. Bounded: past
-            # the cap the memo stops growing (lookups keep paying off for
-            # the hot shingles already cached).
-            memo: dict[str, list] = {}
-            memo_cap = 1 << 17
-            for pdf in batches:
-                ids: list = []
-                sigs: list = []
-                for did, text in zip(pdf[id_col].values, pdf[text_col].values):
-                    if text is None or (isinstance(text, float) and pd.isna(text)):
-                        continue
-                    toks = text.lower().split(" ")
-                    upper = max(len(toks) - w, 0)
-                    seen: set = set()
-                    mins = [None] * num_hashes
-                    for i in range(upper + 1):
-                        s = " ".join(toks[i : i + w])
-                        if not s or s in seen:
-                            continue
-                        seen.add(s)
-                        hs = memo.get(s)
-                        if hs is None:
-                            sb = s.encode("utf-8")
-                            hs = [md5(p + sb).hexdigest()[:16] for p in prefixes]
-                            if len(memo) < memo_cap:
-                                memo[s] = hs
-                        for k in range(num_hashes):
-                            h = hs[k]
-                            if mins[k] is None or h < mins[k]:
-                                mins[k] = h
-                    if mins[0] is None:  # no non-empty shingle → no sig row
-                        continue
-                    ids.append(did)
-                    sigs.append(mins)
-                # object dtype both ways: an empty batch would otherwise
-                # default to float64 columns, which Arrow cannot convert
-                # to array<string>
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.Series(ids, dtype="object"),
-                        "sig": pd.Series(sigs, dtype="object"),
-                    }
-                )
-
+        text_col = src["text_col"]
         id_type = dict(src["df"].select(id_col).dtypes)[id_col]
         narrow = src["df"].select(F.col(id_col), F.col(text_col))
         # single-file inputs scan as 1 task (row-group granularity) and
@@ -148,7 +190,10 @@ def minhash_signature(
         p = spark.sparkContext.defaultParallelism
         if narrow.rdd.getNumPartitions() < p:
             narrow = narrow.repartition(p)
-        return narrow.mapInPandas(sign, schema=f"{id_col} {id_type}, sig array<string>")
+        return narrow.mapInArrow(
+            _minhash_kernel(id_col, text_col, src["w"], num_hashes),
+            schema=f"{id_col} {id_type}, sig array<string>",
+        )
     aggs = [
         F.min(F.substring(F.md5(F.encode(F.concat(F.lit(f"{i}:"), F.col("shingle")), "utf-8")), 1, 16)).alias(
             f"h{i}"
@@ -157,6 +202,21 @@ def minhash_signature(
     ]
     sig = sh.groupBy(id_col).agg(*aggs)
     return sig.select(id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
+
+
+def _banded(sig: DataFrame, id_col: str, bands: int, rows_per_band: int) -> DataFrame:
+    """(id, band_idx, band_hash): one row per document and band, the band
+    hash being its ``rows_per_band`` signature values joined by '|' — the
+    bucket key of lsh_candidate_pairs and lsh_bucket_stats."""
+    return sig.select(
+        F.col(id_col),
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.concat_ws("|", F.slice("sig", b * rows_per_band + 1, rows_per_band)),
+            )
+        ).alias("band_idx", "band_hash"),
+    )
 
 
 def lsh_candidate_pairs(
@@ -190,15 +250,7 @@ def lsh_candidate_pairs(
     kernel (minhash_signature fast path) the uncapped pair-count leg
     measured 27.0s → 1.7s at sf1.0 (50k docs, min-of-3).
     """
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.concat_ws("|", F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
+    banded = _banded(sig, id_col, bands, rows_per_band)
     buckets = banded.groupBy("band_idx", "band_hash").agg(
         F.collect_list(id_col).alias("_members")
     )
@@ -232,15 +284,7 @@ def lsh_bucket_stats(
     """Observability for the bucket cap: one row with total buckets,
     over-cap (dropped) buckets, and docs touching a dropped bucket —
     the 'no silent caps' companion to lsh_candidate_pairs."""
-    banded = sig.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.concat_ws("|", F.slice("sig", b * rows_per_band + 1, rows_per_band)),
-            )
-        ).alias("band_idx", "band_hash"),
-    )
+    banded = _banded(sig, id_col, bands, rows_per_band)
     cap = F.lit(max_bucket if max_bucket is not None else (1 << 62))
     per_bucket = banded.groupBy("band_idx", "band_hash").agg(
         F.count("*").alias("n"), F.countDistinct(id_col).alias("docs")
@@ -692,6 +736,8 @@ def simhash_portable(
     double-space rows)."""
     import pandas as pd
 
+    cap = _SIMHASH_MEMO_CAP
+
     def sim_kernel(batches):
         import hashlib
 
@@ -713,7 +759,8 @@ def simhash_portable(
                     h = memo.get(tok)
                     if h is None:
                         h = int(md5(tok.encode("utf-8")).hexdigest()[:8], 16)
-                        memo[tok] = h
+                        if len(memo) < cap:
+                            memo[tok] = h
                     hs.append(h)
                 n = len(hs)
                 if n == 0:  # no non-empty token → no row (groupBy semantics)

@@ -578,7 +578,14 @@ def check_checkpoint_layout(spark: SparkSession, checkpoint_dir: str, has_statef
     JSON struct strings — key schema first) through the Hadoop FS API, so
     the guard fires on ``s3a://``/``hdfs://`` checkpoints too. The sink
     legacy-layout guard in make_batch_writer got this treatment in r4;
-    this is the checkpoint twin."""
+    this is the checkpoint twin.
+
+    A partition whose schema file holds no '{' that parses as a struct is
+    skipped, and a checkpoint with no readable partition passes: the
+    guard cannot tell such a layout from its own, and refusing would
+    block a valid resume after a change of Spark's framing, so Spark's own
+    state-schema check decides (tests/test_checkpoint_guard.py forces
+    both unreadable shapes)."""
     ck = checkpoint_dir.rstrip("/")
     state_dir = ck + "/state/0"
     try:

@@ -248,3 +248,46 @@ def test_checkpoint_guard_fresh_dir_passes(spark, tmp_path):
     from sagan_spark.streaming import pipeline as sp
 
     sp.check_checkpoint_layout(spark, str(tmp_path / "nonexistent_ck"), has_stateful=True)
+
+
+def _key_schema_json(names: list[str]) -> bytes:
+    return json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": n, "type": "string", "nullable": True, "metadata": {}} for n in names
+            ],
+        }
+    ).encode()
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        b"\x00\x02v2\x00\x00\x00\x01 truncated framing, no JSON at all",
+        # each '{' opens something that is not a struct: broken JSON, an
+        # object without a field list, an empty object inside an array
+        b"\x00\x7b{not json} {\"type\": \"struct\"} [{}]",
+    ],
+    ids=["no-brace", "no-struct"],
+)
+def test_checkpoint_guard_passes_unreadable_schema(spark, tmp_path, body):
+    """A state schema file the guard cannot read at all passes, whatever
+    the rule set: the guard cannot tell that layout from its own, and
+    refusing would block a valid resume after a change of Spark's framing,
+    so Spark's own state-schema check decides. A readable partition beside
+    the unreadable ones still decides for the guard."""
+    from sagan_spark.streaming import pipeline as sp
+
+    ck = tmp_path / "ck"
+    for part in ("0", "1"):
+        meta = ck / "state" / "0" / part / "_metadata"
+        meta.mkdir(parents=True)
+        (meta / "schema").write_bytes(body)
+    sp.check_checkpoint_layout(spark, str(ck), has_stateful=True)
+    sp.check_checkpoint_layout(spark, str(ck), has_stateful=False)
+    meta = ck / "state" / "0" / "2" / "_metadata"
+    meta.mkdir(parents=True)
+    (meta / "schema").write_bytes(b"\x00\x02v2" + _key_schema_json(["conv_id"]))
+    with pytest.raises(RuntimeError, match="pre-unification"):
+        sp.check_checkpoint_layout(spark, str(ck), has_stateful=True)

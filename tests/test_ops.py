@@ -6,6 +6,7 @@ multimodal decoder's deterministic output."""
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -181,12 +182,14 @@ def _simhash_column_path(df, text_col="text", id_col="doc_id", bits=16):
     return bit_sums.select(F.col(id_col), sim.alias("simhash"))
 
 
-def test_simhash_kernel_equals_column_path(spark):
+def test_simhash_kernel_equals_column_path(spark, monkeypatch):
     """r7 internals change: simhash_portable computes the fingerprint in a
     shuffle-free mapInPandas kernel. The kernel must equal the original
     explode → bit-aggregate Column path (_simhash_column_path) exactly — same
     every-occurrence voting, same no-token-row exclusion — including on
-    empty/null/non-ASCII/double-space texts, and at a non-default width."""
+    empty/null/non-ASCII/double-space texts, and at a non-default width,
+    with its token memo at its default cap and with the cap at 0 (every
+    token re-hashed)."""
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "the quick brown fox jumps over the lazy cat"),
@@ -198,19 +201,22 @@ def test_simhash_kernel_equals_column_path(spark):
         (7, "x"),  # single token
     ]
     df = spark.createDataFrame(rows, "doc_id: long, text: string")
-    for bits in (16, 24):
-        fast = {r.doc_id: r.simhash for r in D.simhash_portable(df, bits=bits).collect()}
-        slow = {r.doc_id: r.simhash for r in _simhash_column_path(df, bits=bits).collect()}
-        assert fast == slow and 0 in fast and 2 not in fast and 3 not in fast
+    for cap in (D._SIMHASH_MEMO_CAP, 0):
+        monkeypatch.setattr(D, "_SIMHASH_MEMO_CAP", cap)
+        for bits in (16, 24):
+            fast = {r.doc_id: r.simhash for r in D.simhash_portable(df, bits=bits).collect()}
+            slow = {r.doc_id: r.simhash for r in _simhash_column_path(df, bits=bits).collect()}
+            assert fast == slow and 0 in fast and 2 not in fast and 3 not in fast
 
 
 def test_minhash_fast_path_equals_exploded_path(spark):
-    """r7 internals change: minhash_signature computes the signature as a
-    shuffle-free per-row array_min when its input carries the `shingles`
-    provenance attribute. The fast path must equal the original
-    explode → groupBy path bit-for-bit (same md5 seed prefixes, same
-    docs-with-no-shingles exclusion), including on empty/null/short
-    texts."""
+    """r7 internals change: minhash_signature computes the signature in a
+    shuffle-free kernel when its input carries the `shingles` provenance
+    attribute. The fast path must equal the original explode → groupBy
+    path bit-for-bit (same md5 seed prefixes, same docs-with-no-shingles
+    exclusion), including on empty/null/short texts — at the session's
+    Arrow batch size and at batches of 2 and 1 rows, where the kernel's
+    tasks see several batches (its cross-batch memo in play)."""
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "the quick brown fox jumps over the lazy cat"),
@@ -226,9 +232,99 @@ def test_minhash_fast_path_equals_exploded_path(spark):
     fast = D.minhash_signature(sh, num_hashes=8)
     # stripping the provenance attribute forces the original groupBy path
     slow = D.minhash_signature(sh.select("doc_id", "shingle"), num_hashes=8)
-    f = {r.doc_id: tuple(r.sig) for r in fast.collect()}
     s = {r.doc_id: tuple(r.sig) for r in slow.collect()}
-    assert f == s and 0 in f and 2 not in f and 3 not in f
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    try:
+        for batch in (default, "2", "1"):
+            spark.conf.set(key, batch)
+            f = {r.doc_id: tuple(r.sig) for r in fast.collect()}
+            assert f == s and 0 in f and 2 not in f and 3 not in f, batch
+    finally:
+        spark.conf.set(key, default)
+
+
+def _minhash_reference(text, w=3, num_hashes=8):
+    """Per-seed minimum of md5(f"{i}:" + shingle)'s 16-hex prefix as
+    strings, over the row's distinct non-empty w-shingles (None when it
+    has none): the signature the kernel must reproduce, written the slow
+    way."""
+    import hashlib
+
+    if text is None:
+        return None
+    toks = text.lower().split(" ")
+    shs = {" ".join(toks[i : i + w]) for i in range(max(len(toks) - w, 0) + 1)} - {""}
+    if not shs:
+        return None
+    return [
+        min(hashlib.md5(f"{i}:{s}".encode()).hexdigest()[:16] for s in shs)
+        for i in range(num_hashes)
+    ]
+
+
+_KERNEL_BATCHES = [
+    ["the quick brown fox jumps", "one two", None, "naïve café   münchen straße"],
+    ["", None],  # nothing to sign: a typed empty batch
+    # repeats shingles of the first batch beside new ones
+    ["the quick brown fox sleeps", "dup dup dup dup", "ONE TWO", "x"],
+]
+
+
+@pytest.mark.parametrize("id_type", [pa.int64(), pa.string()], ids=["long", "string"])
+def test_minhash_kernel_on_arrow_batches(id_type):
+    """_minhash_kernel on hand-built Arrow batches, without Spark: one
+    output batch per input batch, each row's signature equal to the slow
+    reference, NULL/empty/no-shingle rows absent, the id column kept as
+    given (long or string), and an all-NULL/empty batch answered with a
+    typed empty batch."""
+    ids = iter(range(100))
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([next(ids) for _ in texts]).cast(id_type), pa.array(texts, pa.string())],
+            ["doc_id", "text"],
+        )
+        for texts in _KERNEL_BATCHES
+    ]
+    out = list(D._minhash_kernel("doc_id", "text", 3, 8)(iter(batches)))
+    assert len(out) == len(batches)
+    want_schema = pa.schema([("doc_id", id_type), ("sig", pa.list_(pa.string()))])
+    for got, inp in zip(out, batches):
+        assert got.schema == want_schema
+        want = {
+            i: sig
+            for i, t in zip(inp.column("doc_id").to_pylist(), inp.column("text").to_pylist())
+            if (sig := _minhash_reference(t)) is not None
+        }
+        assert dict(zip(got.column("doc_id").to_pylist(), got.column("sig").to_pylist())) == want
+    assert [b.num_rows for b in out] == [3, 0, 4]
+
+
+def test_minhash_kernel_hashlib_fallback_and_zero_memo(monkeypatch):
+    """Without CPython's builtin ``_md5`` the kernel hashes through
+    hashlib, and with its cross-batch memo capped at 0 it re-hashes every
+    shingle of every batch: both give the default run's signatures."""
+    import sys
+
+    def run():
+        batches = [
+            pa.RecordBatch.from_arrays(
+                [pa.array(range(len(texts)), pa.int64()), pa.array(texts, pa.string())],
+                ["doc_id", "text"],
+            )
+            for texts in _KERNEL_BATCHES
+        ]
+        return [b.to_pylist() for b in D._minhash_kernel("doc_id", "text", 3, 8)(iter(batches))]
+
+    default = run()
+    with monkeypatch.context() as m:
+        m.setitem(sys.modules, "_md5", None)
+        with pytest.raises(ImportError):
+            import _md5  # noqa: F401
+        assert run() == default
+    with monkeypatch.context() as m:
+        m.setattr(D, "_MINHASH_MEMO_CAP", 0)
+        assert run() == default
 
 
 def test_lsh_pair_generation_equals_self_join(spark):
