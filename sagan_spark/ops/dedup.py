@@ -169,9 +169,9 @@ def minhash_signature(
     builtin ``_md5`` when importable, else ``hashlib`` (same digests).
     Measured on perfbench dedup_docs (5,000 docs, 27,199 distinct
     shingles, seed 42, local[2] on a 4-CPU host): the traced signature
-    step takes 0.62 s where a per-occurrence string-min kernel took
-    1.13 s, and the chain's wall_s median is 1.29 s against 1.71 s
-    (10 alternated pairs). The kernel reproduces the JVM semantics
+    step's median over five runs is 0.60 s where a per-occurrence
+    string-min kernel's was 0.79 s, and the chain's wall_s median is
+    1.29 s against 1.71 s (10 alternated pairs). The kernel reproduces the JVM semantics
     exactly on ASCII text — Python str.lower()/split(" ")/" ".join match
     Spark lower()/split/concat_ws, and md5 hex == Spark md5 — and the
     equality is pinned by test_minhash_fast_path_equals_exploded_path
